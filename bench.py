@@ -160,9 +160,9 @@ def _ensure_sf5(spark, src_dir: str, dst_dir: str) -> None:
     emb_flag = os.path.join(dst_dir, "_DONE_SF5_EMB")
     if os.path.exists(done_flag):
         _ensure_sf5_embeddings(spark, src_dir, dst_dir, emb_flag)
-        # events gained their own flag in r14 (the kmv stream-scale
-        # tier reads them): a dir whose _DONE_SF5 predates the events
-        # write must still gain the table without a full rebuild
+        # events gained their own flag in r14: a dir whose _DONE_SF5
+        # predates the events write must still gain the table without
+        # a full rebuild
         _ensure_sf5_events(spark, src_dir, dst_dir)
         return
     os.makedirs(dst_dir, exist_ok=True)
@@ -221,8 +221,7 @@ def _ensure_sf5_events(spark, src_dir: str, dst_dir: str) -> None:
     fresh path (the _ensure_sf1_events retrofit pattern): fifty
     disjoint user populations with identical per-user timelines —
     user-keyed operators face 50x independent keys, while the
-    event_type segment axis (what the KMV stream tier keys state on)
-    stays at the base cardinality."""
+    event_type segment axis stays at the base cardinality."""
     done_flag = os.path.join(dst_dir, "_DONE_SF5_EVENTS")
     if os.path.exists(done_flag):
         return
@@ -363,218 +362,6 @@ def _sf5_section(spark, base_sf_dir: str, reset_caches) -> dict:
         "headroom and fixed overhead put it below that on flat "
         "shapes. A value well ABOVE 5 would flag superlinearity the "
         "10x point alone cannot see."
-    )
-    return out
-
-
-def _stream_scale_section(spark, base_sf_dir: str, reset_caches) -> dict:
-    """Ingest-side scale evidence the batch curve can't give (VERDICT
-    r12 item 8): replay ONE FIXED probe shard (the base tier's
-    doc_id % 7 == 0 documents, identical bytes at every tier) through
-    stream_shard_dedup_classify against corpus indexes built at 1x /
-    10x / 50x, and record per-tier throughput plus the state-store
-    rows/bytes from the query's own progress metrics. The claim under
-    test: the stream-static band join's PER-BATCH cost and the keyed
-    state are corpus-growth-FLAT — state rows equal the probe count
-    (per ARRIVING doc, never per corpus doc) at every tier, and wall
-    moves only with the colliding-candidate mass, not the corpus.
-    Indexes are persisted+materialized OUTSIDE the clock (production
-    serves yesterday's index from disk; building it is the batch
-    job's cost, measured in the sf5 section). Gated by
-    SPARK_GRAFT_STREAM_SCALE_BENCH (default: follows
-    SPARK_GRAFT_SF5_BENCH — builder-measured into the committed
-    snapshot; per-round driver runs carry it forward)."""
-    import json as _json
-    import shutil
-    import tempfile
-
-    from catalyst_spark.streaming.minhash import (
-        shard_dedup_static_index,
-        stream_shard_dedup_classify,
-    )
-    from catalyst_spark.tables import load as _load
-
-    sf1_dir = str(REPO / "benchdata" / "sf1")
-    sf5_dir = str(REPO / "benchdata" / "sf5")
-    _ensure_sf1(spark, base_sf_dir, sf1_dir)
-    _ensure_sf5(spark, base_sf_dir, sf5_dir)
-
-    probe = (_load(spark, base_sf_dir, "documents")
-             .where("doc_id % 7 = 0")
-             .select("doc_id", "source", "text").collect())
-    n_probe = len(probe)
-    n_batches = 4
-    probe_dir = tempfile.mkdtemp(prefix="stream_scale_probe_")
-    step = max(1, (n_probe + n_batches - 1) // n_batches)
-    for i in range(n_batches):
-        chunk = probe[i * step:(i + 1) * step]
-        with open(os.path.join(probe_dir, f"b{i}.json"), "w") as f:
-            f.write("\n".join(_json.dumps(
-                {"doc_id": r["doc_id"], "source": r["source"],
-                 "text": r["text"]}) for r in chunk))
-
-    trials = int(os.environ.get("SPARK_GRAFT_STREAM_SCALE_TRIALS", "2"))
-    out: dict = {"probe_docs": n_probe, "micro_batches": n_batches}
-    try:
-        for tag, d in (("sf0.1", base_sf_dir), ("sf1", sf1_dir),
-                       ("sf5", sf5_dir)):
-            reset_caches()
-            fp_index, band_index, hset_index = shard_dedup_static_index(
-                spark, d)
-            fp_index = fp_index.persist()
-            band_index = band_index.persist()
-            hset_index = hset_index.persist()
-            sizes = {"fp_rows": fp_index.count(),
-                     "band_rows": band_index.count(),
-                     "hset_rows": hset_index.count()}
-            walls, state_rows, state_bytes = [], 0, 0
-            # ADVICE r13: stop the query and unpersist the tier's
-            # indexes even when processAllAvailable or progress parsing
-            # throws — a leaked running query would poison every
-            # subsequent tier's wall clock in this process
-            try:
-                for t in range(trials):
-                    stream = (spark.readStream
-                              .schema(
-                                  "doc_id long, source string, text string")
-                              .option("maxFilesPerTrigger", 1)
-                              .json(probe_dir))
-                    qname = f"stream_scale_{tag.replace('.', '_')}_{t}"
-                    t0 = time.perf_counter()
-                    q = (stream_shard_dedup_classify(
-                            stream, fp_index, band_index, hset_index)
-                         .writeStream.outputMode("update").format("memory")
-                         .queryName(qname).start())
-                    try:
-                        q.processAllAvailable()
-                        walls.append(time.perf_counter() - t0)
-                        for prog in q.recentProgress:
-                            for so in prog.get("stateOperators", []):
-                                state_rows = max(state_rows,
-                                                 so.get("numRowsTotal", 0))
-                                state_bytes = max(
-                                    state_bytes,
-                                    so.get("memoryUsedBytes", 0))
-                    finally:
-                        q.stop()
-                    spark.catalog.dropTempView(qname)
-            finally:
-                for df in (fp_index, band_index, hset_index):
-                    df.unpersist()
-            wall = min(walls)
-            out[tag] = dict(
-                sizes,
-                wall_sec=round(wall, 3),
-                docs_per_sec=round(n_probe / wall, 1),
-                state_rows=state_rows,
-                state_bytes=state_bytes,
-            )
-    finally:
-        shutil.rmtree(probe_dir, ignore_errors=True)
-    out["wall_50x_over_1x"] = round(
-        out["sf5"]["wall_sec"] / out["sf0.1"]["wall_sec"], 2)
-    out["note"] = (
-        "Fixed probe stream vs growing static corpus: state_rows/"
-        "state_bytes must be tier-invariant (keyed per arriving doc); "
-        "wall_50x_over_1x near 1 means the band-bucket equi-join's "
-        "per-batch cost is corpus-growth-flat, while a ratio tracking "
-        "the corpus (~50) would flag a shard-x-corpus scan."
-    )
-    return out
-
-
-def _stream_scale_kmv_section(spark, base_sf_dir: str) -> dict:
-    """Second ingest-side scale family (r14, VERDICT r13 item 7): the
-    r13 tier proved the stream-vs-static-index JOIN flat on a twin
-    whose state is boolean-sized; this one scales the axis the OTHER
-    way — 1x/10x/50x INPUT VOLUMES replayed through stream_kmv_sketch,
-    a twin whose keyed STATE is the product. The claim under test:
-    state stays k*segments BIGINTs (k=64, 5 event types -> 320 longs)
-    at EVERY tier — the sketch compresses unbounded arriving rows into
-    bounded state via sorted-union-truncate — so state_bytes must be
-    tier-invariant while wall may track input volume (per-row cost).
-    Input: the event_id % 10 == 0 sample of each tier's events table
-    (the replica offsets are multiples of 10, so every replica
-    contributes uniformly and the samples are exactly 1x/10x/50x).
-    Same gate as _stream_scale_section."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.streaming.stateful import stream_kmv_sketch
-
-    sf1_dir = str(REPO / "benchdata" / "sf1")
-    sf5_dir = str(REPO / "benchdata" / "sf5")
-    _ensure_sf1_events(spark, base_sf_dir, sf1_dir)
-    _ensure_sf5(spark, base_sf_dir, sf5_dir)
-
-    trials = int(os.environ.get("SPARK_GRAFT_STREAM_SCALE_TRIALS", "2"))
-    n_batches = 4
-    out: dict = {"micro_batches": n_batches, "sample_mod": 10}
-    for tag, d in (("sf0.1", base_sf_dir), ("sf1", sf1_dir),
-                   ("sf5", sf5_dir)):
-        probe_dir = tempfile.mkdtemp(prefix=f"kmv_scale_{tag}_")
-        try:
-            src = (spark.read
-                   .parquet(os.path.join(d, "events.parquet"))
-                   .where("event_id % 10 = 0")
-                   .select("event_type", "user_id"))
-            n_rows = src.count()
-            # n_batches json files = n_batches micro-batches; the
-            # writer is outside the clock (ingest transport, not the
-            # operator under test)
-            (src.withColumn(
-                    "b", F.pmod(F.crc32(F.col("user_id").cast("string")),
-                                F.lit(n_batches)))
-                .repartition(n_batches, "b").drop("b")
-                .write.mode("overwrite").json(probe_dir))
-            walls, state_rows, state_bytes = [], 0, 0
-            for t in range(trials):
-                stream = (spark.readStream
-                          .schema("event_type string, user_id long")
-                          .option("maxFilesPerTrigger", 1)
-                          .json(probe_dir))
-                qname = f"kmv_scale_{tag.replace('.', '_')}_{t}"
-                t0 = time.perf_counter()
-                q = (stream_kmv_sketch(stream)
-                     .writeStream.outputMode("update").format("memory")
-                     .queryName(qname).start())
-                try:
-                    q.processAllAvailable()
-                    walls.append(time.perf_counter() - t0)
-                    for prog in q.recentProgress:
-                        for so in prog.get("stateOperators", []):
-                            state_rows = max(state_rows,
-                                             so.get("numRowsTotal", 0))
-                            state_bytes = max(
-                                state_bytes,
-                                so.get("memoryUsedBytes", 0))
-                finally:
-                    q.stop()
-                spark.catalog.dropTempView(qname)
-            wall = min(walls)
-            out[tag] = {
-                "input_rows": n_rows,
-                "wall_sec": round(wall, 3),
-                "rows_per_sec": round(n_rows / wall, 1),
-                "state_rows": state_rows,
-                "state_bytes": state_bytes,
-            }
-        finally:
-            shutil.rmtree(probe_dir, ignore_errors=True)
-    out["wall_50x_over_1x"] = round(
-        out["sf5"]["wall_sec"] / out["sf0.1"]["wall_sec"], 2)
-    out["state_bytes_50x_over_1x"] = round(
-        out["sf5"]["state_bytes"]
-        / max(1, out["sf0.1"]["state_bytes"]), 2)
-    out["note"] = (
-        "Growing input vs bounded sketch state: input_rows scale "
-        "1x/10x/50x, state_rows must stay = segment count and "
-        "state_bytes_50x_over_1x near 1 (k-min arrays truncate to k "
-        "regardless of volume); wall may track input (per-row cost), "
-        "never state — a state_bytes ratio tracking input would flag "
-        "an unbounded accumulator masquerading as a sketch."
     )
     return out
 
@@ -1607,22 +1394,6 @@ def main() -> None:
         sf5 = _sf5_section(spark, sf_dir, _reset_session_caches)
         _reset_session_caches()
 
-    # --- ingest-side 50x tier (r13, VERDICT r12 item 8): fixed probe
-    # stream vs 1x/10x/50x corpus indexes. Default follows the sf5
-    # gate (builder-measured; driver rounds carry it forward). ---
-    stream_scale = None
-    stream_scale_kmv = None
-    if os.environ.get(
-        "SPARK_GRAFT_STREAM_SCALE_BENCH",
-        os.environ.get("SPARK_GRAFT_SF5_BENCH", "0"),
-    ) != "0":
-        stream_scale = _stream_scale_section(
-            spark, sf_dir, _reset_session_caches)
-        _reset_session_caches()
-        # second family (r14): growing input vs bounded sketch state
-        stream_scale_kmv = _stream_scale_kmv_section(spark, sf_dir)
-        _reset_session_caches()
-
     # median-of-n per query: one timing per pass, each pass fully cold, so
     # sub-second ambient noise can't masquerade as a regression while
     # build-owner attribution stays identical in every pass
@@ -1973,10 +1744,6 @@ def main() -> None:
         payload["rek64"] = rek64
     if sf5 is not None:
         payload["sf5"] = sf5
-    if stream_scale is not None:
-        payload["stream_scale"] = stream_scale
-    if stream_scale_kmv is not None:
-        payload["stream_scale_kmv"] = stream_scale_kmv
 
     # machine-checked regression tracking: ratio vs the previous run's
     # committed summary (only at the same sf — cross-sf ratios are noise)
@@ -1997,24 +1764,6 @@ def main() -> None:
             "sf5_provenance",
             "carried forward from the prior committed snapshot "
             "(gated tier not re-run; SPARK_GRAFT_SF5_BENCH=1 "
-            "re-measures)",
-        )
-    if stream_scale is None and prev and prev.get("stream_scale"):
-        # same carry-forward for the ingest-side 50x tier (r13)
-        payload["stream_scale"] = prev["stream_scale"]
-        payload["stream_scale_provenance"] = prev.get(
-            "stream_scale_provenance",
-            "carried forward from the prior committed snapshot "
-            "(gated tier not re-run; SPARK_GRAFT_STREAM_SCALE_BENCH=1 "
-            "re-measures)",
-        )
-    if stream_scale_kmv is None and prev and prev.get("stream_scale_kmv"):
-        # and for the r14 bounded-state family
-        payload["stream_scale_kmv"] = prev["stream_scale_kmv"]
-        payload["stream_scale_kmv_provenance"] = prev.get(
-            "stream_scale_kmv_provenance",
-            "carried forward from the prior committed snapshot "
-            "(gated tier not re-run; SPARK_GRAFT_STREAM_SCALE_BENCH=1 "
             "re-measures)",
         )
     # r14: the 10x sweep and the rek64 tier get the same carry-forward
@@ -2120,15 +1869,10 @@ def main() -> None:
                 ),
             }
 
-    # the driver keeps only a bounded stdout TAIL, which can truncate
-    # this (long) line — the durable copy lives in bench_summary.json
+    # the full payload is the LAST stdout line: consumers parse only
+    # the final line; the durable copy lives in bench_summary.json
     summary_path.write_text(json.dumps(payload, indent=1) + "\n")
     print(json.dumps(payload), flush=True)
-    # compact trailer (no per-query map) small enough to always fit in a
-    # truncated tail window
-    print(json.dumps({k: v for k, v in payload.items()
-                      if k not in ("queries", "vs_prev", "spread")}),
-          flush=True)
 
 
 if __name__ == "__main__":

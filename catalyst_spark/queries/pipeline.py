@@ -154,8 +154,7 @@ def _minhash_coeffs() -> tuple[list[int], list[int]]:
 def _shingled(documents: DataFrame, keep: tuple = ()) -> DataFrame:
     """doc_id + distinct 3-token shingle array (docs shorter than 3
     tokens contribute the whole text as their only shingle). `keep`
-    carries extra columns through (streaming callers that must stay
-    single-projection to avoid a stream-stream self-join).
+    carries extra columns through.
 
     Built with zip_with over three token-array slices rather than
     index-lambda transform: indexed access (tokens[i]) re-evaluates the
@@ -237,8 +236,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _band_buckets_array() -> Column:
     """LSH band buckets from signature columns m0..m31: an array of 8
     per-band hashes (band index salted in, so bands never collide with
-    each other). Shared by the batch self-join and the streaming
-    stream-vs-index join — identical bucketing by construction."""
+    each other)."""
     return F.array(
         *[
             F.expr(_h60(
@@ -286,42 +284,6 @@ def lsh_bucket_size_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n") > _LSH_BUCKET_CAP).alias("over_cap"),
         )
     )
-
-
-def minhash_signatures_rowwise(docs: DataFrame) -> DataFrame:
-    """Stateless per-ROW MinHash signatures: m_s = min over the doc's
-    shingle hashes of the universal hash, computed with array
-    expressions only — no explode, no aggregation, so it runs
-    unmodified on a STREAMING DataFrame (append mode, no watermark
-    needed). Values are identical to the batch explode+groupBy
-    formulation (_minhash_sig_cand) by construction: same _h60 shingle
-    hash, same (a, b) coefficients.
-
-    The batch path keeps the explode+groupBy shape because the Generate
-    barrier stops CollapseProject from inlining the shingle build into
-    all 32 permutation lambdas (see dedup_minhash_pairs docstring); in
-    the per-batch streaming setting batches are small and statelessness
-    is what matters.
-    """
-    a_lst, b_lst = _minhash_coeffs()
-    hs = f"transform(shingles, sh -> {_h60('sh')})"
-    return _shingled(docs).select(
-        "doc_id",
-        *[
-            F.expr(
-                f"array_min(transform({hs}, h -> "
-                f"({a_lst[s]} * (h % {_MINHASH_P}) + {b_lst[s]}) % {_MINHASH_P}))"
-            ).alias(f"m{s}")
-            for s in range(_MINHASH_PERMS)
-        ],
-    )
-
-
-def minhash_index_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted signature index's (doc_id, bucket) table — the
-    static side of the incremental stream-vs-index near-dup join."""
-    sig, _cand = _minhash_sig_cand(spark, sf_dir)
-    return sig.select("doc_id", F.explode(_band_buckets_array()).alias("bucket"))
 
 
 def _minhash_sig_cand(spark: SparkSession, sf_dir: str):
@@ -924,9 +886,8 @@ def _winnowed(documents: DataFrame, keep: tuple = ()) -> DataFrame:
     """doc_id + winnowing fingerprint set: positional 3-token k-gram
     hashes (NOT deduplicated — winnowing is positional), minima over
     every window of _WINNOW_W consecutive hashes, distinct. One
-    projection of array folds, so streaming callers stay
-    single-projection (the _shingled convention); `keep` passes extra
-    columns through."""
+    projection of array folds (the _shingled convention); `keep`
+    passes extra columns through."""
     grams = (
         f"""CASE WHEN {N_TOKENS} >= {_WINNOW_K} THEN
               transform(
@@ -1489,8 +1450,7 @@ def _synthetic_phash(docs: DataFrame) -> DataFrame:
     md5-derived 60-bit base hash with doc_id % 8 deterministic bit
     flips XORed on — within-group Hamming spans 0..14 (straddling the
     <= 7 cut from both sides), across groups ~30 bits. Factored out of
-    phash_dup_pairs (r10) so the streaming classifier's corpus index
-    and the replay tests derive the identical table."""
+    phash_dup_pairs (r10) so the tests derive the identical table."""
     base = _h60("concat('ph:', cast(doc_id div 8 as string))")
     pos = _h60("concat('fl:', cast(doc_id as string), ':', cast(j as string))")
     return docs.select(
@@ -1538,8 +1498,7 @@ def _synthetic_audio_fp(docs: DataFrame) -> DataFrame:
     _synthetic_phash recipe with its own constants — groups of 6
     ('au:' base strings), doc_id % 6 single-bit flips ('af:' strings)
     — so the audio rung's dup structure is not a copy of the image
-    rung's. Shared by the batch pair join, the streaming classifier's
-    corpus index, and the replay tests."""
+    rung's. Shared by the batch pair join and the tests."""
     base = _h60("concat('au:', cast(doc_id div 6 as string))")
     pos = _h60("concat('af:', cast(doc_id as string), ':', cast(j as string))")
     return docs.select(
@@ -1586,8 +1545,7 @@ def _synthetic_frame_sets(docs: DataFrame) -> DataFrame:
     13-hash pool md5('vf:<g>:<k>'), member m = doc_id % 4 takes the
     4-frame window starting at offset (1, 2, 7, 10)[m] — the straddle
     structure the op docstring derives. String-identical md5 inputs on
-    both engines. Shared by the batch pair join, the streaming
-    classifier's corpus index, and the replay tests."""
+    both engines. Shared by the batch pair join and the tests."""
     off = "element_at(array(1, 2, 7, 10), cast(doc_id % 4 as int) + 1)"
     return docs.select(
         F.col("doc_id").alias("media_id"),
@@ -5360,10 +5318,9 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _perplexity_doc_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc CCNet tercile assignment — the shared core of
-    perplexity_buckets (the batch audit) and the ingest keep-line
-    cutoff builder (streaming.scrub.perplexity_cutoff_index): every
-    document's exact-integer surprisal score joined with its source,
+    """Per-doc CCNet tercile assignment — the core of
+    perplexity_buckets (the batch audit): every document's
+    exact-integer surprisal score joined with its source,
     ranked per source by (mbits_per_token, doc_id), bucket =
     ((rn − 1) · 3) div n_src — pure integer rank arithmetic, no
     percentile-interpolation convention. Returns (doc_id, source,
@@ -5672,9 +5629,7 @@ def incremental_shard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the INTEGER-EXACT test 2|I| >= |U|), and survivors.
 
     Reuses the persisted signature table (`_minhash_sig_cand`), i.e.
-    the signature index a real incremental pipeline keeps on disk;
-    the batch twin of the stream-vs-index join that
-    `minhash_index_bands` + stream_minhash_candidates serve online.
+    the signature index a real incremental pipeline keeps on disk.
     All outputs are integer counts — full value-level oracle.
     """
     docs = load(spark, sf_dir, "documents")
@@ -5849,8 +5804,7 @@ def incremental_shard_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-state): the arriving shard (doc_id % _SHARD_MOD == 0) is
     merged into the corpus under cluster-keep-lowest semantics, and
     the operator emits the resulting corpus (doc_id, source,
-    from_shard) — the batch analog of what stream_shard_dedup_classify
-    feeds online.
+    from_shard).
 
     THE MERGEABILITY IDENTITY (the design constraint, mirroring
     incremental_rollup_merge): the post-state equals from-scratch
@@ -7320,9 +7274,7 @@ def _cdc_chunks(docs: DataFrame) -> DataFrame:
     n_tok, h) — one row per chunk, h = _h60 of the reassembled chunk
     text. A token OPENS a new chunk when h60(token) mod _CDC_MOD == 0;
     tokens before the first boundary form chunk 0. Factored out of
-    cdc_chunk_dedup (r10) so the streaming classifier's corpus-side
-    chunk-hash index is built with the batch operator's own chunking —
-    the two can never disagree on boundaries."""
+    cdc_chunk_dedup (r10)."""
     toks = docs.select(
         "doc_id", "source",
         F.posexplode(F.expr(TOKENS)).alias("pos", "w"),
@@ -7868,48 +7820,6 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_keep_cutoffs(spark: SparkSession, sf_dir: str) -> list:
-    """Per-cell keep boundary for the ingest twin: the quota-th kept
-    row's (raw d2, vec_id) under the batch sampler's (d2 DESC, vec_id)
-    order. Broadcast-sized (k rows); a vector is batch-kept iff it
-    sorts at-or-before this boundary in its cell."""
-    emb = load(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    assign = _coarse_assign(spark, sf_dir, v)
-    C, cids = _cached_kmeans(spark, sf_dir, v, "full")
-    cent = spark.createDataFrame(
-        [(int(c), [float(x) for x in row]) for c, row in zip(cids, C)],
-        "c_id long, ce array<double>",
-    )
-    quota = (
-        assign.groupBy("c_id")
-        .agg(F.count(F.lit(1)).alias("n_vecs"))
-        .withColumn("quota", F.expr(
-            "cast(floor(sqrt(cast(n_vecs as double))) as bigint)"))
-        .select("c_id", "quota")
-    )
-    d2 = (
-        "aggregate(e, cast(0 as double), (s, x) -> s + x * x)"
-        " - 2 * aggregate(zip_with(e, ce, (x, y) -> x * y),"
-        " cast(0 as double), (s, x) -> s + x)"
-        " + aggregate(ce, cast(0 as double), (s, x) -> s + x * x)"
-    )
-    w = W.partitionBy("c_id").orderBy(F.col("d2_raw").desc(), "vec_id")
-    return (
-        v.join(assign, "vec_id")
-        .join(F.broadcast(cent), "c_id")
-        .withColumn("d2_raw", F.expr(d2))
-        .withColumn("rk", F.row_number().over(w))
-        .join(F.broadcast(quota), "c_id")
-        .where(F.col("rk") == F.col("quota"))
-        .select("c_id", F.col("d2_raw").alias("cut_d2"),
-                F.col("vec_id").alias("cut_vid"))
-        .collect()
-    )
-
-
 def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-style dimension-truncation recall sweep (r11b, cf.
     Kusupati et al. 2022): recall@5 of brute-force cosine search over
@@ -8082,11 +7992,11 @@ def source_token_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
     Next to the exact scalar, `tvd_hash_permille` computes the SAME
     statistic over the _DSIR_BUCKETS hashed-bucket distributions (the
     DSIR trick: pmod(h60(token), 4096)) — the bounded-memory form an
-    online monitor can maintain with 4096 integers of state per source
-    (see streaming.scrub.stream_source_drift). Merging bins can only
-    cancel opposite-signed deviations, so tvd_hash <= tvd exactly
-    (data-processing inequality for TV distance) — the hashed column
-    is a certified LOWER bound on the true drift.
+    online monitor can maintain with 4096 integers of state per source.
+    Merging bins can only cancel opposite-signed deviations, so
+    tvd_hash <= tvd exactly (data-processing inequality for TV
+    distance) — the hashed column is a certified LOWER bound on the
+    true drift.
 
     Plan: one explode -> (source, token) counts with map-side combine;
     the corpus count table AND both bucketed tables derive from the

@@ -1068,9 +1068,7 @@ def distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmv_karr(hashes: DataFrame) -> DataFrame:
     """(event_type, h) distinct hashes -> per-type sorted k-min array
-    (event_type, ks). The sketch every KMV consumer shares; the online
-    twin (streaming.stateful.stream_kmv_sketch) maintains the same
-    array as keyed state via sorted-union-truncate merges."""
+    (event_type, ks). The sketch every KMV consumer shares."""
     w = W.partitionBy("event_type").orderBy("h")
     return (
         hashes.withColumn("rn", F.row_number().over(w))
@@ -1082,9 +1080,8 @@ def _kmv_karr(hashes: DataFrame) -> DataFrame:
 
 def _kmv_pair_sketch(karr: DataFrame) -> DataFrame:
     """Per-pair sketch columns (type_a, type_b, full, hk, rho) from the
-    k-min arrays ALONE — a pure function of the sketches, shared by
-    kmv_set_ops and the online twin's equality test, so a streamed
-    state slots straight into the same algebra."""
+    k-min arrays ALONE — a pure function of the sketches, so any
+    source of k-min arrays slots straight into the same algebra."""
     a = karr.select(F.col("event_type").alias("type_a"),
                     F.col("ks").alias("ka"))
     b = karr.select(F.col("event_type").alias("type_b"),
@@ -1195,10 +1192,8 @@ _HQ_QS = (0.5, 0.9, 0.99)
 
 
 def _hq_lo_le_expr():
-    """The bucket-assignment CASE shared by the batch operator and the
-    ingest-time counter twin (streaming.aggregate.
-    stream_histogram_buckets) — one (lo, le) struct per observation,
-    +Inf bucket last."""
+    """The bucket-assignment CASE of histogram_quantile — one (lo, le)
+    struct per observation, +Inf bucket last."""
     return F.expr(
         "CASE "
         + " ".join(
@@ -1214,9 +1209,7 @@ def _hq_lo_le_expr():
 def _hq_read(buckets: DataFrame) -> DataFrame:
     """The quantile READ over a scraped bucket-counter table
     (event_type, lo, le, n) — promql bucketQuantile over cumulative
-    le-buckets, shared verbatim by the batch operator and the
-    streaming twin's test so the online counters serve the identical
-    estimator. Exact-integer interpolation (r11 rounding audit)."""
+    le-buckets. Exact-integer interpolation (r11 rounding audit)."""
     wcum = W.partitionBy("event_type").orderBy("le")
     wtot = W.partitionBy("event_type")
     cum = (
@@ -1267,11 +1260,10 @@ def histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     finite bound (public promql bucketQuantile semantics).
 
     The bucket table is what a scraped histogram would store (one row
-    per (series, le)); the quantile read (_hq_read, shared with the
-    streaming counter twin) touches only that tiny aggregate — the
-    whole point of histogram storage at 100 TB: the raw observations
-    are never re-sorted. Interpolation arithmetic is written
-    identically in the oracle, so values match bit-for-bit.
+    per (series, le)); the quantile read (_hq_read) touches only that
+    tiny aggregate — the whole point of histogram storage at 100 TB:
+    the raw observations are never re-sorted. Interpolation arithmetic
+    is written identically in the oracle, so values match bit-for-bit.
     """
     events = load(spark, sf_dir, "events")
     buckets = (
@@ -1568,9 +1560,7 @@ def holt_chunked(
     the longest series grows, while short-series workloads keep the
     small bounded rows. Correctness is chunk-size-invariant (the carry
     is exact), so sizing is purely a scheduling choice; per-task array
-    width grows with series length past ~32 x _HOLT_TARGET_JOBS points
-    — at that scale prefer the streaming twin (stateful.py holt), whose
-    state is two integers regardless of length.
+    width grows with series length past ~32 x _HOLT_TARGET_JOBS points.
     """
     from functools import reduce
 

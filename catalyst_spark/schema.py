@@ -100,5 +100,9 @@ def failfast(df: DataFrame) -> DataFrame:
 
 def permissive(df: DataFrame) -> DataFrame:
     """Reference semantics for Graphite-TCP: bad lines are counted and
-    skipped (ref catalyser/graphite.go:276-283)."""
+    skipped (ref catalyser/graphite.go:276-283). The one place error
+    rows are dropped; a frame without a parse_error column is returned
+    unchanged."""
+    if PARSE_ERROR_COL not in df.columns:
+        return df
     return df.where(F.col(PARSE_ERROR_COL).isNull()).drop(PARSE_ERROR_COL)

@@ -11,8 +11,9 @@ Reference behavior reproduced (ref core/warp.go:116-277, cmd/root.go:46-52):
   (ref core/warp.go:180,202-217,260)
 - response bodies classified through the C4 taxonomy; token-typed
   errors auto-ban (C3)
-- connection pooling ≙ one executor-local HTTP session per worker
-  (the reference pools 2000 idle conns driver-side)
+- no connection pooling: every POST (one per flush_lines chunk) opens
+  a new urllib connection (the reference pools 2000 idle conns
+  driver-side)
 
 The transport is injectable so tests (and dry runs) observe exact
 payloads without a network. The default transport uses urllib (no
@@ -122,8 +123,7 @@ class WarpHTTPSink:
     def foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
         """writeStream.foreachBatch hook. Collect per-partition line
         iterators driver-side is wrong at scale; instead each partition
-        posts its own chunks (executor-local session ≙ reference's
-        pooled transport)."""
+        posts its own chunks, each on a new connection."""
         sink = self
 
         def send_partition(rows) -> None:

@@ -22,17 +22,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import PARSE_ERROR_COL
+from catalyst_spark.schema import permissive
 
 
 def write_store(gts_df: DataFrame, path: str, mode: str = "append") -> None:
     """Batch write of parsed GTS rows into the canonical layout."""
-    clean = (
-        gts_df.where(F.col(PARSE_ERROR_COL).isNull()).drop(PARSE_ERROR_COL)
-        if PARSE_ERROR_COL in gts_df.columns
-        else gts_df
-    )
-    enriched = clean.withColumn("dt", F.to_date(F.timestamp_micros(F.col("ts"))))
+    enriched = permissive(gts_df).withColumn("dt", F.to_date(F.timestamp_micros(F.col("ts"))))
     # cluster by series within each date partition
     (
         enriched.repartition("dt", "name")

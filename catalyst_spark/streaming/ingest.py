@@ -9,9 +9,10 @@ share them verbatim (SURVEY §2.2); this module only wires:
      -> encode_sensision -> foreachBatch WarpHTTPSink   (egress, K1)
      -> partitioned parquet store                        (query surface)
 
-Exactly-once: the foreachBatch + checkpoint combination replays a
-failed epoch, which supersedes the reference's retry-once replay
-buffer (SURVEY §4: "stronger").
+Delivery: the store writer is exactly-once (Spark's file sink commits
+each epoch through its metadata log, keyed by the checkpoint). The Warp
+forwarder is at-least-once: foreachBatch + checkpoint replays a failed
+epoch whole, so partitions that had already posted post again.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from catalyst_spark.parsers import (
     strip_token_prefix,
     warp_passthrough,
 )
-from catalyst_spark.schema import PARSE_ERROR_COL
+from catalyst_spark.schema import permissive
 from catalyst_spark.sinks.warp_sink import (
     PerTokenWarpSink,
     WarpHTTPSink,
@@ -122,12 +123,11 @@ def start_warp_forwarder(
     gts_stream: DataFrame,
     sink: WarpHTTPSink | PerTokenWarpSink | None,
     checkpoint_dir: str,
-    dry_run: bool = False,
     access_log=None,
     protocol: str = "",
 ):
-    """GTS stream -> Sensision -> Warp POSTs (or console when dry_run,
-    K3). Bad rows are skipped permissively, mirroring the TCP path —
+    """GTS stream -> Sensision -> Warp POSTs (or console when sink is
+    None, K3). Bad rows are skipped permissively, mirroring the TCP path —
     per-request failfast belongs to the HTTP shim, not the stream.
 
     A PerTokenWarpSink (S3 TCP egress) receives (token, sensision) rows
@@ -149,9 +149,7 @@ def start_warp_forwarder(
         obs = None
         if access_log is not None:
             batch_df, obs = observed(batch_df, f"access_{epoch_id}")
-        clean = batch_df
-        if PARSE_ERROR_COL in batch_df.columns:
-            clean = batch_df.where(F.col(PARSE_ERROR_COL).isNull()).drop(PARSE_ERROR_COL)
+        clean = permissive(batch_df)
         if per_token:
             encoded = encode_sensision(clean, keep_cols=("token",))
         else:
@@ -160,7 +158,7 @@ def start_warp_forwarder(
         t0 = _time.perf_counter()
         status = 200
         try:
-            if dry_run or sink is None:
+            if sink is None:
                 console_dry_run(encoded.drop("token") if per_token else encoded, epoch_id)
             else:
                 sink.foreach_batch(encoded, epoch_id)
@@ -201,11 +199,8 @@ def start_store_writer(
     partition, files cluster by name via a repartition on (dt, name) so
     per-series scans touch few files at 100 TB.
     """
-    enriched = (
-        gts_stream.where(F.col(PARSE_ERROR_COL).isNull()).drop(PARSE_ERROR_COL)
-        if PARSE_ERROR_COL in gts_stream.columns
-        else gts_stream
-    ).withColumn("dt", F.to_date(F.timestamp_micros(F.col("ts"))))
+    enriched = permissive(gts_stream).withColumn(
+        "dt", F.to_date(F.timestamp_micros(F.col("ts"))))
     return (
         enriched.writeStream.outputMode("append")
         .format("parquet")

@@ -1,12 +1,10 @@
-"""Custom stateful streaming operator: per-series delta/rate with
-cross-batch state (applyInPandasWithState).
+"""Custom stateful streaming operator: Graphite TCP per-connection
+framing with cross-batch state (applyInPandasWithState).
 
-The reference keeps no per-series state at all (each datapoint is
-forwarded independently); the classic TSDB ingest enrichment it can't
-do — counter-delta against the previous point, across request
-boundaries — needs keyed state that survives micro-batches. GroupState
-holds (last_ts, last_value) per series; each batch emits the deltas and
-updates the state.
+The reference keeps no per-series state (each datapoint is forwarded
+independently), but its TCP listener frames a connection by the token
+on the connection's FIRST line. In the stream model that connection
+state must survive micro-batches; GroupState holds it per conn_id.
 """
 
 from __future__ import annotations
@@ -18,59 +16,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
-
-OUTPUT_SCHEMA = T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("ts", T.LongType()),
-    T.StructField("value_d", T.DoubleType()),
-    T.StructField("delta", T.DoubleType()),
-])
-
-STATE_SCHEMA = T.StructType([
-    T.StructField("last_ts", T.LongType()),
-    T.StructField("last_value", T.DoubleType()),
-])
-
-
-def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    (name,) = key
-    last_ts, last_value = state.get if state.exists else (None, None)
-    # vectorized: concat the batch, sort once, Series.diff for deltas;
-    # the carried state seeds the first diff via a sentinel row
-    parts = [p[["ts", "value_d"]] for p in pdfs]
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        columns=["ts", "value_d"])
-    pdf = pdf.dropna(subset=["value_d"]).sort_values("ts", ignore_index=True)
-    if len(pdf):
-        vals = pdf["value_d"].astype(float)
-        delta = vals.diff()
-        if last_value is not None:
-            delta.iloc[0] = vals.iloc[0] - last_value
-        out = pd.DataFrame({
-            "name": name,
-            "ts": pdf["ts"].astype("int64"),
-            "value_d": vals,
-            "delta": delta,
-        })
-        state.update((int(pdf["ts"].iloc[-1]), float(vals.iloc[-1])))
-    else:
-        out = pd.DataFrame(columns=["name", "ts", "value_d", "delta"])
-    yield out
-
-
-def stream_series_delta(gts_stream: DataFrame) -> DataFrame:
-    """GTS stream -> per-(name) point deltas with state across batches."""
-    return (
-        gts_stream.select("name", "ts", "value_d")
-        .groupBy("name")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 # --- Graphite TCP per-connection framing (P7 parity, streaming twin of
@@ -134,467 +79,4 @@ def stream_frame_connections(lines: DataFrame) -> DataFrame:
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-    )
-
-
-# --- Online CUSUM changepoint alarms (streaming twin of
-# queries.tsdb.cusum_changepoints). State per series: the running CUSUM
-# statistic in integer cents — one BIGINT per series, the cheapest
-# state any detector can carry. The recursion is identical integer math
-# to the batch fold, so a time-ordered replay reproduces the batch
-# sweep exactly (tested).
-
-CUSUM_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("cusum_cents", T.LongType()),
-    T.StructField("alarm", T.LongType()),
-])
-
-CUSUM_STATE_SCHEMA = T.StructType([
-    T.StructField("s", T.LongType()),
-])
-
-
-def _cusum_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    from catalyst_spark.queries.tsdb import (
-        _CUSUM_ALARM_CENTS,
-        _CUSUM_DRIFT_CENTS,
-    )
-
-    (user_id,) = key
-    (s,) = state.get if state.exists else (0,)
-    parts = [p[["event_id", "ts_us", "cents"]] for p in pdfs]
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        columns=["event_id", "ts_us", "cents"])
-    pdf = pdf.sort_values(["ts_us", "event_id"], ignore_index=True)
-    out_eid, out_s = [], []
-    for eid, v in zip(pdf["event_id"].astype("int64"), pdf["cents"].astype("int64")):
-        s = max(0, s + int(v) - _CUSUM_DRIFT_CENTS)
-        out_eid.append(int(eid))
-        out_s.append(s)
-    state.update((int(s),))
-    out = pd.DataFrame({
-        "event_id": pd.Series(out_eid, dtype="int64"),
-        "user_id": user_id,
-        "cusum_cents": pd.Series(out_s, dtype="int64"),
-        "alarm": pd.Series(
-            [1 if x >= _CUSUM_ALARM_CENTS else 0 for x in out_s], dtype="int64"),
-    })
-    yield out[out["cusum_cents"] > 0]
-
-
-def stream_cusum_alarms(event_stream: DataFrame) -> DataFrame:
-    """(event_id, ts_us, user_id, cents) stream -> online CUSUM rows
-    (positive statistic only, alarm flag at threshold) with one BIGINT
-    of state per series."""
-    return (
-        event_stream.select("event_id", "ts_us", "user_id", "cents")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _cusum_update,
-            outputStructType=CUSUM_OUTPUT_SCHEMA,
-            stateStructType=CUSUM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- Online Holt double-exponential smoothing (streaming twin of
-# queries.tsdb.holt_linear_smooth). State per series: the fixed-point
-# (level, trend) pair — two BIGINTs, nothing else. The recursion is the
-# same integer arithmetic-shift math as the batch fold (cents << 8,
-# halvings as arithmetic right shifts), so a time-ordered replay
-# reproduces the batch sweep bit-exactly: the level/trend doubles are
-# the same integer numerators over the same 25600.0 divisor (tested).
-
-HOLT_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("event_id", T.LongType()),
-    T.StructField("user_id", T.LongType()),
-    T.StructField("level", T.DoubleType()),
-    T.StructField("trend", T.DoubleType()),
-])
-
-HOLT_STATE_SCHEMA = T.StructType([
-    T.StructField("lvl", T.LongType()),
-    T.StructField("tr", T.LongType()),
-])
-
-
-def _holt_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        lvl, tr = (int(x) for x in state.get)
-        have = True
-    else:
-        lvl = tr = 0
-        have = False
-    parts = [p[["event_id", "ts_us", "cents"]] for p in pdfs]
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        columns=["event_id", "ts_us", "cents"])
-    pdf = pdf.sort_values(["ts_us", "event_id"], ignore_index=True)
-    out_eid, out_lvl, out_tr = [], [], []
-    for eid, cents in zip(pdf["event_id"].astype("int64"),
-                          pdf["cents"].astype("int64")):
-        v = int(cents) << 8
-        if not have:
-            lvl, tr, have = v, 0, True
-        else:
-            nlvl = (v + lvl + tr) >> 1   # arithmetic shift == batch fold
-            tr = (nlvl - lvl + tr) >> 1
-            lvl = nlvl
-        out_eid.append(int(eid))
-        out_lvl.append(lvl)
-        out_tr.append(tr)
-    state.update((int(lvl), int(tr)))
-    yield pd.DataFrame({
-        "event_id": pd.Series(out_eid, dtype="int64"),
-        "user_id": user_id,
-        "level": pd.Series([x / 25600.0 for x in out_lvl], dtype="float64"),
-        "trend": pd.Series([x / 25600.0 for x in out_tr], dtype="float64"),
-    })
-
-
-def stream_holt_smooth(event_stream: DataFrame) -> DataFrame:
-    """(event_id, ts_us, user_id, cents) stream -> online Holt
-    (level, trend) rows with two BIGINTs of state per series."""
-    return (
-        event_stream.select("event_id", "ts_us", "user_id", "cents")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _holt_update,
-            outputStructType=HOLT_OUTPUT_SCHEMA,
-            stateStructType=HOLT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- interval-union coverage (streaming twin of tsdb.interval_coverage):
-# per-user state is ONE open island plus three counters — five BIGINTs
-# regardless of how many events the user ever produces. Same 30 s
-# half-open cover and same merge rule (touching intervals merge) as the
-# batch gaps-and-islands operator; requires per-user time-ordered
-# arrival, the contract every fold twin here shares (cusum/holt).
-
-COVER_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-    T.StructField("n_islands", T.LongType()),
-    T.StructField("covered_us", T.LongType()),
-])
-
-COVER_STATE_SCHEMA = T.StructType([
-    T.StructField("cur_s", T.LongType()),
-    T.StructField("cur_e", T.LongType()),
-    T.StructField("closed_us", T.LongType()),
-    T.StructField("n_islands", T.LongType()),
-    T.StructField("n_events", T.LongType()),
-])
-
-_COVER_US = 30_000_000
-
-
-def _coverage_update(
-    key, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    cur_s, cur_e, closed, n_isl, n_ev = (
-        state.get if state.exists else (None, None, 0, 0, 0)
-    )
-    parts = [p[["ts_us", "event_id"]] for p in pdfs]
-    pdf = pd.concat(parts, ignore_index=True)
-    pdf = pdf.sort_values(["ts_us", "event_id"], ignore_index=True)
-    for s in pdf["ts_us"].astype("int64"):
-        s, e = int(s), int(s) + _COVER_US
-        n_ev += 1
-        if cur_s is None:
-            cur_s, cur_e, n_isl = s, e, n_isl + 1
-        elif s > cur_e:                   # gap: close the open island
-            closed += cur_e - cur_s
-            cur_s, cur_e, n_isl = s, e, n_isl + 1
-        elif e > cur_e:                   # extend the open island
-            cur_e = e
-    state.update((cur_s, cur_e, int(closed), int(n_isl), int(n_ev)))
-    covered = int(closed) + ((cur_e - cur_s) if cur_s is not None else 0)
-    yield pd.DataFrame({
-        "user_id": pd.Series([int(user_id)], dtype="int64"),
-        "n_events": pd.Series([int(n_ev)], dtype="int64"),
-        "n_islands": pd.Series([int(n_isl)], dtype="int64"),
-        "covered_us": pd.Series([covered], dtype="int64"),
-    })
-
-
-def stream_interval_coverage(event_stream: DataFrame) -> DataFrame:
-    """(event_id, ts_us, user_id) stream -> running per-user interval
-    coverage (events, islands, covered µs) with five BIGINTs of state
-    per series; the latest emission (highest n_events) equals the batch
-    gaps-and-islands result exactly."""
-    return (
-        event_stream.select("event_id", "ts_us", "user_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _coverage_update,
-            outputStructType=COVER_OUTPUT_SCHEMA,
-            stateStructType=COVER_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- per-domain document caps (streaming twin of
-# pipeline.domain_cap_sample): keyed state per source is the K best
-# (content-hash, doc_id) pairs seen so far — bounded at K entries no
-# matter how many documents the source ever produces. The same
-# deterministic md5-rank as the batch operator, so the final kept set
-# converges to the batch sample exactly; re-delivered docs dedup on
-# doc_id inside the merge (idempotent).
-
-DOMCAP_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("source", T.StringType()),
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("rk", T.LongType()),
-    T.StructField("n_seen", T.LongType()),  # monotone: latest = final
-])
-
-DOMCAP_STATE_SCHEMA = T.StructType([
-    T.StructField("hs", T.ArrayType(T.LongType())),
-    T.StructField("ids", T.ArrayType(T.LongType())),
-    T.StructField("n_seen", T.LongType()),
-])
-
-_DOMCAP_K = 10
-
-
-def _domcap_update(
-    key, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (source,) = key
-    hs, ids, n_seen = (state.get if state.exists else ([], [], 0))
-    cand = pd.concat(list(pdfs), ignore_index=True)
-    merged = pd.DataFrame({
-        "h": list(hs) + cand["h"].tolist(),
-        "doc_id": list(ids) + cand["doc_id"].tolist(),
-    })
-    merged = (
-        merged.sort_values(["h", "doc_id"], ignore_index=True)
-        .drop_duplicates("doc_id", ignore_index=True)
-        .head(_DOMCAP_K)
-    )
-    n_seen = int(n_seen) + len(cand)
-    state.update((merged["h"].tolist(), merged["doc_id"].tolist(), n_seen))
-    yield pd.DataFrame({
-        "source": source,
-        "doc_id": merged["doc_id"].astype("int64"),
-        "rk": pd.Series(range(1, len(merged) + 1), dtype="int64"),
-        "n_seen": n_seen,
-    })
-
-
-def stream_domain_cap(doc_stream: DataFrame) -> DataFrame:
-    """(doc_id, source, text) stream -> running per-source capped sample
-    (doc_id, rk) by deterministic content-hash rank; K pairs of keyed
-    state per source. Latest emission (highest n_seen) per source equals
-    batch domain_cap_sample exactly."""
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import _h60
-
-    hashed = doc_stream.select(
-        "source", "doc_id", F.expr(_h60("text")).alias("h")
-    )
-    return (
-        hashed.groupBy("source")
-        .applyInPandasWithState(
-            _domcap_update,
-            outputStructType=DOMCAP_OUTPUT_SCHEMA,
-            stateStructType=DOMCAP_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-# --- Online reset-aware counter rate (streaming twin of
-# queries.tsdb.counter_rate — the Prometheus rate() semantic AT
-# INGEST). State per series: seven integers (last cents, cumulative
-# cent increase, reset count, point count, span min/max µs, and the
-# max (ts_us, event_id) seen for re-delivery skipping) — bounded
-# however long the series runs. Each update emits the series' CURRENT
-# rate row, so the consumer's per-series latest equals the batch sweep
-# (which is exactly how a monitoring backend serves rate()).
-
-COUNTER_RATE_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("user_id", T.LongType()),
-    T.StructField("total_inc", T.DoubleType()),
-    T.StructField("n_resets", T.LongType()),
-    T.StructField("per_sec", T.DoubleType()),
-    T.StructField("n_points", T.LongType()),
-])
-
-COUNTER_RATE_STATE_SCHEMA = T.StructType([
-    T.StructField("prev_c", T.LongType()),
-    T.StructField("sum_inc", T.LongType()),
-    T.StructField("n_resets", T.LongType()),
-    T.StructField("n_points", T.LongType()),
-    T.StructField("min_us", T.LongType()),
-    T.StructField("max_us", T.LongType()),
-    T.StructField("seen_us", T.LongType()),
-    T.StructField("seen_eid", T.LongType()),
-])
-
-
-def _counter_rate_update(
-    key, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    if state.exists:
-        (prev_c, sum_inc, n_resets, n_points,
-         min_us, max_us, seen_us, seen_eid) = (int(x) for x in state.get)
-        have = True
-    else:
-        prev_c = sum_inc = n_resets = n_points = 0
-        min_us = max_us = 0
-        seen_us, seen_eid = -1, -1
-        have = False
-    parts = [p[["event_id", "ts_us", "cents"]] for p in pdfs]
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-        columns=["event_id", "ts_us", "cents"])
-    pdf = pdf.sort_values(["ts_us", "event_id"], ignore_index=True)
-    for eid, us, c in zip(pdf["event_id"].astype("int64"),
-                          pdf["ts_us"].astype("int64"),
-                          pdf["cents"].astype("int64")):
-        eid, us, c = int(eid), int(us), int(c)
-        if (us, eid) <= (seen_us, seen_eid):
-            continue  # re-delivery: the first pass already counted it
-        seen_us, seen_eid = us, eid
-        if not have:
-            prev_c, min_us, max_us, n_points, have = c, us, us, 1, True
-            continue
-        if c >= prev_c:
-            sum_inc += c - prev_c
-        else:
-            n_resets += 1
-            sum_inc += c
-        prev_c = c
-        n_points += 1
-        min_us, max_us = min(min_us, us), max(max_us, us)
-    state.update((prev_c, sum_inc, n_resets, n_points,
-                  min_us, max_us, seen_us, seen_eid))
-    if n_points < 2 or max_us <= min_us:
-        # the batch sweep emits nothing for single-point series
-        yield pd.DataFrame({
-            "user_id": [], "total_inc": [], "n_resets": [],
-            "per_sec": [], "n_points": [],
-        }).astype({"user_id": "int64", "n_resets": "int64",
-                   "n_points": "int64"})
-        return
-    # the batch operator's own exact-integer emission: each checked
-    # double is ONE divide of exact integers (r11 rounding audit),
-    # rounded HALF_UP on the shortest decimal repr — Spark's
-    # round(double, n) semantics, NOT python's banker's round()
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _spark_round(x: float, nd: int) -> float:
-        return float(Decimal(repr(float(x))).quantize(
-            Decimal(1).scaleb(-nd), rounding=ROUND_HALF_UP))
-
-    yield pd.DataFrame({
-        "user_id": [int(user_id)],
-        "total_inc": [_spark_round(sum_inc / 100.0, 2)],
-        "n_resets": [int(n_resets)],
-        "per_sec": [_spark_round(
-            (sum_inc * 10000) / (max_us - min_us), 4)],
-        "n_points": [int(n_points)],
-    })
-
-
-def stream_counter_rate(event_stream: DataFrame) -> DataFrame:
-    """(event_id, ts_us, user_id, cents) stream -> the series' CURRENT
-    reset-aware rate row after every update — the Prometheus rate()
-    read served at ingest, the streaming twin of
-    queries.tsdb.counter_rate. Delivery is assumed time-ordered per
-    series (the scrape reality); a re-delivered prefix is skipped via
-    the max-(ts, id) watermark in state, so the counters stay
-    exactly-once (replay test incl. re-delivery). The per-series
-    latest emission equals the batch sweep row exactly: the increase
-    accumulates in integer cents and each emitted double is one divide
-    of exact integers — the identical arithmetic as the batch
-    operator."""
-    return (
-        event_stream.select("event_id", "ts_us", "user_id", "cents")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _counter_rate_update,
-            outputStructType=COUNTER_RATE_OUTPUT_SCHEMA,
-            stateStructType=COUNTER_RATE_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def _kmv_sketch_update(key, pdfs, state):
-    """Per-event-type k-minimum-values state: the sorted k smallest
-    distinct user hashes seen so far, merged with each batch by
-    sorted-union-truncate — the KMV mergeability identity (any member
-    of the true k-min set is either already in state or arrives in
-    some batch), so the converged state equals the batch-computed
-    sketch EXACTLY and re-delivery is a set-semantics no-op."""
-    from catalyst_spark.queries.tsdb import _KMV_K
-
-    (etype,) = key
-    ks = [int(x) for x in state.get[0]] if state.exists else []
-    cand = pd.concat(list(pdfs), ignore_index=True)
-    merged = sorted(set(ks) | {int(x) for x in cand["h"]})[:_KMV_K]
-    state.update((list(merged),))
-    yield pd.DataFrame({
-        "event_type": [str(etype)],
-        "ks": [list(merged)],
-        "n_min": [len(merged)],
-    })
-
-
-KMV_SKETCH_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("event_type", T.StringType()),
-    T.StructField("ks", T.ArrayType(T.LongType())),
-    T.StructField("n_min", T.IntegerType()),
-])
-
-KMV_SKETCH_STATE_SCHEMA = T.StructType([
-    T.StructField("ks", T.ArrayType(T.LongType())),
-])
-
-
-def stream_kmv_sketch(event_stream: DataFrame) -> DataFrame:
-    """Online KMV sketch maintenance (r13 — the streaming face of
-    queries.tsdb.kmv_set_ops): every arriving (event_type, user_id)
-    row hashes in-row and folds into the type's k-min array — k
-    BIGINTs of keyed state per segment however large the stream, the
-    exact artifact the batch sketch algebra consumes. After replay the
-    per-type state is BIT-EQUAL to the batch k-array (tested incl. a
-    fully re-delivered batch — union-truncate is idempotent), so
-    feeding the emitted arrays through the shared _kmv_pair_sketch
-    reproduces kmv_set_ops' pairwise union/intersection/Jaccard
-    estimate columns exactly. The 100 TB deployment shape: each
-    ingest partition keeps its own k-array and the periodic rollup
-    merges them — the same sorted-union-truncate this state update
-    runs per batch."""
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import _h60
-
-    d = event_stream.select(
-        "event_type",
-        F.expr(_h60("cast(user_id as string)")).alias("h"),
-    )
-    return d.groupBy("event_type").applyInPandasWithState(
-        _kmv_sketch_update,
-        outputStructType=KMV_SKETCH_OUTPUT_SCHEMA,
-        stateStructType=KMV_SKETCH_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -461,111 +461,6 @@ def test_phash_shift_and_scale_near_invariance(seed, shift, scale):
         assert bin(got ^ base).count("1") <= 2
 
 
-# --- streaming state-function properties (pure pandas, no Spark) ---
-#
-# The twins' replay tests prove end-to-end equality on the fixture
-# corpus; these pin the STATE ALGEBRA itself on adversarial inputs:
-# delivery-order invariance and re-delivery idempotence of the bounded
-# top-k merges, and the fusion emission's equality with a brute-force
-# reference.
-
-
-class _FakeState:
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self.exists = True
-        self._v = v
-
-
-def _feed(update_fn, key, deliveries):
-    import pandas as pd
-
-    st_ = _FakeState()
-    out = None
-    for rows in deliveries:
-        out = list(update_fn(key, iter([pd.DataFrame(rows)]), st_))[0]
-    return out
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.data())
-def test_rerank_state_order_invariant_and_idempotent(data):
-    """_rerank_update: the final emission depends only on the SET of
-    candidate rows — any delivery split/order, duplicated deliveries
-    included, yields the brute-force rerank of the global shortlist."""
-    import pandas as pd
-
-    from catalyst_spark.queries.pipeline import _RERANK_R
-    from catalyst_spark.streaming.ann import _rerank_update
-
-    n = data.draw(st.integers(1, 60))
-    ids = list(range(n))
-    d2s = data.draw(st.lists(
-        st.floats(0, 100, allow_nan=False), min_size=n, max_size=n))
-    coss = data.draw(st.lists(
-        st.floats(-1, 1, allow_nan=False), min_size=n, max_size=n))
-    rows = [{"d2": d2s[i], "n_id": ids[i], "cos": coss[i]}
-            for i in range(n)]
-    perm = data.draw(st.permutations(rows))
-    cut = data.draw(st.integers(0, n))
-    deliveries = [perm[:cut] or rows[:1], perm[cut:] or rows[:1],
-                  perm[:cut] or rows[:1]]  # redelivery of batch 1
-    out = _feed(_rerank_update, (7,), deliveries)
-
-    short = sorted(rows, key=lambda r: (r["d2"], r["n_id"]))[:_RERANK_R]
-    want = sorted(short, key=lambda r: (-r["cos"], r["n_id"]))[:5]
-    got = list(zip(out["neighbor_id"], out["rank"]))
-    assert got == [(r["n_id"], i + 1) for i, r in enumerate(want)]
-
-
-@settings(max_examples=60, deadline=None)
-@given(data=st.data())
-def test_fusion_state_matches_bruteforce_reference(data):
-    """_fusion_update: any delivery split of the two arms' candidate
-    rows (with one delivery repeated) emits exactly the brute-force
-    rank-sum fusion of the global per-arm top-R lists."""
-    import pandas as pd
-
-    from catalyst_spark.queries.pipeline import _FUSION_MISS, _FUSION_R
-    from catalyst_spark.streaming.ann import _fusion_update
-
-    nl = data.draw(st.integers(0, 50))
-    nv = data.draw(st.integers(0, 50))
-    if nl + nv == 0:
-        nv = 1
-    lex = [{"arm": "L", "id": i,
-            "score": data.draw(st.floats(0, 1, allow_nan=False))}
-           for i in data.draw(st.permutations(list(range(60))))[:nl]]
-    vec = [{"arm": "V", "id": i,
-            "score": data.draw(st.floats(-1, 1, allow_nan=False))}
-           for i in data.draw(st.permutations(list(range(60))))[:nv]]
-    rows = lex + vec
-    perm = data.draw(st.permutations(rows))
-    cut = data.draw(st.integers(0, len(rows)))
-    deliveries = [perm[:cut] or rows[:1], perm[cut:] or rows[:1],
-                  perm[cut:] or rows[:1]]  # redelivery of batch 2
-    out = _feed(_fusion_update, (3,), deliveries)
-
-    def topr(arm_rows):
-        s = sorted(arm_rows, key=lambda r: (-r["score"], r["id"]))
-        return [r["id"] for r in s[:_FUSION_R]]
-
-    lr = {i: k + 1 for k, i in enumerate(topr(lex))}
-    vr = {i: k + 1 for k, i in enumerate(topr(vec))}
-    fused = {i: lr.get(i, _FUSION_MISS) + vr.get(i, _FUSION_MISS)
-             for i in set(lr) | set(vr)}
-    want = sorted(fused.items(), key=lambda t: (t[1], t[0]))[:5]
-    got = list(zip(out["result_id"], out["fused_rank_sum"]))
-    assert got == want
-
-
 @given(
     vals=st.lists(st.integers(min_value=-10**6, max_value=10**6),
                   min_size=1, max_size=200),

@@ -102,81 +102,6 @@ def test_winnow_pairs_verify_threshold(spark):
         assert abs(r["jaccard"] - round(inter / union, 4)) < 1e-12
 
 
-def test_stream_winnow_classify_matches_batch(spark, tmp_path):
-    """r13 winnowing twin: replaying the shard (doc_id % 7 == 0; one
-    batch fully RE-DELIVERED) against the corpus-side winnow indexes
-    must classify every arriving doc exactly as the equivalent BATCH
-    stream-static join does (same _winnowed projection, same df-capped
-    postings, same 2|I| >= |U| verify), and re-delivery must change
-    nothing but n_seen."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import _winnowed
-    from catalyst_spark.streaming.minhash import (
-        stream_winnow_classify,
-        winnow_static_index,
-    )
-    from catalyst_spark.tables import load
-
-    fp_index, fps_index = winnow_static_index(spark, SF_DIR)
-    fp_index = fp_index.persist()
-    fps_index = fps_index.persist()
-
-    shard_docs = (load(spark, SF_DIR, "documents")
-                  .where("doc_id % 7 = 0")
-                  .select("doc_id", "text"))
-    # batch ground truth through the same machinery
-    want = {
-        r["doc_id"]: set(r["matched"]) for r in
-        _winnowed(shard_docs)
-        .select("doc_id", "fps", F.explode("fps").alias("fp"))
-        .join(fp_index, "fp")
-        .join(fps_index, "old_id")
-        .where(F.size(F.array_intersect("fps", "cfps")) * 2
-               >= F.size(F.array_union("fps", "cfps")))
-        .groupBy("doc_id")
-        .agg(F.collect_set("old_id").alias("matched"))
-        .collect()
-    }
-    shard = shard_docs.collect()
-    assert shard and want, "planted dup structure must reach the shard"
-
-    d = tmp_path / "winnow_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_winnow_classify(stream, fp_index, fps_index)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("winnow_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from winnow_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["doc_id"] not in latest
-                or r["n_seen"] > latest[r["doc_id"]]["n_seen"]):
-            latest[r["doc_id"]] = r
-    assert set(latest) == {r["doc_id"] for r in shard}
-    redelivered = {r["doc_id"] for r in batches[2]}
-    for doc_id, r in latest.items():
-        matched = want.get(doc_id, set())
-        assert r["status"] == ("dup" if matched else "kept"), doc_id
-        assert r["n_matches"] == len(matched), doc_id
-        assert r["n_seen"] == (2 if doc_id in redelivered else 1), doc_id
-    fp_index.unpersist()
-    fps_index.unpersist()
-
-
 def test_kmv_set_ops_oracle_parity(spark):
     """kmv_set_ops must be bit-exact against its DuckDB oracle through
     the real runner/oracle path, with all C(5,2)=10 event-type pairs
@@ -275,128 +200,3 @@ def test_winnow_guarantee_property_duckdb():
         assert inter >= 1, (d1, d2)
 
     check()
-
-
-def test_stream_kmv_sketch_matches_batch(spark, tmp_path):
-    """r13 KMV twin: replaying the events (one batch fully
-    RE-DELIVERED) through the per-type k-min state must converge to
-    the batch k-arrays BIT-EXACTLY (sorted-union-truncate is
-    idempotent set algebra), and feeding the streamed arrays through
-    the shared _kmv_pair_sketch must reproduce kmv_set_ops' sketch
-    columns (est_union on full pairs, rho, jaccard_est_permille,
-    est_inter) value-for-value."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.tsdb import (
-        _KMV_K,
-        _KMV_SPACE,
-        _h60,
-        _kmv_karr,
-        _kmv_pair_sketch,
-        kmv_set_ops,
-    )
-    from catalyst_spark.streaming.stateful import stream_kmv_sketch
-    from catalyst_spark.tables import load
-
-    events = load(spark, SF_DIR, "events")
-    hashes = events.select(
-        "event_type", F.expr(_h60("cast(user_id as string)")).alias("h")
-    ).distinct()
-    want_ks = {r["event_type"]: list(r["ks"])
-               for r in _kmv_karr(hashes).collect()}
-
-    rows = events.select("event_type", "user_id").collect()
-    d = tmp_path / "kmv_stream"
-    d.mkdir()
-    half = len(rows) // 2
-    batches = [rows[:half], rows[half:], rows[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"event_type": r["event_type"],
-                        "user_id": r["user_id"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("event_type string, user_id long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_kmv_sketch(stream)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("kmv_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    out = spark.sql("select * from kmv_stream").collect()
-    latest = {}
-    for r in out:  # memory sink appends update emissions in order
-        latest[r["event_type"]] = list(r["ks"])
-    assert latest == want_ks  # bit-equal sketch state per segment
-
-    # the streamed arrays drive the SAME pairwise algebra
-    streamed_karr = spark.createDataFrame(
-        [(t, ks) for t, ks in latest.items()],
-        "event_type string, ks array<bigint>")
-    got_sk = {(r["type_a"], r["type_b"]): r
-              for r in _kmv_pair_sketch(streamed_karr).collect()}
-    for r in kmv_set_ops(spark, SF_DIR).collect():
-        s = got_sk[(r["type_a"], r["type_b"])]
-        assert s["rho"] == r["rho"]
-        assert s["rho"] * 1000 // _KMV_K == r["jaccard_est_permille"]
-        if s["full"]:
-            import math
-            est_union = math.floor(
-                (_KMV_K - 1) * _KMV_SPACE / s["hk"])
-            assert est_union == r["est_union"]
-            assert est_union * s["rho"] // _KMV_K == r["est_inter"]
-
-
-def test_winnow_cap_scope_divergence(spark):
-    """CAP SCOPE pin (r14, ADVICE r13): the streaming index's
-    stop-fingerprint cap counts df over the CORPUS ONLY (a static
-    property of the index — arriving docs cannot change it), while
-    batch dedup_winnow_pairs counts df over corpus + shard. A
-    fingerprint whose corpus-df sits exactly AT the cap but whose
-    corpus+shard df crosses it must therefore stay LIVE in the
-    streaming index (this test's construction), and the divergence is
-    one-directional: every batch-live fingerprint is stream-live
-    because corpus-df <= corpus+shard-df."""
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import (
-        _SHARD_MOD,
-        _WINNOW_DF_CAP,
-        _winnowed,
-    )
-    from catalyst_spark.streaming.minhash import winnow_static_index
-
-    text = " ".join(f"tok{i}" for i in range(8))
-    corpus_ids, i = [], 1
-    while len(corpus_ids) < _WINNOW_DF_CAP:
-        if i % _SHARD_MOD != 0:
-            corpus_ids.append(i)
-        i += 1
-    docs = spark.createDataFrame(
-        [(d, text) for d in corpus_ids] + [(_SHARD_MOD, text)],
-        "doc_id long, text string",
-    )
-    all_fps = set(_winnowed(docs).limit(1).collect()[0]["fps"])
-    assert all_fps
-
-    fp_index, _ = winnow_static_index(spark, SF_DIR, docs=docs)
-    live_stream = {r["fp"] for r in fp_index.select("fp").distinct().collect()}
-    # corpus-df == cap exactly -> every fingerprint stays live, and the
-    # shard occurrence (total df = cap + 1, past the batch rule's cap)
-    # is not counted by the static index
-    assert live_stream == all_fps
-    n_postings = fp_index.count()
-    assert n_postings == _WINNOW_DF_CAP * len(all_fps)
-
-    # the batch scope (df over corpus + shard) crosses the cap here, so
-    # batch would drop every one of these fingerprints — compute both
-    # scopes from the same postings to pin the direction of divergence
-    ex = _winnowed(docs).select("doc_id", F.explode("fps").alias("fp"))
-    df_all = {r["fp"]: r["df"] for r in
-              ex.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).collect()}
-    live_batch = {fp for fp, df in df_all.items() if df <= _WINNOW_DF_CAP}
-    assert live_batch == set()          # strict divergence in this build
-    assert live_batch <= live_stream    # and it is one-directional

@@ -1,110 +1,6 @@
-"""Scale utilities: streaming watermark rollup, salting, bucketed joins."""
+"""Scale trades: approximate percentiles against the exact ones."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from catalyst_spark.bucketing import read_table, write_bucketed
-from catalyst_spark.skew import replicate_for_salt, salt_join_key, salted_agg
-from catalyst_spark.streaming import ingest_stream, stream_lines
-from catalyst_spark.streaming.aggregate import stream_downsample
-from catalyst_spark.tables import load
-from tests.conftest import SF_DIR
-
-
-def test_stream_downsample_with_watermark(spark, tmp_path):
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "batch.txt").write_text(
-        "cpu.a 1.5 1546420308\n"
-        "cpu.a 2.5 1546420320\n"       # same 5-min window
-        "cpu.a 9.5 1546421000\n"       # next window
-    )
-    gts = ingest_stream(stream_lines(spark, str(d)), "graphite",
-                        parse_hierarchy=False, now_us=1_700_000_000_000_000)
-    agg = stream_downsample(gts)
-    q = (agg.writeStream.outputMode("update").format("memory")
-         .queryName("rollup").start())
-    q.processAllAvailable()
-    q.stop()
-    rows = {(r["window_start"].isoformat(), r["name"]): r
-            for r in spark.sql("select * from rollup").collect()}
-    assert rows[("2019-01-02T09:10:00", "cpu.a")]["n"] == 2
-    assert rows[("2019-01-02T09:10:00", "cpu.a")]["sum_d"] == 4.0
-    assert rows[("2019-01-02T09:20:00", "cpu.a")]["n"] == 1
-
-
-def test_salted_agg_matches_plain(spark):
-    events = load(spark, SF_DIR, "events")
-    plain = {
-        r["event_type"]: (r["s"], r["c"], r["mx"])
-        for r in events.groupBy("event_type")
-        .agg(F.sum("value").alias("s"), F.count(F.lit(1)).alias("c"),
-             F.max("value").alias("mx"))
-        .collect()
-    }
-    salted = {
-        r["event_type"]: (r["sum_value"], r["count_value"], r["max_value"])
-        for r in salted_agg(
-            events, ["event_type"],
-            {"value": "sum"} | {},
-            salt_factor=8,
-        ).join(
-            salted_agg(events, ["event_type"], {"value": "count"}, 8),
-            "event_type",
-        ).join(
-            salted_agg(events, ["event_type"], {"value": "max"}, 8),
-            "event_type",
-        ).collect()
-    }
-    for k, (s, c, mx) in plain.items():
-        s2, c2, mx2 = salted[k]
-        assert abs(s - s2) < 1e-6 and c == c2 and mx == mx2
-
-
-def test_salted_join_matches_plain(spark):
-    events = load(spark, SF_DIR, "events").select("event_id", "user_id")
-    users = (
-        load(spark, SF_DIR, "events").select("user_id").distinct()
-        .withColumn("tag", F.col("user_id") * 10)
-    )
-    plain = events.join(users, "user_id").count()
-    salted = (
-        salt_join_key(events, "user_id", 4)
-        .join(replicate_for_salt(users, 4), ["user_id", "_salt"])
-        .count()
-    )
-    assert plain == salted
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    import shutil
-
-    # the in-memory catalog forgets tables between sessions but their
-    # warehouse directories persist — clear both
-    for t in ("orders_b", "customer_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    orders = load(spark, SF_DIR, "orders")
-    customer = load(spark, SF_DIR, "customer")
-    write_bucketed(orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-                   "orders_b", "o_custkey", buckets=4)
-    write_bucketed(customer.select("c_custkey", "c_name"),
-                   "customer_b", "c_custkey", buckets=4)
-    joined = read_table(spark, "orders_b").join(
-        read_table(spark, "customer_b"),
-        F.col("o_custkey") == F.col("c_custkey"),
-    )
-    # disable broadcast so the co-located sort-merge path is exercised
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketing removed the shuffle
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def test_percentile_approx_matches_exact_within_tolerance(spark):
@@ -122,66 +18,3 @@ def test_percentile_approx_matches_exact_within_tolerance(spark):
         F.expr("percentile_approx(value, 0.95, 10000)").alias("approx"),
     ).first()
     assert abs(row["approx"] - row["exact"]) <= 0.01 * abs(row["exact"])
-
-
-def test_salted_collect_set_equivalence(spark):
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.skew import salted_collect_set
-
-    df = spark.createDataFrame(
-        [("hot", i % 7) for i in range(500)] + [("cold", 99)],
-        "k string, v int",
-    )
-    got = {r["k"]: r["v_set"] for r in
-           salted_collect_set(df, ["k"], "v", salt_factor=8).collect()}
-    want = {r["k"]: sorted(r["s"]) for r in
-            df.groupBy("k").agg(F.collect_set("v").alias("s")).collect()}
-    assert got == want
-
-
-def test_stream_batch_downsample_equivalence(spark, tmp_path):
-    """Lambda-architecture consistency: replaying a corpus through the
-    watermarked streaming rollup must equal the batch groupBy over the
-    same parsed rows — else backfill (batch) and live (stream) paths
-    silently diverge."""
-    import random
-
-    from catalyst_spark.parsers import parse_graphite
-
-    rng = random.Random(11)
-    t0 = 1546420000
-    lines = "".join(
-        f"s{rng.randint(0, 4)} {rng.randint(1, 99) / 2} {t0 + rng.randint(0, 3600)}\n"
-        for _ in range(300)
-    )
-    d = tmp_path / "in_eq"
-    d.mkdir()
-    (d / "b.txt").write_text(lines)
-    now_us = 1_700_000_000_000_000
-
-    gts = ingest_stream(stream_lines(spark, str(d)), "graphite",
-                        parse_hierarchy=False, now_us=now_us)
-    q = (stream_downsample(gts).writeStream.outputMode("update")
-         .format("memory").queryName("eq_stream").start())
-    q.processAllAvailable()
-    q.stop()
-    streamed = {
-        (r["window_start"], r["name"]): (r["n"], r["sum_d"], r["max_l"])
-        for r in spark.sql("select * from eq_stream").collect()
-    }
-
-    batch_gts = parse_graphite(
-        spark.createDataFrame([(ln,) for ln in lines.splitlines()], "line string"),
-        parse_hierarchy=False, now_us=now_us,
-    )
-    batched = {
-        (r["w"]["start"], r["name"]): (r["n"], r["sum_d"], r["max_l"])
-        for r in batch_gts.withColumn(
-            "event_time", F.timestamp_micros(F.col("ts"))
-        ).groupBy(F.window("event_time", "5 minutes").alias("w"), F.col("name"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value_d").alias("sum_d"),
-             F.max("value_l").alias("max_l"))
-        .collect()
-    }
-    assert streamed == batched

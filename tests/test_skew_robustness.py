@@ -396,27 +396,3 @@ def test_dsir_hot_bucket_stays_model_sized(spark, skew_dirs):
     )
     assert n_buckets <= _DSIR_BUCKETS
     assert t_hot < 10 * t_base + 5  # same order, generous CI headroom
-
-
-def test_boiler_hash_index_is_dup_structure_sized(spark, skew_dirs):
-    """boiler_hash_index under the boilerplate corpus: the broadcast
-    set must grow by the new cross-doc-duplicated chunk hashes ONLY
-    (dup-structure-sized, never corpus-sized) — the honesty bound for
-    the stream_boilerplate_cut broadcast claim."""
-    from catalyst_spark.streaming.scrub import boiler_hash_index
-
-    boiler_dir, _, _ = skew_dirs
-    base = set(boiler_hash_index(spark, SRC))
-    skew = set(boiler_hash_index(spark, boiler_dir))
-    docs = spark.read.parquet(f"{boiler_dir}/documents.parquet")
-    n_chunks_total = docs.selectExpr(
-        "cast(ceil(size(split(text, ' ')) / 8.0) as long) AS c"
-    ).agg(F.sum("c")).first()[0]
-    # far below total chunk volume: the set is the duplicated tail
-    assert len(skew) < n_chunks_total / 10
-    # docs whose token count is a multiple of 8 gain the boiler line as
-    # a clean chunk shared across all of them — the skewed set must
-    # contain NEW duplicated hashes (tail-chunk hashes of touched docs
-    # may legitimately leave the set, so growth is on membership, not
-    # cardinality)
-    assert len(skew - base) >= 1

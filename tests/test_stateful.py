@@ -1,38 +1,7 @@
-"""Stateful streaming: per-series deltas must survive across
-micro-batches (state carried in GroupState, not recomputed)."""
+"""Stateful streaming: per-connection framing state must survive
+across micro-batches (state carried in GroupState, not recomputed)."""
 
 from __future__ import annotations
-
-import time
-
-from catalyst_spark.streaming import ingest_stream, stream_lines
-from catalyst_spark.streaming.stateful import stream_series_delta
-
-NOW_US = 1_700_000_000_000_000
-
-
-def test_delta_state_across_batches(spark, tmp_path):
-    d = tmp_path / "in"
-    d.mkdir()
-    (d / "b1.txt").write_text("ctr 10.5 1546420308\nctr 12.5 1546420309\n")
-
-    gts = ingest_stream(stream_lines(spark, str(d)), "graphite",
-                        parse_hierarchy=False, now_us=NOW_US)
-    deltas = stream_series_delta(gts)
-    q = (deltas.writeStream.outputMode("append").format("memory")
-         .queryName("deltas").start())
-    q.processAllAvailable()
-
-    # second micro-batch: the first point's delta must use batch-1 state
-    (d / "b2.txt").write_text("ctr 20.0 1546420310\n")
-    q.processAllAvailable()
-    q.stop()
-
-    rows = sorted(
-        spark.sql("select * from deltas").collect(), key=lambda r: r["ts"]
-    )
-    assert [r["delta"] for r in rows] == [None, 2.0, 7.5]
-    assert [r["value_d"] for r in rows] == [10.5, 12.5, 20.0]
 
 
 def test_connection_framing_state_across_batches(spark, tmp_path):

@@ -33,6 +33,18 @@ def test_layout_and_fetch(spark, tmp_path):
     assert len(rows) == 3
 
 
+def test_write_store_drops_error_rows(spark, tmp_path):
+    lines = ["cpu.load 0.5 1546420308", "badline", "mem.free 2048 1546420308"]
+    df = spark.createDataFrame([(l,) for l in lines], "line string")
+    parsed = parse_graphite(df, now_us=NOW_US)
+    assert parsed.where("parse_error IS NOT NULL").count() == 1
+    path = str(tmp_path / "store")
+    write_store(parsed, path, mode="overwrite")
+    store = read_store(spark, path)
+    assert "parse_error" not in store.columns
+    assert sorted(r["name"] for r in store.collect()) == ["cpu.load", "mem.free"]
+
+
 def test_time_range_prunes_partitions(spark, tmp_path):
     path = _ingest(spark, tmp_path)
     store = read_store(spark, path)

@@ -7,7 +7,6 @@ runs a real local socket server feeding the socket source.
 
 from __future__ import annotations
 
-import os
 import socket
 import threading
 import time
@@ -84,7 +83,7 @@ def test_stream_to_warp_forwarder(spark, graphite_dir, tmp_path):
 
 def test_dry_run_console(spark, graphite_dir, tmp_path, capsys):
     gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
-    q = start_warp_forwarder(gts, None, str(tmp_path / "ckpt3"), dry_run=True)
+    q = start_warp_forwarder(gts, None, str(tmp_path / "ckpt3"))
     q.processAllAvailable()
     q.stop()
     out = capsys.readouterr().out
@@ -108,7 +107,7 @@ def test_access_log_audit_rows(spark, graphite_dir, tmp_path):
     log = AccessLog(spark, str(tmp_path / "audit"), source_id="10.0.0.1")
     gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
     q = start_warp_forwarder(
-        gts, None, str(tmp_path / "ckpt_audit"), dry_run=True,
+        gts, None, str(tmp_path / "ckpt_audit"),
         access_log=log, protocol="graphite",
     )
     q.processAllAvailable()
@@ -220,87 +219,8 @@ def test_graphite_tcp_socket_end_to_end(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# streaming dedup + native session windows
+# checkpoint recovery: the store writer resumes without re-ingesting
 # ---------------------------------------------------------------------------
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    from catalyst_spark.streaming.aggregate import stream_dedup
-
-    d = tmp_path / "in_dedup"
-    d.mkdir()
-    # same (name, labels, ts) delivered twice in one batch + once again
-    # in a later batch inside the watermark -> exactly one survivor
-    (d / "b1.txt").write_text(
-        "ctr;dc=gra 10.5 1546420308\n"
-        "ctr;dc=gra 10.5 1546420308\n"
-        "other 1 1546420308\n"
-    )
-    gts = ingest_stream(stream_lines(spark, str(d)), "graphite",
-                        parse_hierarchy=False, now_us=NOW_US)
-    q = (stream_dedup(gts).writeStream.outputMode("append").format("memory")
-         .queryName("dedup_stream").start())
-    q.processAllAvailable()
-    (d / "b2.txt").write_text("ctr;dc=gra 10.5 1546420308\n")
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("select name from dedup_stream").collect()
-    assert sorted(r["name"] for r in rows) == ["ctr", "other"]
-
-
-def test_stream_sessionize_gap_windows(spark, tmp_path):
-    from catalyst_spark.streaming.aggregate import stream_sessionize
-
-    d = tmp_path / "in_sess"
-    d.mkdir()
-    t0 = 1546420000
-    # two bursts > 30 min apart -> two session windows for the series
-    (d / "b1.txt").write_text(
-        f"m 1.0 {t0}\n"
-        f"m 2.0 {t0 + 60}\n"
-        f"m 3.0 {t0 + 60 * 90}\n"       # 90 min later: new session
-        f"m 4.0 {t0 + 60 * 90 + 30}\n"
-    )
-    gts = ingest_stream(stream_lines(spark, str(d)), "graphite",
-                        parse_hierarchy=False, now_us=NOW_US)
-    q = (stream_sessionize(gts).writeStream.outputMode("complete")
-         .format("memory").queryName("sessions_stream").start())
-    q.processAllAvailable()
-    q.stop()
-    rows = sorted(spark.sql("select * from sessions_stream").collect(),
-                  key=lambda r: r["session_start"])
-    assert len(rows) == 2
-    assert rows[0]["n_events"] == 2 and rows[0]["sum_d"] == 3.0
-    assert rows[1]["n_events"] == 2 and rows[1]["sum_d"] == 7.0
-    assert rows[0]["session_end"] <= rows[1]["session_start"]
-
-
-def test_stream_interval_join(spark, tmp_path):
-    from catalyst_spark.streaming.aggregate import stream_interval_join
-
-    dl = tmp_path / "in_join_l"
-    dr = tmp_path / "in_join_r"
-    dl.mkdir(); dr.mkdir()
-    t0 = 1546420000
-    # left: deploy markers; right: errors. Errors within 5 min after a
-    # deploy of the same service name join; the 10-min-later one doesn't.
-    (dl / "b1.txt").write_text(f"svc.a 1.0 {t0}\nsvc.b 1.0 {t0}\n")
-    (dr / "b1.txt").write_text(
-        f"svc.a 7.0 {t0 + 60}\n"        # joins (60 s after deploy)
-        f"svc.a 8.0 {t0 + 600}\n"       # outside the 5-min bound
-        f"svc.b 9.0 {t0 + 120}\n"       # joins
-        f"svc.c 5.0 {t0 + 60}\n"        # no matching deploy
-    )
-    mk = lambda d: ingest_stream(stream_lines(spark, str(d)), "graphite",
-                                 parse_hierarchy=False, now_us=NOW_US)
-    q = (stream_interval_join(mk(dl), mk(dr))
-         .writeStream.outputMode("append").format("memory")
-         .queryName("ivjoin_stream").start())
-    q.processAllAvailable()
-    q.stop()
-    rows = sorted(spark.sql("select name, r_value from ivjoin_stream").collect())
-    assert [(r["name"], r["r_value"]) for r in rows] == [
-        ("svc.a", 7.0), ("svc.b", 9.0)]
-
 
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Kill the store-writer stream and restart from its checkpoint:
@@ -328,902 +248,6 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     rows = spark.read.parquet(store).select("name", "value_d").collect()
     assert sorted((r["name"], r["value_d"]) for r in rows) == [
         ("m.one", 1.0), ("m.three", 3.0), ("m.two", 2.0)]
-
-
-def test_stream_minhash_matches_batch(spark, tmp_path):
-    """Incremental near-dup: replaying the corpus as a stream against
-    its own persisted signature index must produce exactly the batch
-    operator's banded candidate set — including pairs whose two docs
-    arrive in DIFFERENT micro-batches (the index join, not intra-batch
-    state, carries them)."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _minhash_sig_cand,
-        minhash_index_bands,
-    )
-    from catalyst_spark.streaming.minhash import stream_minhash_candidates
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    _sig, cand = _minhash_sig_cand(spark, SF_DIR)
-    batch_pairs = {(r["a_id"], r["b_id"]) for r in cand.collect()}
-    assert batch_pairs  # vacuous replay would prove nothing
-
-    index = minhash_index_bands(spark, SF_DIR)
-
-    docs = load(spark, SF_DIR, "documents").select("doc_id", "text").collect()
-    d = tmp_path / "docs"
-    d.mkdir()
-    half = len(docs) // 2
-    for fname, chunk in (("b1.json", docs[:half]), ("b2.json", docs[half:])):
-        (d / fname).write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_minhash_candidates(stream, index)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("mh_cand").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = {(r["a_id"], r["b_id"])
-           for r in spark.sql("select * from mh_cand").collect()}
-    assert got == batch_pairs
-
-
-def test_stream_contamination_matches_batch(spark, tmp_path):
-    """Streaming decontamination: replaying the eval source against the
-    train shingle index must reproduce the batch sweep's counts exactly
-    (update-mode aggregate; threshold applied at read)."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _CONTAM_EVAL_SOURCE,
-        _CONTAM_MIN_SHARED,
-        contamination_overlap,
-    )
-    from catalyst_spark.streaming.contamination import (
-        stream_contamination_counts,
-        train_shingle_index,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["eval_id"], r["train_id"]): r["shared_shingles"]
-            for r in contamination_overlap(spark, SF_DIR).collect()}
-    assert want
-
-    index = train_shingle_index(spark, SF_DIR, _CONTAM_EVAL_SOURCE)
-    ev = (load(spark, SF_DIR, "documents")
-          .where(f"source = '{_CONTAM_EVAL_SOURCE}'")
-          .select("doc_id", "text").collect())
-    d = tmp_path / "eval"
-    d.mkdir()
-    half = len(ev) // 2
-    for fname, chunk in (("b1.json", ev[:half]), ("b2.json", ev[half:])):
-        (d / fname).write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_contamination_counts(stream, index)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("contam_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    # update mode re-emits rows per batch: the LAST value per pair is
-    # the running total
-    rows = spark.sql("select * from contam_stream").collect()
-    got = {}
-    for r in rows:
-        got[(r["eval_id"], r["train_id"])] = r["shared_shingles"]
-    got = {k: v for k, v in got.items() if v >= _CONTAM_MIN_SHARED}
-    assert got == want
-
-
-def test_stream_bloom_probe_matches_batch(spark, tmp_path):
-    """The stateless streaming Bloom probe must reproduce the batch
-    sweep's per-doc (n_shingles, bloom_hits) exactly — append mode,
-    no state store, filter broadcast as a single literal row."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _CONTAM_EVAL_SOURCE,
-        bloom_decontaminate,
-    )
-    from catalyst_spark.streaming.contamination import (
-        bloom_filter_words,
-        stream_bloom_probe,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["eval_id"]: (r["n_shingles"], r["bloom_hits"])
-            for r in bloom_decontaminate(spark, SF_DIR).collect()}
-    assert want
-
-    words = bloom_filter_words(spark, SF_DIR, _CONTAM_EVAL_SOURCE)
-    assert any(words), "filter must have bits set"
-    ev = (load(spark, SF_DIR, "documents")
-          .where(f"source = '{_CONTAM_EVAL_SOURCE}'")
-          .select("doc_id", "text").collect())
-    d = tmp_path / "bloom_eval"
-    d.mkdir()
-    half = len(ev) // 2
-    for fname, chunk in (("b1.json", ev[:half]), ("b2.json", ev[half:])):
-        (d / fname).write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_bloom_probe(stream, words)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("bloom_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["eval_id"]: (r["n_shingles"], r["bloom_hits"])
-           for r in spark.sql("select * from bloom_stream").collect()}
-    assert got == want
-
-
-def test_stream_cusum_matches_batch(spark, tmp_path):
-    """Online CUSUM with one BIGINT of keyed state must reproduce the
-    batch sweep exactly over a time-ordered 2-batch replay."""
-    import json
-
-    from catalyst_spark.queries.tsdb import cusum_changepoints
-    from catalyst_spark.streaming.stateful import stream_cusum_alarms
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    want = {r["event_id"]: (r["user_id"], r["cusum_cents"], r["alarm"])
-            for r in cusum_changepoints(spark, SF_DIR).collect()}
-    assert want
-
-    ev = (load(spark, SF_DIR, "events")
-          .select("event_id", F.unix_micros("ts").alias("ts_us"), "user_id",
-                  F.expr("cast(round(value * 100) as bigint)").alias("cents"))
-          .orderBy("ts_us", "event_id").collect())
-    d = tmp_path / "cusum_events"
-    d.mkdir()
-    half = len(ev) // 2
-    # time-split: batch 1 strictly precedes batch 2, so per-series
-    # arrival order matches event time and state carries across batches
-    for i, (fname, chunk) in enumerate(
-        (("b1.json", ev[:half]), ("b2.json", ev[half:]))
-    ):
-        (d / fname).write_text("\n".join(
-            json.dumps({"event_id": r["event_id"], "ts_us": r["ts_us"],
-                        "user_id": r["user_id"], "cents": r["cents"]})
-            for r in chunk))
-        # FileStreamSource orders same-batch files by mtime with an
-        # unspecified tie-break; force b1 strictly older than b2 so the
-        # stateful replay order is deterministic
-        t = os.path.getmtime(d / fname) - 60 + 30 * i
-        os.utime(d / fname, (t, t))
-
-    stream = (spark.readStream
-              .schema("event_id long, ts_us long, user_id long, cents long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_cusum_alarms(stream)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("cusum_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["event_id"]: (r["user_id"], r["cusum_cents"], r["alarm"])
-           for r in spark.sql("select * from cusum_stream").collect()}
-    assert got == want
-
-
-def test_stream_holt_matches_batch(spark, tmp_path):
-    """Online Holt with two BIGINTs of keyed state must reproduce the
-    batch sweep bit-exactly over a time-ordered 2-batch replay."""
-    import json
-
-    from catalyst_spark.queries.tsdb import holt_linear_smooth
-    from catalyst_spark.streaming.stateful import stream_holt_smooth
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    want = {r["event_id"]: (r["user_id"], r["level"], r["trend"])
-            for r in holt_linear_smooth(spark, SF_DIR).collect()}
-    assert want
-
-    ev = (load(spark, SF_DIR, "events")
-          .select("event_id", F.unix_micros("ts").alias("ts_us"), "user_id",
-                  F.expr("cast(round(value * 100) as bigint)").alias("cents"))
-          .orderBy("ts_us", "event_id").collect())
-    d = tmp_path / "holt_events"
-    d.mkdir()
-    half = len(ev) // 2
-    for i, (fname, chunk) in enumerate(
-        (("b1.json", ev[:half]), ("b2.json", ev[half:]))
-    ):
-        (d / fname).write_text("\n".join(
-            json.dumps({"event_id": r["event_id"], "ts_us": r["ts_us"],
-                        "user_id": r["user_id"], "cents": r["cents"]})
-            for r in chunk))
-        # deterministic replay order (same fix as the CUSUM twin)
-        t = os.path.getmtime(d / fname) - 60 + 30 * i
-        os.utime(d / fname, (t, t))
-
-    stream = (spark.readStream
-              .schema("event_id long, ts_us long, user_id long, cents long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_holt_smooth(stream)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("holt_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["event_id"]: (r["user_id"], r["level"], r["trend"])
-           for r in spark.sql("select * from holt_stream").collect()}
-    assert got == want
-
-
-def test_stream_window_decontaminate_matches_batch(spark, tmp_path):
-    """Substring-level streaming decontamination: replaying the eval
-    docs against the static train window index must reproduce the batch
-    window_decontaminate stats (windows, matches, longest run) exactly."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _CONTAM_EVAL_SOURCE,
-        window_decontaminate,
-    )
-    from catalyst_spark.streaming.contamination import (
-        stream_window_decontaminate,
-        train_window_index,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["eval_id"]: (r["n_windows"], r["matched_windows"], r["max_run"])
-            for r in window_decontaminate(spark, SF_DIR).collect()}
-    assert want
-
-    index = train_window_index(spark, SF_DIR, _CONTAM_EVAL_SOURCE)
-    ev = (load(spark, SF_DIR, "documents")
-          .where(f"source = '{_CONTAM_EVAL_SOURCE}'")
-          .select("doc_id", "text").collect())
-    d = tmp_path / "eval_w"
-    d.mkdir()
-    half = len(ev) // 2
-    for fname, chunk in (("b1.json", ev[:half]), ("b2.json", ev[half:])):
-        (d / fname).write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_window_decontaminate(stream, index)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("windec_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = {r["eval_id"]: (r["n_windows"], r["matched_windows"], r["max_run"])
-           for r in spark.sql("select * from windec_stream").collect()}
-    assert got == want
-
-
-def test_stream_window_decontaminate_redelivery_idempotent(spark, tmp_path):
-    """ADVICE r4: a doc_id resent in a later micro-batch (revision
-    re-send of identical text) must not double-count n_windows or reset
-    max_run — the collect_set state makes the aggregate idempotent, so
-    every emitted update for a doc carries the same final stats."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _CONTAM_EVAL_SOURCE,
-        window_decontaminate,
-    )
-    from catalyst_spark.streaming.contamination import (
-        stream_window_decontaminate,
-        train_window_index,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["eval_id"]: (r["n_windows"], r["matched_windows"], r["max_run"])
-            for r in window_decontaminate(spark, SF_DIR).collect()}
-
-    index = train_window_index(spark, SF_DIR, _CONTAM_EVAL_SOURCE)
-    ev = (load(spark, SF_DIR, "documents")
-          .where(f"source = '{_CONTAM_EVAL_SOURCE}'")
-          .select("doc_id", "text").collect())
-    d = tmp_path / "eval_redeliver"
-    d.mkdir()
-    body = "\n".join(json.dumps({"doc_id": r["doc_id"], "text": r["text"]})
-                     for r in ev)
-    (d / "b1.json").write_text(body)
-    (d / "b2.json").write_text(body)  # full re-delivery, later batch
-
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_window_decontaminate(stream, index)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("windec_redeliver").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from windec_redeliver").collect()
-    got = {}
-    for r in rows:
-        v = (r["n_windows"], r["matched_windows"], r["max_run"])
-        assert got.setdefault(r["eval_id"], v) == v  # every update agrees
-    assert got == want
-
-
-def test_stream_round_half_up_matches_spark_round(spark):
-    """The PQ twin's 2dp rounding must be Spark F.round's HALF_UP, not
-    pandas' half-to-even (ADVICE r5): a d2 landing exactly on a 2dp
-    half-tie (0.125) must round up on both engines."""
-    from catalyst_spark.streaming.ann import _round_half_up
-
-    vals = [0.125, 0.135, -0.125, 2.675, 0.1, 1.005, 36.605, 0.0]
-    got = [_round_half_up(v) for v in vals]
-    rows = spark.createDataFrame([(v,) for v in vals], "v double").selectExpr(
-        "round(v, 2) as r").collect()
-    assert got == [r["r"] for r in rows]
-    assert _round_half_up(0.125) == 0.13  # pandas .round(2) gives 0.12
-
-
-def test_stream_pq_adc_topk_matches_batch(spark, tmp_path):
-    """Streaming PQ twin (VERDICT r4 item 9): replaying the probe set as
-    a file stream (with one batch fully RE-DELIVERED) against the static
-    codes table must converge to ann_pq_adc_topk's top-5 exactly —
-    same codebooks (shared session cache), same LUT float math, same
-    (d2, n_id) tie-break; state is 5 pairs per query, corpus-size-free."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_pq_adc_topk
-    from catalyst_spark.streaming.ann import pq_static_index, stream_pq_adc_topk
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["adc_d2"])
-            for r in ann_pq_adc_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes, entries = pq_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "pq_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_pq_adc_topk(stream, codes, entries)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("pq_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from pq_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["adc_d2"])
-    got = {k: (v[1], round(v[2], 2)) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_ivfpq_topk_matches_batch(spark, tmp_path):
-    """Streaming combined IVF-PQ twin (VERDICT r5 item 8): replaying
-    the probe set as a file stream (one batch fully RE-DELIVERED)
-    against the codes-with-cell static table must converge to
-    ann_ivfpq_topk's top-5 exactly — broadcast coarse probe (struct
-    sort = the batch (distance, c_id) ties), equi-join on c_id so only
-    probed cells score, shared LUT math and bounded top-k state."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_ivfpq_topk
-    from catalyst_spark.streaming.ann import (
-        ivfpq_static_index,
-        stream_ivfpq_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["adc_d2"])
-            for r in ann_ivfpq_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, entries, coarse = ivfpq_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "ivfpq_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_ivfpq_topk(stream, codes_cells, entries, coarse)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("ivfpq_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from ivfpq_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["adc_d2"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_sq8_topk_matches_batch(spark, tmp_path):
-    """Streaming SQ8 twin: replaying the probe set (one batch fully
-    RE-DELIVERED) against the static integer codes must converge to
-    ann_sq8_topk exactly — same broadcast ranges, bit-identical codes,
-    integer distances, so equality is unconditional."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_sq8_topk
-    from catalyst_spark.streaming.ann import sq8_static_index, stream_sq8_topk
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["sq_d2"])
-            for r in ann_sq8_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes, mins, rngs = sq8_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "sq8_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_sq8_topk(stream, codes, mins, rngs)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("sq8_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from sq8_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["sq_d2"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_sq8_ivf_topk_matches_batch(spark, tmp_path):
-    """Streaming IVF+SQ8 twin: coarse probe with broadcast centroids +
-    integer in-cell scan over the codes-with-cell static table must
-    converge to ann_sq8_ivf_topk exactly over a replay with one batch
-    fully RE-DELIVERED."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_sq8_ivf_topk
-    from catalyst_spark.streaming.ann import (
-        sq8_ivf_static_index,
-        stream_sq8_ivf_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["sq_d2"])
-            for r in ann_sq8_ivf_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, mins, rngs, coarse = sq8_ivf_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "sq8ivf_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_sq8_ivf_topk(stream, codes_cells, mins, rngs, coarse)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("sq8ivf_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from sq8ivf_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["sq_d2"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_interval_coverage_matches_batch(spark, tmp_path):
-    """Online interval-union coverage with five BIGINTs of keyed state
-    must converge to the batch gaps-and-islands result exactly over a
-    time-ordered 2-batch replay (a user's open island can span the
-    batch boundary — precisely what the carried state handles)."""
-    import json
-
-    from catalyst_spark.queries.tsdb import interval_coverage
-    from catalyst_spark.streaming.stateful import stream_interval_coverage
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-    from pyspark.sql import functions as F
-
-    want = {r["user_id"]: (r["n_events"], r["n_islands"], r["covered_us"])
-            for r in interval_coverage(spark, SF_DIR).collect()}
-    assert want
-
-    ev = (load(spark, SF_DIR, "events")
-          .select("event_id", F.unix_micros("ts").alias("ts_us"), "user_id")
-          .orderBy("ts_us", "event_id").collect())
-    d = tmp_path / "coverage_events"
-    d.mkdir()
-    half = len(ev) // 2
-    for i, (fname, chunk) in enumerate(
-        (("b1.json", ev[:half]), ("b2.json", ev[half:]))
-    ):
-        (d / fname).write_text("\n".join(
-            json.dumps({"event_id": r["event_id"], "ts_us": r["ts_us"],
-                        "user_id": r["user_id"]})
-            for r in chunk))
-        # deterministic replay order (same fix as the CUSUM twin)
-        t = os.path.getmtime(d / fname) - 60 + 30 * i
-        os.utime(d / fname, (t, t))
-
-    stream = (spark.readStream
-              .schema("event_id long, ts_us long, user_id long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_interval_coverage(stream)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("coverage_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    latest = {}
-    for r in spark.sql("select * from coverage_stream").collect():
-        if (r["user_id"] not in latest
-                or r["n_events"] > latest[r["user_id"]][0]):
-            latest[r["user_id"]] = (
-                r["n_events"], r["n_islands"], r["covered_us"])
-    assert latest == want
-
-
-def test_stream_domain_cap_matches_batch(spark, tmp_path):
-    """Online per-domain caps with K pairs of keyed state per source
-    must converge to batch domain_cap_sample exactly — including under
-    a fully re-delivered batch (doc_id dedup in the merge)."""
-    import json
-
-    from catalyst_spark.queries.pipeline import domain_cap_sample
-    from catalyst_spark.streaming.stateful import stream_domain_cap
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["source"], r["rk"]): r["doc_id"]
-            for r in domain_cap_sample(spark, SF_DIR).collect()}
-    assert want
-
-    docs = (load(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "domcap_docs"
-    d.mkdir()
-    half = len(docs) // 2
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-        t = os.path.getmtime(d / f"b{i}.json") - 60 + 20 * i
-        os.utime(d / f"b{i}.json", (t, t))
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_domain_cap(stream)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("domcap_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    latest = {}
-    for r in spark.sql("select * from domcap_stream").collect():
-        cur = latest.get(r["source"])
-        if cur is None or r["n_seen"] > cur[0]:
-            latest[r["source"]] = (r["n_seen"], {})
-    for r in spark.sql("select * from domcap_stream").collect():
-        if r["n_seen"] == latest[r["source"]][0]:
-            latest[r["source"]][1][(r["source"], r["rk"])] = r["doc_id"]
-    got = {}
-    for _, (_, m) in latest.items():
-        got.update(m)
-    assert got == want
-
-
-def test_stream_ivfpq_residual_topk_matches_batch(spark, tmp_path):
-    """Streaming residual-IVFADC twin (VERDICT r6 item 2): replaying
-    the probe set as a file stream (one batch fully RE-DELIVERED)
-    against the residual codes-with-cell static table must converge to
-    ann_ivfpq_residual_topk's top-5 exactly — numpy coarse probe
-    (bit-identical to the batch assigner), per-probed-cell residual
-    LUTs, equi-join on c_id so only probed cells score, and the shared
-    bounded top-k state."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_ivfpq_residual_topk
-    from catalyst_spark.streaming.ann import (
-        rivfpq_static_index,
-        stream_ivfpq_residual_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["adc_d2"])
-            for r in ann_ivfpq_residual_topk(spark, SF_DIR).collect()}
-    assert want
-
-    rcodes_cells, entries, coarse = rivfpq_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "rivfpq_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_ivfpq_residual_topk(stream, rcodes_cells, entries, coarse)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("rivfpq_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from rivfpq_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["adc_d2"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_ivfpq_rerank_topk_matches_batch(spark, tmp_path):
-    """Streaming two-stage rerank twin: replaying the probe set as a
-    file stream (one batch fully RE-DELIVERED) against the IVF-PQ
-    static index + raw-vector store must converge to
-    ann_ivfpq_rerank_topk's top-5 exactly — numpy coarse probe
-    (bit-identical to the batch assigner), c_id-bounded ADC scoring,
-    eager exact-cosine grading on the same candidate set, and bounded
-    (d2, n_id, cos) shortlist state reranked at emission."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_ivfpq_rerank_topk
-    from catalyst_spark.streaming.ann import (
-        rerank_static_index,
-        stream_ivfpq_rerank_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-            for r in ann_ivfpq_rerank_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, entries, coarse, vecs_norm = rerank_static_index(
-        spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "rerank_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_ivfpq_rerank_topk(stream, codes_cells, entries, coarse,
-                                  vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("rerank_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from rerank_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["cos"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_rank_fusion_topk_matches_batch(spark, tmp_path):
-    """Streaming hybrid-fusion twin: replaying the probe set (text +
-    embedding per arriving query; one batch fully RE-DELIVERED) against
-    the static shingle-set table and raw-vector store must converge to
-    rank_fusion_topk's fused top-5 exactly — per-arm bounded top-R
-    state, integer rank-sum fusion with the absent-arm penalty at
-    emission."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import rank_fusion_topk
-    from catalyst_spark.streaming.ann import (
-        fusion_static_index,
-        stream_rank_fusion_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["result_id"], r["fused_rank_sum"])
-            for r in rank_fusion_topk(spark, SF_DIR).collect()}
-    assert want
-
-    hsets, vecs_norm = fusion_static_index(spark, SF_DIR)
-    emb = load(spark, SF_DIR, "embeddings").selectExpr(
-        "vec_id", "cast(embedding as array<double>) as e")
-    probes = (load(spark, SF_DIR, "documents")
-              .select("doc_id", "text")
-              .join(emb, F.expr("doc_id = vec_id"))
-              .where("doc_id % 50 = 0")
-              .select("doc_id", "text", "e").collect())
-    assert probes
-    d = tmp_path / "fusion_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"],
-                        "embedding": list(r["e"])})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_rank_fusion_topk(stream, hsets, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("fusion_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from fusion_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["result_id"], r["fused_rank_sum"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
-def test_stream_shard_dedup_classify_matches_batch(spark, tmp_path):
-    """Ingest-time shard dedup: replaying the new shard (doc_id%7==0;
-    one batch fully RE-DELIVERED) against the corpus-side fingerprint /
-    band / hset indexes must classify every arriving doc exactly as the
-    batch audit does — aggregating the per-doc classes reproduces
-    incremental_shard_dedup's per-source counters."""
-    import json
-    from collections import Counter
-
-    from catalyst_spark.queries.pipeline import incremental_shard_dedup
-    from catalyst_spark.streaming.minhash import (
-        shard_dedup_static_index,
-        stream_shard_dedup_classify,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["source"]: (r["n_new"], r["n_exact_dup"], r["n_near_dup"],
-                          r["n_kept"])
-            for r in incremental_shard_dedup(spark, SF_DIR).collect()}
-    assert want
-
-    fp_index, band_index, hset_index = shard_dedup_static_index(
-        spark, SF_DIR)
-    shard = (load(spark, SF_DIR, "documents")
-             .where("doc_id % 7 = 0")
-             .select("doc_id", "source", "text").collect())
-    assert shard
-    d = tmp_path / "sharddedup_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_shard_dedup_classify(stream, fp_index, band_index,
-                                     hset_index)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("sharddedup_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from sharddedup_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["doc_id"] not in latest
-                or r["n_seen"] > latest[r["doc_id"]][0]):
-            latest[r["doc_id"]] = (r["n_seen"], r["source"], r["status"])
-    agg = Counter()
-    for _, (_, src, st) in latest.items():
-        agg[(src, st)] += 1
-    got = {}
-    for src in {s for _, s, _ in latest.values()}:
-        n_new = sum(v for (s, _), v in agg.items() if s == src)
-        got[src] = (n_new, agg.get((src, "exact"), 0),
-                    agg.get((src, "near"), 0), agg.get((src, "kept"), 0))
-    assert got == want
 
 
 class TaggingTCPFront:
@@ -1404,71 +428,6 @@ def test_graphite_tcp_framed_socket_end_to_end(spark, tmp_path):
     assert any(p.name.startswith("dt=") for p in store.iterdir())
 
 
-def test_stream_rank_fusion_indexed_matches_batch(spark, tmp_path):
-    """Index-served streaming fusion twin (VERDICT r7 item 3):
-    replaying the probe set (text + embedding; one batch fully
-    RE-DELIVERED) with the vector arm scoring through the rerank
-    twin's c_id-bounded path must converge to rank_fusion_indexed's
-    fused top-5 exactly — ADC-ordered (d2, id, cos) shortlist state
-    reranked at emission, shared lexical arm, rank-sum fusion."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import rank_fusion_indexed
-    from catalyst_spark.streaming.ann import (
-        fusion_static_index,
-        rerank_static_index,
-        stream_rank_fusion_indexed,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["result_id"], r["fused_rank_sum"])
-            for r in rank_fusion_indexed(spark, SF_DIR).collect()}
-    assert want
-
-    hsets, _ = fusion_static_index(spark, SF_DIR)
-    codes_cells, entries, coarse, vecs_norm = rerank_static_index(
-        spark, SF_DIR)
-    emb = load(spark, SF_DIR, "embeddings").selectExpr(
-        "vec_id", "cast(embedding as array<double>) as e")
-    probes = (load(spark, SF_DIR, "documents")
-              .select("doc_id", "text")
-              .join(emb, F.expr("doc_id = vec_id"))
-              .where("doc_id % 50 = 0")
-              .select("doc_id", "text", "e").collect())
-    assert probes
-    d = tmp_path / "fusion_idx_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "text": r["text"],
-                        "embedding": list(r["e"])})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, text string, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_rank_fusion_indexed(stream, hsets, codes_cells, entries,
-                                    coarse, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("fusion_idx_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from fusion_idx_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["result_id"], r["fused_rank_sum"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
-
-
 def test_http_ingest_end_to_end(spark):
     """S1/S2/K1/K2 driven over REAL HTTP (VERDICT r7 item 8, the HTTP
     mirror of the TCP socket test): a live localhost http.server plays
@@ -1571,1501 +530,3 @@ def test_http_ingest_end_to_end(spark):
     finally:
         srv.shutdown()
         srv.server_close()
-
-
-def test_stream_pii_scrub_matches_batch(spark, tmp_path):
-    """Ingest-time PII scrub: replaying the corpus as a file stream
-    (one batch RE-DELIVERED) must emit per-doc scrub rows whose
-    per-source aggregate equals pii_extract_stats exactly — and the
-    redacted text must contain the masks wherever a count fired."""
-    import json
-    from collections import defaultdict
-
-    from catalyst_spark.queries.pipeline import pii_extract_stats
-    from catalyst_spark.streaming.scrub import stream_pii_scrub
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["source"]: r for r in pii_extract_stats(spark, SF_DIR).collect()}
-
-    docs = (load(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "pii_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_pii_scrub(stream)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("pii_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from pii_stream").collect()
-    # stateless emission: re-delivered rows are byte-identical; collapse
-    # to one row per doc (the consumer's idempotent latest-wins)
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["doc_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["doc_id"]  # idempotent
-        latest[r["doc_id"]] = r
-    assert len(latest) == len(docs)
-    agg = defaultdict(lambda: [0, 0, 0, 0, 0, 0, 0])
-    for r in latest.values():
-        a = agg[r["source"]]
-        a[0] += 1
-        any_n = r["c_email"] + r["c_phone"] + r["c_ip"] + r["c_url"]
-        a[1] += 1 if any_n > 0 else 0
-        a[2] += r["c_email"]
-        a[3] += r["c_phone"]
-        a[4] += r["c_ip"]
-        a[5] += r["c_url"]
-        a[6] += r["red_delta"]
-        if r["c_email"]:
-            assert "<EMAIL>" in r["red_text"]
-        if r["c_url"]:
-            assert "<URL>" in r["red_text"]
-    for src, w in want.items():
-        assert agg[src] == [w["n_docs"], w["docs_with_pii"], w["n_email"],
-                            w["n_phone"], w["n_ip"], w["n_url"],
-                            w["red_chars"]], src
-
-
-def test_stream_quality_gate_matches_batch(spark, tmp_path):
-    """Ingest-time quality gate: replaying the corpus as a file stream
-    (one batch RE-DELIVERED) must emit per-doc rule flags whose
-    per-source aggregate equals gopher_quality_rules exactly — the
-    stateless-twin contract, same shape as the PII scrub test."""
-    import json
-    from collections import defaultdict
-
-    from catalyst_spark.queries.pipeline import gopher_quality_rules
-    from catalyst_spark.streaming.scrub import stream_quality_gate
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["source"]: r
-            for r in gopher_quality_rules(spark, SF_DIR).collect()}
-
-    docs = (load(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "gate_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_quality_gate(stream)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("gate_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from gate_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["doc_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["doc_id"]  # idempotent
-        latest[r["doc_id"]] = r
-    assert len(latest) == len(docs)
-    names = ("bounds", "len", "ttr", "top", "stop")
-    agg = defaultdict(lambda: [0] * 7)
-    for r in latest.values():
-        a = agg[r["source"]]
-        a[0] += 1
-        for i, n in enumerate(names):
-            a[1 + i] += r[f"f_{n}"]
-        a[6] += 1 if r["passes"] else 0
-    assert agg.keys() == want.keys()
-    for src, a in agg.items():
-        w = want[src]
-        got = (a[0], *a[1:6], a[6])
-        exp = (w["n_docs"], w["n_fail_bounds"], w["n_fail_len"],
-               w["n_fail_ttr"], w["n_fail_top"], w["n_fail_stop"],
-               w["n_pass"])
-        assert got == exp, src
-
-
-def test_stream_boilerplate_cut_matches_batch(spark, tmp_path):
-    """Ingest-time corpus-frequency line removal (VERDICT r8 item 6):
-    the batch pass builds the boiler-hash index; replaying the corpus
-    as a file stream (one batch RE-DELIVERED) against that broadcast
-    index must reproduce boilerplate_line_cut's per-doc audit
-    row-for-row — n_chunks, n_cut, kept_tokens, and the md5 value-pin
-    of the reassembled text."""
-    import json
-
-    from catalyst_spark.queries.pipeline import boilerplate_line_cut
-    from catalyst_spark.streaming.scrub import (
-        boiler_hash_index,
-        stream_boilerplate_cut,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["doc_id"]: r
-            for r in boilerplate_line_cut(spark, SF_DIR).collect()}
-    assert sum(r["n_cut"] for r in want.values()) > 0  # real boilerplate
-
-    idx = boiler_hash_index(spark, SF_DIR)
-    assert idx == sorted(idx) and len(idx) > 0
-
-    docs = (load(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "boiler_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_boilerplate_cut(stream, idx)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("boiler_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from boiler_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["doc_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["doc_id"]  # idempotent
-        latest[r["doc_id"]] = r
-    assert latest.keys() == want.keys()
-    for doc_id, got in latest.items():
-        w = want[doc_id]
-        assert (got["n_chunks"], got["n_cut"], got["kept_tokens"],
-                got["kept_h"]) == (w["n_chunks"], w["n_cut"],
-                                   w["kept_tokens"], w["kept_h"]), doc_id
-
-
-def test_stream_curation_pipeline_composed(spark, tmp_path):
-    """VERDICT r8 item 7 (+ r9 item 3, the DSIR stage; + r10 item 5,
-    the perplexity keep-line): gate -> DSIR score -> perplexity bucket
-    -> scrub -> boiler cut -> shard-dedup classify run as ONE composed
-    streaming query over one arriving corpus (the shard, one batch
-    RE-DELIVERED). Stage-count asserts: (0) arriving docs, (1) gate
-    survivors (only they are emitted — rejected docs never reach the
-    scorer, the scrub, or the index probes), (1b) per-doc w_bits equal
-    to the stateless DSIR twin on the survivor set, (1c) per-doc
-    ppl_bucket equal to the BATCH tercile assignment of
-    _perplexity_doc_buckets, (2) per-doc scrub deltas equal to the
-    stateless twin, (2b) boiler-cut audits, (3) dedup classes equal to
-    the batch classification of the survivors against the corpus
-    index."""
-    import json
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import (
-        _minhash_sig_cand,
-        _perplexity_doc_buckets,
-    )
-    from catalyst_spark.streaming.minhash import shard_dedup_static_index
-    from catalyst_spark.streaming.scrub import (
-        boiler_hash_index,
-        dsir_weight_index,
-        perplexity_cutoff_index,
-        stream_boilerplate_cut,
-        stream_curation_pipeline,
-        stream_dsir_gate,
-        stream_pii_scrub,
-        stream_quality_gate,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents")
-    shard_df = docs.where("doc_id % 7 = 0").select(
-        "doc_id", "source", "text")
-    shard = shard_df.collect()
-    assert shard
-
-    # batch expectations, computed INDEPENDENTLY of the stream run:
-    # the stateless twins applied as plain batch projections, and the
-    # classify stage as direct batch joins against the corpus side
-    gate_pass = {r["doc_id"] for r in
-                 stream_quality_gate(shard_df).where("passes").collect()}
-    assert 0 < len(gate_pass) < len(shard)  # the gate really gates
-    surv_df = shard_df.join(
-        spark.createDataFrame([(i,) for i in gate_pass], "doc_id long"),
-        "doc_id", "semi")
-    want_red = {r["doc_id"]: r["red_delta"]
-                for r in stream_pii_scrub(surv_df).collect()}
-    bh = boiler_hash_index(spark, SF_DIR)
-    want_cut = {r["doc_id"]: (r["n_cut"], r["kept_tokens"])
-                for r in stream_boilerplate_cut(surv_df, bh).collect()}
-    lw, norm_bits = dsir_weight_index(spark, SF_DIR)
-    want_w = {r["doc_id"]: r["w_bits"]
-              for r in stream_dsir_gate(surv_df, lw, norm_bits).collect()}
-    ppl_model = perplexity_cutoff_index(spark, SF_DIR)
-    want_pb = {r["doc_id"]: r["bucket"]
-               for r in _perplexity_doc_buckets(spark, SF_DIR)
-               .select("doc_id", "bucket").collect()}
-
-    corpus = docs.where("doc_id % 7 != 0")
-    exact_ids = {
-        r["doc_id"]
-        for r in surv_df.select("doc_id", F.md5("text").alias("h"))
-        .join(corpus.select(F.md5("text").alias("h")).distinct(), "h",
-              "semi").collect()
-    }
-    sig, _ = _minhash_sig_cand(spark, SF_DIR)
-    hs = sig.select("doc_id", "hset")
-    near_ids = {
-        r["new_id"]
-        for r in hs.join(
-            surv_df.select("doc_id"), "doc_id", "semi"
-        ).select(F.col("doc_id").alias("new_id"),
-                 F.col("hset").alias("h_a"))
-        .crossJoin(
-            hs.join(corpus.select("doc_id"), "doc_id", "semi")
-            .select(F.col("hset").alias("h_b")))
-        .where(F.size(F.array_intersect("h_a", "h_b")) * 2
-               >= F.size(F.array_union("h_a", "h_b")))
-        .select("new_id").distinct().collect()
-    }
-
-    def want_status(doc_id):
-        if doc_id in exact_ids:
-            return "exact"
-        return "near" if doc_id in near_ids else "kept"
-
-    # the composed stream: shard replayed with full re-delivery
-    fp_index, band_index, hset_index = shard_dedup_static_index(
-        spark, SF_DIR)
-    d = tmp_path / "curation_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_curation_pipeline(stream, fp_index, band_index,
-                                  hset_index, bh, lw, norm_bits,
-                                  ppl_model=ppl_model)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("curation_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from curation_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["doc_id"] not in latest
-                or r["n_seen"] > latest[r["doc_id"]]["n_seen"]):
-            latest[r["doc_id"]] = r
-    # stage 1: exactly the gate survivors are emitted
-    assert set(latest) == gate_pass
-    # stage 1b: DSIR weights match the stateless scoring twin on the
-    # survivors (VERDICT r9 item 3 — the funnel's fifth stage)
-    for doc_id, r in latest.items():
-        assert r["w_bits"] == want_w[doc_id], doc_id
-    # stage 1c: perplexity buckets match the BATCH tercile assignment
-    # (VERDICT r10 item 5 — the keep-line served at ingest): replayed
-    # corpus members land in exactly their batch bucket, boundary-tie
-    # docs included (the (mbits, doc_id) tuple compare)
-    for doc_id, r in latest.items():
-        assert r["ppl_bucket"] == want_pb[doc_id], doc_id
-    assert {r["ppl_bucket"] for r in latest.values()} <= {
-        "head", "middle", "tail"}
-    # stage 2: scrub deltas match the stateless twin on the survivors
-    for doc_id, r in latest.items():
-        assert r["red_delta"] == want_red[doc_id], doc_id
-    # stage 2b: boiler-cut audits match the stateless cut twin
-    for doc_id, r in latest.items():
-        assert (r["boiler_cut"], r["kept_tokens"]) == want_cut[doc_id]
-    # stage 3: classes match the batch classification
-    for doc_id, r in latest.items():
-        assert r["status"] == want_status(doc_id), doc_id
-    # the funnel table a data lead reads: per-source stage counts
-    arriving = Counter(r["doc_id"] % 7 == 0 and r["source"]
-                       for r in shard)
-    classes = Counter((r["source"], r["status"]) for r in latest.values())
-    for src in {r["source"] for r in shard}:
-        gated = sum(1 for i, r in latest.items() if r["source"] == src)
-        assert gated <= arriving[src]
-        assert sum(v for (s, _), v in classes.items() if s == src) == gated
-
-
-def test_stream_dsir_gate_matches_batch(spark, tmp_path):
-    """Ingest-time DSIR scoring: replaying the non-target corpus as a
-    file stream (one batch RE-DELIVERED) against the broadcast bucket
-    log-ratio model must reproduce dsir_importance_weights' w_bits for
-    every doc — in particular the batch operator's top-N front."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _CONTAM_EVAL_SOURCE,
-        dsir_importance_weights,
-    )
-    from catalyst_spark.streaming.scrub import (
-        dsir_weight_index,
-        stream_dsir_gate,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    top = dsir_importance_weights(spark, SF_DIR).collect()
-    assert top
-    lw, norm_bits = dsir_weight_index(spark, SF_DIR)
-
-    docs = (load(spark, SF_DIR, "documents")
-            .where(f"source != '{_CONTAM_EVAL_SOURCE}'")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "dsir_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_dsir_gate(stream, lw, norm_bits)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("dsir_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from dsir_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["doc_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["doc_id"]  # idempotent
-        latest[r["doc_id"]] = r
-    assert len(latest) == len(docs)
-    for t in top:  # the batch top-N front scores identically online
-        got = latest[t["doc_id"]]
-        assert (got["n_tok"], got["w_bits"]) == (t["n_tok"], t["w_bits"])
-    # and the stream's own top-N (w_bits DESC, doc_id) IS the batch front
-    stream_top = sorted(latest.values(),
-                        key=lambda r: (-r["w_bits"], r["doc_id"]))[:len(top)]
-    assert [(r["doc_id"], r["w_bits"]) for r in stream_top] \
-        == [(r["doc_id"], r["w_bits"]) for r in top]
-
-
-def test_stream_perplexity_gate_matches_batch(spark, tmp_path):
-    """Ingest-time perplexity keep-line (VERDICT r10 item 5):
-    replaying the corpus as a file stream (one batch RE-DELIVERED)
-    against the broadcast unigram table + per-source tercile boundary
-    tuples must reproduce _perplexity_doc_buckets' bucket AND
-    mbits_per_token for every doc — boundary ties included (the
-    (mbits, doc_id) lexicographic compare, which a score-only cutoff
-    would misassign)."""
-    import json
-
-    from catalyst_spark.queries.pipeline import _perplexity_doc_buckets
-    from catalyst_spark.streaming.scrub import (
-        perplexity_cutoff_index,
-        stream_perplexity_gate,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["doc_id"]: (r["mbits_per_token"], r["bucket"])
-            for r in _perplexity_doc_buckets(spark, SF_DIR).collect()}
-    assert want
-    cm, n_total, cutoffs = perplexity_cutoff_index(spark, SF_DIR)
-
-    docs = (load(spark, SF_DIR, "documents")
-            .select("doc_id", "source", "text").collect())
-    d = tmp_path / "ppl_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_perplexity_gate(stream, cm, n_total, cutoffs)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("ppl_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from ppl_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["doc_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["doc_id"]  # idempotent
-        latest[r["doc_id"]] = r
-    assert len(latest) == len(docs)
-    for doc_id, (mbits, bucket) in want.items():
-        got = latest[doc_id]
-        assert (got["mbits_per_token"], got["ppl_bucket"]) \
-            == (mbits, bucket), doc_id
-    # every batch tercile is non-empty per source and reproduced online
-    per_src = {}
-    for r in latest.values():
-        per_src.setdefault(r["source"], set()).add(r["ppl_bucket"])
-    assert all("head" in b for b in per_src.values())
-
-
-def test_stream_mmr_topk_matches_batch(spark, tmp_path):
-    """Streaming MMR twin (VERDICT r9 item 5): replaying the probe set
-    as a file stream (one batch fully RE-DELIVERED) against the IVF-PQ
-    static index + raw-vector store must converge to
-    mmr_diversified_topk's diversified top-k exactly — the rerank
-    twin's bounded shortlist state extended with candidate vectors,
-    the greedy run at emission over <= R candidates with
-    sequential-fold sims (bit-identical IEEE order to the batch op)."""
-    import json
-
-    from catalyst_spark.queries.pipeline import mmr_diversified_topk
-    from catalyst_spark.streaming.ann import (
-        rerank_static_index,
-        stream_mmr_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["result_id"], r["mmr_score"])
-            for r in mmr_diversified_topk(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, entries, coarse, vecs_norm = rerank_static_index(
-        spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "mmr_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_mmr_topk(stream, codes_cells, entries, coarse, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("mmr_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from mmr_stream_topk").collect()
-    latest_seen = {}
-    for r in rows:
-        if (r["q_id"] not in latest_seen
-                or r["n_seen"] > latest_seen[r["q_id"]]):
-            latest_seen[r["q_id"]] = r["n_seen"]
-    got = {(r["q_id"], r["rank"]): (r["result_id"], r["mmr_score"])
-           for r in rows if r["n_seen"] == latest_seen[r["q_id"]]}
-    assert got == want
-
-
-def test_stream_cdc_classify_matches_batch(spark, tmp_path):
-    """Streaming CDC classifier (VERDICT r9 item 8): replaying the
-    shard (doc_id % 7 == 0, one batch RE-DELIVERED) against the corpus
-    chunk-hash index must (a) chunk every arriving doc IN-ROW exactly
-    as the batch chunker does — same boundaries, same chunk text, same
-    hashes — and (b) converge per doc to the batch-computed dup-chunk
-    count vs the corpus set, so aggregating the emissions reproduces
-    the per-source audit a nightly cdc run would publish for the
-    shard."""
-    import json
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import _cdc_chunks
-    from catalyst_spark.streaming.minhash import (
-        cdc_chunk_static_index,
-        stream_cdc_classify,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents")
-    shard_df = docs.where("doc_id % 7 = 0").select(
-        "doc_id", "source", "text")
-    shard = shard_df.collect()
-    assert shard
-
-    # batch expectation: the operator's own chunker over the shard,
-    # joined against the corpus-side distinct chunk hashes
-    idx = cdc_chunk_static_index(spark, SF_DIR)
-    shard_chunks = _cdc_chunks(shard_df)
-    want = {
-        r["doc_id"]: (r["n_chunks"], r["n_tok"], r["n_dup"])
-        for r in shard_chunks.join(
-            idx.withColumn("_hit", F.lit(1)), "h", "left")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_chunks"),
-             F.sum("n_tok").alias("n_tok"),
-             F.sum(F.when(F.col("_hit").isNotNull(), 1).otherwise(0))
-             .alias("n_dup"))
-        .collect()
-    }
-    assert want
-    assert any(v[2] > 0 for v in want.values())  # some re-crawled chunks
-
-    d = tmp_path / "cdc_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_cdc_classify(stream, idx)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("cdc_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from cdc_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["doc_id"] not in latest
-                or r["n_seen"] > latest[r["doc_id"]]["n_seen"]):
-            latest[r["doc_id"]] = r
-    assert set(latest) == set(want)
-    for doc_id, r in latest.items():
-        assert (r["n_chunks"], r["n_tok"], r["n_dup_chunks"]) \
-            == want[doc_id], doc_id
-    # the audit a data lead reads: per-source counters off the stream
-    # equal the batch audit of the shard against the corpus
-    got_src = defaultdict(lambda: [0, 0, 0])
-    for r in latest.values():
-        got_src[r["source"]][0] += 1
-        got_src[r["source"]][1] += r["n_chunks"]
-        got_src[r["source"]][2] += r["n_dup_chunks"]
-    want_src = defaultdict(lambda: [0, 0, 0])
-    src_of = {r["doc_id"]: r["source"] for r in shard}
-    for doc_id, (nc, _nt, nd) in want.items():
-        want_src[src_of[doc_id]][0] += 1
-        want_src[src_of[doc_id]][1] += nc
-        want_src[src_of[doc_id]][2] += nd
-    assert dict(got_src) == dict(want_src)
-
-
-def test_stream_hard_negative_indexed_matches_batch(spark, tmp_path):
-    """Streaming hard-negative twin (r10): replaying the probe set
-    (one batch fully RE-DELIVERED) against the IVF-PQ static index +
-    raw-vector store must converge to hard_negative_indexed's mined
-    negatives exactly — same bounded shortlist state as the rerank
-    twin, band filter + top-k applied at emission."""
-    import json
-
-    from catalyst_spark.queries.pipeline import hard_negative_indexed
-    from catalyst_spark.streaming.ann import (
-        rerank_static_index,
-        stream_hard_negative_indexed,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neg_id"], r["cos"])
-            for r in hard_negative_indexed(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, entries, coarse, vecs_norm = rerank_static_index(
-        spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "hn_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_hard_negative_indexed(stream, codes_cells, entries,
-                                      coarse, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("hn_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from hn_stream").collect()
-    latest_seen = {}
-    for r in rows:
-        if (r["q_id"] not in latest_seen
-                or r["n_seen"] > latest_seen[r["q_id"]]):
-            latest_seen[r["q_id"]] = r["n_seen"]
-    got = {(r["q_id"], r["rank"]): (r["neg_id"], r["cos"])
-           for r in rows if r["n_seen"] == latest_seen[r["q_id"]]}
-    assert got == want
-
-
-def test_stream_contrastive_triplets_matches_batch(spark, tmp_path):
-    """Streaming triplet-export twin (r10): replaying the probe set
-    (one batch fully RE-DELIVERED) against the IVF-PQ static index +
-    raw-vector store must converge to contrastive_triplets' rows
-    exactly — shared bounded shortlist state, pseudo-positive + banded
-    negatives + margin assembled at emission."""
-    import json
-
-    from catalyst_spark.queries.pipeline import contrastive_triplets
-    from catalyst_spark.streaming.ann import (
-        rerank_static_index,
-        stream_contrastive_triplets,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]):
-            (r["pos_id"], r["pos_cos"], r["neg_id"], r["neg_cos"],
-             r["margin"])
-            for r in contrastive_triplets(spark, SF_DIR).collect()}
-    assert want
-
-    codes_cells, entries, coarse, vecs_norm = rerank_static_index(
-        spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "triplet_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_contrastive_triplets(stream, codes_cells, entries,
-                                     coarse, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("triplet_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from triplet_stream").collect()
-    latest_seen = {}
-    for r in rows:
-        if (r["q_id"] not in latest_seen
-                or r["n_seen"] > latest_seen[r["q_id"]]):
-            latest_seen[r["q_id"]] = r["n_seen"]
-    got = {(r["q_id"], r["rank"]):
-           (r["pos_id"], r["pos_cos"], r["neg_id"], r["neg_cos"],
-            r["margin"])
-           for r in rows if r["n_seen"] == latest_seen[r["q_id"]]}
-    assert got == want
-
-
-def test_stream_phash_classify_matches_batch(spark, tmp_path):
-    """Streaming image near-dup classifier (r10): replaying the shard's
-    pHashes (doc_id % 7 == 0, one batch RE-DELIVERED) against the
-    corpus band index must converge per image to the brute-force
-    classification — matched corpus ids at Hamming <= 7 and the min
-    distance — proving the banded join's pigeonhole completeness holds
-    online exactly as image_dup_pairs proves it batch-side."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.pipeline import _synthetic_phash
-    from catalyst_spark.streaming.minhash import (
-        phash_band_index,
-        stream_phash_classify,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents")
-    shard = _synthetic_phash(docs.where("doc_id % 7 = 0")).collect()
-    corpus = _synthetic_phash(docs.where("doc_id % 7 != 0")).collect()
-    assert shard and corpus
-
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    want = {}
-    for s in shard:
-        hits = {c["media_id"]: ham(s["phash"], c["phash"])
-                for c in corpus
-                if c["media_id"] != s["media_id"]
-                and ham(s["phash"], c["phash"]) <= 7}
-        want[s["media_id"]] = (
-            "dup" if hits else "kept", len(hits),
-            min(hits.values()) if hits else None)
-    assert any(v[0] == "dup" for v in want.values())
-    assert any(v[0] == "kept" for v in want.values())
-
-    idx = phash_band_index(spark, SF_DIR)
-    d = tmp_path / "phash_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"media_id": r["media_id"], "phash": r["phash"]})
-            for r in chunk))
-    stream = (spark.readStream.schema("media_id long, phash long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_phash_classify(stream, idx)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("phash_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from phash_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["media_id"] not in latest
-                or r["n_seen"] > latest[r["media_id"]]["n_seen"]):
-            latest[r["media_id"]] = r
-    assert set(latest) == set(want)
-    for mid, r in latest.items():
-        assert (r["status"], r["n_matches"], r["min_hamming"]) \
-            == want[mid], mid
-
-
-def test_stream_audio_fp_classify_matches_batch(spark, tmp_path):
-    """Streaming audio near-dup classifier (r12 — the audio member of
-    the ingest classification triad): replaying the shard's audio
-    fingerprints (doc_id % 7 == 0, one batch RE-DELIVERED) against the
-    corpus band index must converge per clip to the brute-force
-    classification — matched corpus ids at Hamming <= 7 and the min
-    distance — the stream_phash_classify proof run on the audio rung's
-    own dup structure (groups of 6, planted flips 0..10). The
-    classifier runs at max_hamming=3 (well inside the 8-band
-    pigeonhole bound): the audio table's within-group Hamming sums
-    span 1..9, so 3 splits the shard into BOTH dup and kept verdicts —
-    at 7, this dup density makes every shard clip a dup and the kept
-    branch would go untested."""
-    import json
-
-    from catalyst_spark.queries.pipeline import _synthetic_audio_fp
-    from catalyst_spark.streaming.minhash import (
-        audio_fp_band_index,
-        stream_audio_fp_classify,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents")
-    shard = _synthetic_audio_fp(docs.where("doc_id % 7 = 0")).collect()
-    corpus = _synthetic_audio_fp(docs.where("doc_id % 7 != 0")).collect()
-    assert shard and corpus
-
-    def ham(a, b):
-        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
-
-    want = {}
-    for s in shard:
-        hits = {c["media_id"]: ham(s["afp"], c["afp"])
-                for c in corpus
-                if c["media_id"] != s["media_id"]
-                and ham(s["afp"], c["afp"]) <= 3}
-        want[s["media_id"]] = (
-            "dup" if hits else "kept", len(hits),
-            min(hits.values()) if hits else None)
-    assert any(v[0] == "dup" for v in want.values())
-    assert any(v[0] == "kept" for v in want.values())
-
-    idx = audio_fp_band_index(spark, SF_DIR)
-    d = tmp_path / "audiofp_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"media_id": r["media_id"], "afp": r["afp"]})
-            for r in chunk))
-    stream = (spark.readStream.schema("media_id long, afp long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_audio_fp_classify(stream, idx, max_hamming=3)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("audiofp_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from audiofp_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["media_id"] not in latest
-                or r["n_seen"] > latest[r["media_id"]]["n_seen"]):
-            latest[r["media_id"]] = r
-    assert set(latest) == set(want)
-    for mid, r in latest.items():
-        assert (r["status"], r["n_matches"], r["min_hamming"]) \
-            == want[mid], mid
-
-
-def test_stream_video_dup_classify_matches_batch(spark, tmp_path):
-    """Streaming video near-dup classifier (r12 — the fourth modality
-    of the ingest classification family): replaying the shard's
-    sampled-frame hash sets (doc_id % 7 == 0, one batch RE-DELIVERED)
-    against the corpus frame index must converge per video to the
-    brute-force classification — corpus videos passing the exact
-    integer Jaccard >= 0.5 test 2|I| >= |U|, their count, and the best
-    truncated permille — proving the equi-join candidates + in-state
-    verify reproduce batch video_frame_dup_pairs' verdicts online."""
-    import json
-
-    from catalyst_spark.queries.pipeline import _synthetic_frame_sets
-    from catalyst_spark.streaming.minhash import (
-        stream_video_dup_classify,
-        video_frame_index,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = load(spark, SF_DIR, "documents")
-    shard = _synthetic_frame_sets(docs.where("doc_id % 7 = 0")).collect()
-    corpus = _synthetic_frame_sets(docs.where("doc_id % 7 != 0")).collect()
-    assert shard and corpus
-
-    want = {}
-    for s in shard:
-        sset = set(s["frame_hashes"])
-        n_dup, best = 0, -1
-        for c in corpus:
-            cset = set(c["frame_hashes"])
-            i = len(sset & cset)
-            u = len(sset | cset)
-            if i and 2 * i >= u:
-                n_dup += 1
-                best = max(best, (i * 1000) // u)
-        want[s["media_id"]] = (
-            "dup" if n_dup else "kept", n_dup, best if n_dup else None)
-    assert any(v[0] == "dup" for v in want.values())
-    assert any(v[0] == "kept" for v in want.values())
-
-    idx = video_frame_index(spark, SF_DIR)
-    d = tmp_path / "videofh_stream"
-    d.mkdir()
-    half = max(1, len(shard) // 2)
-    batches = [shard[:half], shard[half:], shard[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"media_id": r["media_id"],
-                        "frame_hashes": list(r["frame_hashes"])})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("media_id long, frame_hashes array<string>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_video_dup_classify(stream, idx)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("videofh_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from videofh_stream").collect()
-    latest = {}
-    for r in rows:
-        if (r["media_id"] not in latest
-                or r["n_seen"] > latest[r["media_id"]]["n_seen"]):
-            latest[r["media_id"]] = r
-    assert set(latest) == set(want)
-    for mid, r in latest.items():
-        assert (r["status"], r["n_matches"], r["best_jaccard_permille"]) \
-            == want[mid], mid
-
-
-def test_stream_pack_sequences_matches_batch(spark, tmp_path):
-    """Ingest-time next-fit packing (VERDICT r10 item 8): replaying the
-    corpus as a file stream in doc_id order (one batch RE-DELIVERED)
-    with one open bin per (source, shard) in keyed state must converge
-    to the batch packer's bins — per-doc assignments replicated in
-    plain python next-fit, and the per-bin audit equal to
-    pack_sequences' output row-for-row."""
-    import json
-
-    from catalyst_spark.queries.pipeline import (
-        _PACK_CAPACITY,
-        _PACK_SHARD,
-        pack_sequences,
-    )
-    from catalyst_spark.streaming.scrub import stream_pack_sequences
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    docs = sorted(
-        load(spark, SF_DIR, "documents")
-        .select("doc_id", "source", "text").collect(),
-        key=lambda r: r["doc_id"],
-    )
-    # plain-python next-fit per (source, shard), docs in doc_id order
-    want: dict[int, tuple] = {}
-    state: dict[tuple, list] = {}
-    for r in docs:
-        tok = len(r["text"].split(" "))
-        key = (r["source"], r["doc_id"] // _PACK_SHARD)
-        bin_id, fill = state.get(key, [0, 0])
-        if fill + tok > _PACK_CAPACITY and fill > 0:
-            bin_id, fill = bin_id + 1, 0
-        fill += tok
-        state[key] = [bin_id, fill]
-        want[r["doc_id"]] = (key[0], key[1], tok, bin_id)
-
-    d = tmp_path / "pack_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"doc_id": r["doc_id"], "source": r["source"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("doc_id long, source string, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_pack_sequences(stream)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("pack_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from pack_stream").collect()
-    got = {}
-    for r in rows:
-        assert r["doc_id"] not in got, r["doc_id"]  # exactly-once emission
-        got[r["doc_id"]] = (r["source"], r["shard"], r["tok"], r["bin"])
-    assert got == want
-    # and the per-bin audit equals the batch operator's rows
-    batch_bins = {
-        (r["source"], r["shard"], r["bin"]): (r["n_docs"], r["total_tok"])
-        for r in pack_sequences(spark, SF_DIR).collect()
-    }
-    stream_bins: dict[tuple, list] = {}
-    for doc_id, (src, shard, tok, b) in got.items():
-        k = (src, shard, b)
-        n, t = stream_bins.get(k, (0, 0))
-        stream_bins[k] = (n + 1, t + tok)
-    assert stream_bins == batch_bins
-
-
-def test_stream_embedding_clip_gate_matches_batch(spark, tmp_path):
-    """r11 encoder-health twin: replaying the embeddings as a file
-    stream (one batch RE-DELIVERED) against the broadcast clip bounds
-    must reproduce a python replication of the per-vector clipped-dim
-    count over the batch audit's exact bounds — and the per-dim totals
-    of the emitted counts must sum to the batch audit's n_clipped."""
-    import json
-    import math
-
-    from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.streaming.ann import (
-        embedding_clip_index,
-        stream_embedding_clip_gate,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    lo, hi = embedding_clip_index(spark, SF_DIR)
-    vecs = load(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding").collect()
-    want = {}
-    total = 0
-    for r in vecs:
-        n = 0
-        for d, v in enumerate(r["embedding"]):
-            q = math.floor(float(v) * P._EMB_FX)
-            if q < lo[d] or q > hi[d]:
-                n += 1
-        want[r["vec_id"]] = n
-        total += n
-
-    d = tmp_path / "clip_stream"
-    d.mkdir()
-    half = max(1, len(vecs) // 2)
-    batches = [vecs[:half], vecs[half:], vecs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": [float(x) for x in r["embedding"]]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("vec_id long, embedding array<float>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_embedding_clip_gate(stream, lo, hi)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("clip_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from clip_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["vec_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["vec_id"]  # idempotent
-        latest[r["vec_id"]] = r
-    assert len(latest) == len(vecs)
-    for vec_id, n in want.items():
-        got = latest[vec_id]
-        assert got["n_dims_clipped"] == n, vec_id
-        assert got["is_outlier"] == (n > 0)
-    # per-corpus mass agrees with the batch audit's n_clipped total
-    batch_total = sum(r["n_clipped"] for r in
-                      P.embedding_quantile_clip(spark, SF_DIR).collect())
-    assert sum(want.values()) == batch_total == total
-
-
-def test_stream_histogram_buckets_matches_batch(spark, tmp_path):
-    """r11 scraped-histogram twin: the events replayed as a file
-    stream IN TIME ORDER, then an entire re-delivered batch of old
-    observations, then a watermark-advancing sentinel — the dedup ->
-    windowed-counter chain (append mode, both states bounded by a
-    10-minute watermark) must emit counters whose per-(type, bucket)
-    totals equal the batch bucket table EXACTLY (the re-delivered
-    batch increments nothing: inside the horizon the id-dedup eats
-    it, past the horizon the watermark drops it — either way the
-    counter stays exactly-once), and _hq_read over those totals must
-    equal histogram_quantile row-for-row."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.tsdb import (
-        _hq_lo_le_expr,
-        _hq_read,
-        histogram_quantile,
-    )
-    from catalyst_spark.streaming.aggregate import stream_histogram_buckets
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    events = load(spark, SF_DIR, "events").select(
-        "event_id", "ts", "event_type", "value")
-    rows = sorted(events.collect(), key=lambda r: r["ts"])
-    want_buckets = {
-        (r["event_type"], r["lo"], r["le"]): r["n"]
-        for r in events.select("event_type", _hq_lo_le_expr().alias("b"))
-        .groupBy("event_type", "b.lo", "b.le")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-    def _enc(rs):
-        return "\n".join(
-            json.dumps({"event_id": r["event_id"],
-                        "ts": r["ts"].isoformat(),
-                        "event_type": r["event_type"],
-                        "value": r["value"]})
-            for r in rs)
-
-    d = tmp_path / "hq_stream"
-    d.mkdir()
-    half = max(1, len(rows) // 2)
-    (d / "b0.json").write_text(_enc(rows))
-    (d / "b1.json").write_text(_enc(rows[:half]))  # re-delivery, old ids
-    # the sentinel: two hours past the corpus, so every corpus window
-    # closes; its own window stays open and is never emitted
-    import datetime
-    sentinel = {"event_id": 10**12,
-                "ts": (rows[-1]["ts"]
-                       + datetime.timedelta(hours=2)).isoformat(),
-                "event_type": rows[-1]["event_type"], "value": 1.0}
-    (d / "b2.json").write_text(json.dumps(sentinel))
-
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, event_type string,"
-                      " value double")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_histogram_buckets(stream, window="1 hour",
-                                  watermark="10 minutes")
-         .writeStream.outputMode("append").format("memory")
-         .queryName("hq_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.sql("select * from hq_stream").collect()
-    assert got
-    totals: dict[tuple, int] = {}
-    for r in got:
-        k = (r["event_type"], r["lo"], r["le"])
-        totals[k] = totals.get(k, 0) + r["n"]
-    # exactly-once: the re-delivered batch changed nothing, every
-    # corpus window closed, the sentinel's window never emitted
-    assert totals == want_buckets
-    # the quantile read over the ONLINE counters equals the batch
-    # operator bit-for-bit — the scraped histogram serves the same
-    # exact-integer estimator
-    counters = spark.createDataFrame(
-        [(t, lo, le, n) for (t, lo, le), n in totals.items()],
-        "event_type string, lo double, le double, n long",
-    )
-    got_hq = [(r["event_type"], r["q"], r["hq"])
-              for r in _hq_read(counters).collect()]
-    want_hq = [(r["event_type"], r["q"], r["hq"])
-               for r in histogram_quantile(spark, SF_DIR).collect()]
-    assert got_hq == want_hq
-
-
-def test_stream_counter_rate_matches_batch(spark, tmp_path):
-    """r11 Prometheus-rate twin: the events replayed per series in
-    time order (one batch RE-DELIVERED) must leave every series'
-    LATEST emission equal to the batch counter_rate row — the integer
-    cent increases, reset counts and the two single-divide doubles all
-    identical; single-point series emit nothing, like the batch
-    sweep's n_points >= 2 filter."""
-    import json
-
-    from pyspark.sql import functions as F
-
-    from catalyst_spark.queries.tsdb import counter_rate
-    from catalyst_spark.streaming.stateful import stream_counter_rate
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {r["user_id"]: (r["total_inc"], r["n_resets"], r["per_sec"],
-                           r["n_points"])
-            for r in counter_rate(spark, SF_DIR).collect()}
-    assert want
-
-    rows = sorted(
-        load(spark, SF_DIR, "events").select(
-            "event_id", F.unix_micros("ts").alias("ts_us"), "user_id",
-            F.expr("cast(round(value * 100) as bigint)").alias("cents"),
-        ).collect(),
-        key=lambda r: (r["ts_us"], r["event_id"]),
-    )
-    d = tmp_path / "rate_stream"
-    d.mkdir()
-    half = max(1, len(rows) // 2)
-    batches = [rows[:half], rows[:half], rows[half:]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"event_id": r["event_id"], "ts_us": r["ts_us"],
-                        "user_id": r["user_id"], "cents": r["cents"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("event_id long, ts_us long, user_id long,"
-                      " cents long")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_counter_rate(stream)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("rate_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.sql("select * from rate_stream").collect()
-    latest = {}
-    for r in got:
-        if (r["user_id"] not in latest
-                or r["n_points"] >= latest[r["user_id"]]["n_points"]):
-            latest[r["user_id"]] = r
-    assert set(latest) == set(want)
-    for uid, (ti, nr, ps, np_) in want.items():
-        g = latest[uid]
-        assert (g["total_inc"], g["n_resets"], g["per_sec"],
-                g["n_points"]) == (ti, nr, ps, np_), uid
-
-
-def test_stream_prototype_gate_matches_batch(spark, tmp_path):
-    """r11b cluster-balanced-sampling twin: replaying the embeddings
-    as a file stream (one batch RE-DELIVERED) through the broadcast
-    keep model must (a) assign every corpus vector to the same cell
-    as the batch _coarse_assign, (b) mark kept=True for EXACTLY the
-    vec_ids cluster_balanced_sample emits, and (c) re-emit identical
-    rows on re-delivery (pure function of the row)."""
-    import json
-
-    from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.streaming.ann import (
-        prototype_gate_index,
-        stream_prototype_gate,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    cells = prototype_gate_index(spark, SF_DIR)
-    kept_want = {
-        r["vec_id"]
-        for r in P.cluster_balanced_sample(spark, SF_DIR).collect()
-    }
-    assign_want = {
-        r["vec_id"]: r["c_id"]
-        for r in P._coarse_assign(
-            spark, SF_DIR,
-            load(spark, SF_DIR, "embeddings").selectExpr(
-                "vec_id", "cast(embedding as array<double>) AS e"),
-        ).collect()
-    }
-    vecs = load(spark, SF_DIR, "embeddings").select(
-        "vec_id", "embedding").collect()
-
-    d = tmp_path / "proto_stream"
-    d.mkdir()
-    half = max(1, len(vecs) // 2)
-    batches = [vecs[:half], vecs[half:], vecs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": [float(x) for x in r["embedding"]]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("vec_id long, embedding array<float>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_prototype_gate(stream, cells)
-         .writeStream.outputMode("append").format("memory")
-         .queryName("proto_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from proto_stream").collect()
-    latest = {}
-    for r in rows:
-        prev = latest.get(r["vec_id"])
-        if prev is not None:
-            assert tuple(prev) == tuple(r), r["vec_id"]  # idempotent
-        latest[r["vec_id"]] = r
-    assert len(latest) == len(vecs)
-    for vec_id, row in latest.items():
-        assert row["c_id"] == assign_want[vec_id], vec_id
-        assert row["kept"] == (vec_id in kept_want), vec_id
-    # the batch sampler's quota arithmetic: kept mass = sum of
-    # floor(sqrt(cell size)) over cells
-    import math
-
-    sizes = {}
-    for c in assign_want.values():
-        sizes[c] = sizes.get(c, 0) + 1
-    assert len(kept_want) == sum(
-        int(math.floor(math.sqrt(n))) for n in sizes.values())
-
-
-def test_prototype_gate_empty_trained_cell(spark, monkeypatch):
-    """VERDICT r12 item 5: _kmeans_fit returns POST-update centroids
-    while the sampler's cutoffs come from the assignment, so a trained
-    centroid can end with zero assigned corpus vectors — no batch
-    boundary row exists for it. prototype_gate_index must emit the
-    keep-everything sentinel for such a cell instead of a KeyError,
-    and a stream vector landing there (the cell's first occupant,
-    whose quota is unfilled) must be KEPT. Forged by dropping one
-    cell's cutoff row, then steering a probe vector to that cell."""
-    from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.streaming import ann as A
-    from tests.conftest import SF_DIR
-
-    real_cutoffs = P._cluster_keep_cutoffs
-
-    def drop_first_cell(spark_, sf_dir_):
-        rows = real_cutoffs(spark_, sf_dir_)
-        rows = sorted(rows, key=lambda r: r["c_id"])
-        return rows[1:]  # cell rows[0].c_id now has NO batch boundary
-
-    monkeypatch.setattr(P, "_cluster_keep_cutoffs", drop_first_cell)
-    cells = A.prototype_gate_index(spark, SF_DIR)  # must not raise
-    empty_cells = [c for c in cells if (c[2], c[3]) == (-1.0, -1)]
-    assert len(empty_cells) == 1
-    c_id, ce, _, _ = empty_cells[0]
-
-    # a vector AT the empty cell's centroid assigns there and is kept
-    probe = spark.createDataFrame(
-        [(12345, [float(x) for x in ce])],
-        "vec_id long, embedding array<float>")
-    [row] = A.stream_prototype_gate(
-        probe.selectExpr("vec_id", "cast(embedding as array<double>)"
-                         " as embedding"), cells).collect()
-    assert row["c_id"] == c_id
-    assert row["kept"] is True
-
-
-def test_stream_source_drift_matches_batch(spark, tmp_path):
-    """r11b drift-monitor twin: the documents replayed as a file
-    stream in doc_id order per source, then one entire RE-DELIVERED
-    batch — each source's LATEST emitted tvd_hash_permille must equal
-    batch source_token_tvd's hashed column exactly (the re-delivered
-    batch increments nothing: the max-seen watermark skips it), and
-    the hashed scalar never exceeds the exact one (merging bins only
-    cancels deviations). ADVICE r11: the skip must be OBSERVABLE —
-    the cumulative n_late_dropped column must equal exactly the
-    per-source size of the re-delivered batch (zero silent loss
-    accounting)."""
-    import json
-
-    from catalyst_spark.queries import pipeline as P
-    from catalyst_spark.streaming.scrub import (
-        source_drift_index,
-        stream_source_drift,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    cb, n_total = source_drift_index(spark, SF_DIR)
-    batch = {r["source"]: r for r in
-             P.source_token_tvd(spark, SF_DIR).collect()}
-    for r in batch.values():
-        assert r["tvd_hash_permille"] <= r["tvd_permille"], r["source"]
-
-    docs = sorted(
-        load(spark, SF_DIR, "documents").select(
-            "source", "doc_id", "text").collect(),
-        key=lambda r: r["doc_id"])
-    d = tmp_path / "drift_stream"
-    d.mkdir()
-    half = max(1, len(docs) // 2)
-    batches = [docs[:half], docs[half:], docs[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"source": r["source"], "doc_id": r["doc_id"],
-                        "text": r["text"]})
-            for r in chunk))
-    stream = (spark.readStream
-              .schema("source string, doc_id long, text string")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_source_drift(stream, cb, n_total)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("drift_stream").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql(
-        "select * from drift_stream").collect()
-    latest = {}
-    for r in rows:  # memory sink appends update-mode emissions in order
-        latest[r["source"]] = r
-    assert set(latest) == set(batch)
-    redelivered = {}
-    for r in batches[2]:  # the re-delivered chunk, per source
-        redelivered[r["source"]] = redelivered.get(r["source"], 0) + 1
-    for src, r in latest.items():
-        assert r["n_tokens"] == batch[src]["n_tokens"], src
-        assert (r["tvd_hash_permille"]
-                == batch[src]["tvd_hash_permille"]), src
-        # every re-delivered row is dropped AND accounted for; sources
-        # absent from the re-delivered chunk report 0
-        assert r["n_late_dropped"] == redelivered.get(src, 0), src
-
-
-def test_stream_source_drift_restores_pre_r12_state():
-    """ADVICE r12: n_dropped joined the drift monitor's state tuple in
-    r12; a state row restored from a pre-r12 checkpoint has only
-    (counts, max_seen) and the update fn must default the counter to 0
-    instead of failing on state.get[2]. Driven through the real update
-    function with a forged 2-field legacy state row."""
-    import pandas as pd
-
-    from catalyst_spark.queries.pipeline import _DSIR_BUCKETS
-    from catalyst_spark.streaming.scrub import _drift_update_factory
-
-    cb = [1] * _DSIR_BUCKETS
-    update = _drift_update_factory(cb, n_total=_DSIR_BUCKETS)
-
-    class LegacyState:
-        exists = True
-        get = ([0] * _DSIR_BUCKETS, 5)  # pre-r12: no n_dropped field
-
-        def update(self, v):
-            self.stored = v
-
-    st = LegacyState()
-    batch = pd.DataFrame({
-        "source": ["s", "s"], "doc_id": [3, 6], "bs": [[0], [1]]})
-    [out] = list(update(("s",), iter([batch]), st))
-    # doc 3 <= restored max_seen 5 -> dropped and COUNTED from the
-    # defaulted 0; doc 6 ingested
-    assert out["n_late_dropped"].iloc[0] == 1
-    assert out["n_tokens"].iloc[0] == 1
-    counts, max_seen, n_dropped = st.stored
-    assert (max_seen, n_dropped) == (6, 1)
-    assert counts[1] == 1 and sum(counts) == 1
-
-
-def test_stream_mrl_rerank_topk_matches_batch(spark, tmp_path):
-    """r11b truncated-dim serving twin: replaying the probe set as a
-    file stream (one batch fully RE-DELIVERED) against the truncated
-    store + raw-vector store must converge to ann_mrl_rerank_topk's
-    top-5 exactly — numpy coarse probe (bit-identical to the batch
-    assigner), c_id-bounded truncated-cosine stage-1 stored as
-    d2 = -cos16 so the shared shortlist merge IS the batch (cos16
-    DESC, n_id) order, eager exact grading, rerank at emission."""
-    import json
-
-    from catalyst_spark.queries.pipeline import ann_mrl_rerank_topk
-    from catalyst_spark.streaming.ann import (
-        mrl_static_index,
-        stream_mrl_rerank_topk,
-    )
-    from catalyst_spark.tables import load
-    from tests.conftest import SF_DIR
-
-    want = {(r["q_id"], r["rank"]): (r["neighbor_id"], r["cos"])
-            for r in ann_mrl_rerank_topk(spark, SF_DIR).collect()}
-    assert want
-
-    trunc_cells, coarse, vecs_norm = mrl_static_index(spark, SF_DIR)
-    probes = (load(spark, SF_DIR, "embeddings")
-              .where("vec_id % 50 = 0")
-              .selectExpr("vec_id", "cast(embedding as array<double>)"
-                          " as embedding").collect())
-    d = tmp_path / "mrl_stream"
-    d.mkdir()
-    half = max(1, len(probes) // 2)
-    batches = [probes[:half], probes[half:], probes[:half]]  # redelivery
-    for i, chunk in enumerate(batches):
-        (d / f"b{i}.json").write_text("\n".join(
-            json.dumps({"vec_id": r["vec_id"],
-                        "embedding": list(r["embedding"])})
-            for r in chunk))
-
-    stream = (spark.readStream.schema("vec_id long, embedding array<double>")
-              .option("maxFilesPerTrigger", 1).json(str(d)))
-    q = (stream_mrl_rerank_topk(stream, trunc_cells, coarse, vecs_norm)
-         .writeStream.outputMode("update").format("memory")
-         .queryName("mrl_stream_topk").start())
-    q.processAllAvailable()
-    q.stop()
-
-    rows = spark.sql("select * from mrl_stream_topk").collect()
-    latest = {}
-    for r in rows:
-        k = (r["q_id"], r["rank"])
-        if k not in latest or r["n_seen"] > latest[k][0]:
-            latest[k] = (r["n_seen"], r["neighbor_id"], r["cos"])
-    got = {k: (v[1], v[2]) for k, v in latest.items()}
-    assert got == want
