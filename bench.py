@@ -1511,7 +1511,7 @@ def main() -> None:
     influx_lines = influx_lines.repartition(cpus).persist()
     n_influx = influx_lines.count()
     influx_s, influx_min, influx_max = _timed(
-        encode_sensision(permissive(parse_influx(influx_lines, now_ns=0)))
+        encode_sensision(permissive(parse_influx(influx_lines)))
     )
     lines.unpersist()
     influx_lines.unpersist()
@@ -1542,7 +1542,7 @@ def main() -> None:
     tsdb_bodies = tsdb_bodies.repartition(cpus).persist()
     n_tsdb = tsdb_bodies.count()
     tsdb_s, tsdb_min, tsdb_max = _timed(
-        encode_sensision(permissive(parse_opentsdb(tsdb_bodies, now_us=0)))
+        encode_sensision(permissive(parse_opentsdb(tsdb_bodies)))
     )
     tsdb_bodies.unpersist()
 
@@ -1560,7 +1560,7 @@ def main() -> None:
     prom_lines = prom_lines.repartition(cpus).persist()
     n_prom = prom_lines.count()
     prom_s, prom_min, prom_max = _timed(
-        encode_sensision(permissive(parse_prom_text(prom_lines, now_us=0)))
+        encode_sensision(permissive(parse_prom_text(prom_lines)))
     )
     prom_lines.unpersist()
 

@@ -1,10 +1,12 @@
 """Engine configuration (C9) — the reference's viper yaml/env settings.
 
-Mirrors the defaults of cmd/root.go:40-94: every key is overridable by
-a CATALYST_<KEY> environment variable (dots -> underscores, upper-case),
-exactly the reference's env binding scheme. YAML layering is optional
-(the container ships no yaml parser requirement — a flat
-``key: value`` file is accepted).
+Only the keys the engine reads are kept: the Warp 10 endpoints that
+control.reverse.reverse_for_route proxies to. Defaults mirror
+cmd/root.go:40-94; every key is overridable by a CATALYST_<KEY>
+environment variable (dots -> underscores, upper-case), exactly the
+reference's env binding scheme. YAML layering is optional (the
+container ships no yaml parser requirement — a flat ``key: value``
+file is accepted).
 """
 
 from __future__ import annotations
@@ -20,30 +22,6 @@ class Config:
     # K2 reverse-proxy targets (ref cmd/root.go:139-146); delete may
     # point at a different Warp 10 (the reference configures it apart)
     warp_endpoint_delete: str = "http://127.0.0.1:8080"
-    warp_connection_timeout_s: int = 300
-    warp_connection_idle_max: int = 2000
-    warp_connection_keepalive_timeout_s: int = 30
-    warp_connection_dial_timeout_s: int = 10
-    warp_connection_tls_timeout_s: int = 5
-    # graphite (ref cmd/root.go:55-56)
-    graphite_listen: str = ":2003"
-    graphite_parse: bool = True
-    # ban tarpit (ref cmd/root.go:54)
-    bannishment_duration_ms: int = 3000
-    # passthrough flush (ref catalyser/warp.go:28)
-    flush_lines: int = 27
-    # engine-side
-    store_path: str = "/tmp/catalyst_spark/store"
-    checkpoint_path: str = "/tmp/catalyst_spark/ckpt"
-    dryrun: bool = False
-
-
-def _coerce(value: str, target_type: type):
-    if target_type is bool:
-        return value.strip().lower() in ("1", "true", "yes", "on")
-    if target_type is int:
-        return int(value.strip())
-    return value.strip()
 
 
 def load_config(path: str | None = None, env: dict[str, str] | None = None) -> Config:
@@ -62,8 +40,8 @@ def load_config(path: str | None = None, env: dict[str, str] | None = None) -> C
                 file_vals[k.strip().lower().replace(".", "_")] = v.strip()
     for fld in fields(Config):
         if fld.name in file_vals:
-            setattr(cfg, fld.name, _coerce(file_vals[fld.name], fld.type if isinstance(fld.type, type) else type(getattr(cfg, fld.name))))
+            setattr(cfg, fld.name, file_vals[fld.name])
         env_key = f"CATALYST_{fld.name.upper()}"
         if env_key in env:
-            setattr(cfg, fld.name, _coerce(env[env_key], type(getattr(cfg, fld.name))))
+            setattr(cfg, fld.name, env[env_key].strip())
     return cfg

@@ -26,12 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from catalyst_spark.control.auth import txn_id
 
-AUDIT_SCHEMA = (
-    "txn string, protocol string, batch_id long, datapoints long, "
-    "parse_errors long, status int, latency_ms double, logged_at timestamp"
-)
-
-
 class AccessLog:
     """Parquet-backed audit table (append-only, one row per batch)."""
 

@@ -44,12 +44,6 @@ except ImportError:
     _HAVE_PIL = False
 
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),       # image | audio | video | unknown
-    T.StructField("payload", T.BinaryType()),
-])
-
 META_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
     T.StructField("kind", T.StringType()),
@@ -1133,12 +1127,6 @@ def sample_frames(df: DataFrame, every_n: int = 10, max_frames: int = 4) -> Data
             yield pd.DataFrame(out, columns=["media_id", "frame_idx", "frame"])
 
     return df.mapInPandas(run, FRAMES_SCHEMA)
-
-
-VIDEO_FH_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("frame_hashes", T.ArrayType(T.StringType())),
-])
 
 
 def video_frame_hashes(df: DataFrame, every_n: int = 10,

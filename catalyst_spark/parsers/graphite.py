@@ -15,6 +15,8 @@ Semantics reproduced exactly:
 - timestamp magnitude heuristic via int64toTime (ref opentsdb.go:127-144):
   0 -> ingest-now; < 0xFFFFFFFF -> seconds; else milliseconds. Missing
   timestamp -> now in ms (:322) which the heuristic then maps back.
+  "Now" is schema.ingest_now_us(), the micro-batch clock: per batch,
+  not per request, and a replayed epoch keeps it.
 - hierarchy labeling when parse=true (the config default, cmd/root.go:56):
   name 'a.b.c' -> labels {"0":"a","1":"b","2":"c"} (:382-386,398-403).
 - ';'-separated tags override hierarchy labels on key collision (Go map
@@ -26,20 +28,18 @@ Semantics reproduced exactly:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import gts_columns
+from catalyst_spark.schema import gts_columns, ingest_now_us
 
 _MAX_SECONDS = 0xFFFFFFFF  # magnitude heuristic boundary (opentsdb.go:138)
 
 
-def _heuristic_us(ts: Column, now_us: int) -> Column:
+def _heuristic_us(ts: Column, now_us: Column) -> Column:
     """int64toTime(ts).UnixNano()/1000 — sec/ms disambiguation by magnitude."""
     return (
-        F.when(ts == 0, F.lit(now_us))
+        F.when(ts == 0, now_us)
         .when(ts < _MAX_SECONDS, ts * 1_000_000)
         .otherwise(ts * 1_000)
     )
@@ -113,7 +113,6 @@ def parse_graphite(
     df: DataFrame,
     line_col: str = "line",
     parse_hierarchy: bool = True,
-    now_us: int | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Parse Graphite plaintext lines into the canonical GTS schema.
@@ -125,8 +124,7 @@ def parse_graphite(
     a 100 TB replay of Graphite traffic is a map-only scan with zero
     shuffles and zero Python.
     """
-    if now_us is None:
-        now_us = int(time.time() * 1_000_000)
+    now_us = ingest_now_us()
 
     line = F.col(line_col)
     parts = F.split(line, " ")
@@ -139,7 +137,8 @@ def parse_graphite(
     ts_parsed = ts_str.try_cast("long")
     bad_ts = (n >= 3) & ts_parsed.isNull()
     ts_input = F.when(n >= 3, ts_parsed).otherwise(
-        F.lit(now_us // 1000)  # missing ts -> now in ms (graphite.go:322)
+        # missing ts -> now in ms (graphite.go:322)
+        F.call_function("div", now_us, F.lit(1000))
     )
     ts_us = _heuristic_us(ts_input, now_us)
 

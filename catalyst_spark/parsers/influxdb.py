@@ -8,7 +8,9 @@ field=v[,field=v...] [timestamp]) with its escaping rules:
   TRUE (etc.) -> bool; else float64 (Go ParseFloat semantics).
 - per-request precision (?precision=n|u|ms|s|m|h, default n) scales the
   trailing integer timestamp to ns; a missing timestamp takes ingest-now
-  truncated to the precision (ref catalyser/influxdb.go:25-28,62).
+  truncated to the precision (ref catalyser/influxdb.go:25-28,62). "Now"
+  is schema.ingest_now_us(), the micro-batch clock: per batch, not per
+  request, and a replayed epoch keeps it.
 - fan-out: one GTS per field, name = measurement '.' field
   (ref catalyser/influxdb.go:73-80; quirk A.12 — includes the default
   'value' field: 'cpu value=1' -> class 'cpu.value').
@@ -29,14 +31,14 @@ GTS schema, so downstream is identical either way.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA
+from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, ingest_now_us
 
 _PRECISION_NS = {
     "n": 1,
@@ -260,11 +262,9 @@ _TRUE_LIST = ", ".join(f"'{t}'" for t in _BOOL_TRUE)
 _FALSE_LIST = ", ".join(f"'{f}'" for f in _BOOL_FALSE)
 
 
-def _parse_simple(df: DataFrame, line_col: str, mult: int, now_ns: int) -> DataFrame:
+def _parse_simple(df: DataFrame, line_col: str, mult: int, now_ns: Column) -> DataFrame:
     """Column-expression parse of regex-validated simple lines."""
-    from pyspark.sql import functions as F
-
-    default_ns = (now_ns // mult) * mult
+    default_ns = F.call_function("div", now_ns, F.lit(mult)) * mult
     d = (
         df.select(F.col(line_col).alias("_ln"))
         .withColumn("_parts", F.split("_ln", " "))
@@ -281,7 +281,7 @@ def _parse_simple(df: DataFrame, line_col: str, mult: int, now_ns: int) -> DataF
             F.when(
                 F.size("_parts") >= 3,
                 F.element_at("_parts", 3).cast("long") * F.lit(mult),
-            ).otherwise(F.lit(default_ns)),
+            ).otherwise(default_ns),
         )
         .withColumn("_f", F.explode(F.split(F.element_at("_parts", 2), ",")))
         .withColumn("_fv", F.expr("split_part(_f, '=', 2)"))
@@ -315,28 +315,25 @@ def parse_influx(
     df: DataFrame,
     line_col: str = "line",
     precision: str = "n",
-    now_ns: int | None = None,
 ) -> DataFrame:
     """Parse InfluxDB line-protocol rows into the canonical GTS schema.
 
     Routes each line through the JVM column fast path when it matches
     SIMPLE_LINE_RE, else through the Python tokenizer (quoted strings,
-    escapes, and error-row generation).
+    escapes, and error-row generation). Both branches read the same
+    ingest clock; the tokenizer gets it as an input column.
     """
-    from pyspark.sql import functions as F
-
     mult = _PRECISION_NS.get(precision)
     if mult is None:
         raise ValueError(f"unknown precision {precision!r}")
-    if now_ns is None:
-        now_ns = time.time_ns()
+    now_ns = ingest_now_us() * 1000
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for line in pdf[line_col]:
+            for line, now in zip(pdf[line_col], pdf["_now_ns"]):
                 try:
-                    out.extend(parse_influx_line(line, mult, now_ns))
+                    out.extend(parse_influx_line(line, mult, int(now)))
                 except _ParseError:
                     # ref influxdb.go:36 — uniform "Failed to parse datapoint"
                     out.append({**_ERROR_ROW,
@@ -347,5 +344,6 @@ def parse_influx(
 
     is_simple = F.coalesce(F.col(line_col).rlike(SIMPLE_LINE_RE), F.lit(False))
     fast = _parse_simple(df.where(is_simple), line_col, mult, now_ns)
-    slow = df.where(~is_simple).mapInPandas(run, GTS_WITH_ERROR_SCHEMA)
+    slow = (df.where(~is_simple).select(line_col, now_ns.alias("_now_ns"))
+            .mapInPandas(run, GTS_WITH_ERROR_SCHEMA))
     return fast.unionByName(slow)

@@ -18,18 +18,18 @@ Reference semantics (ref catalyser/opentsdb.go:31-144):
   JSON null / missing -> Go nil interface -> value_type 'null'.
 - timestamp must be an integral JSON number (Go int64 field; a float
   fails the decode -> parse error); 0 or missing -> ingest-now; then the
-  sec/ms magnitude heuristic (:127-144).
+  sec/ms magnitude heuristic (:127-144). "Now" is
+  schema.ingest_now_us(), the micro-batch clock: per batch, not per
+  request, and a replayed epoch keeps it.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from catalyst_spark.parsers.graphite import _heuristic_us
-from catalyst_spark.schema import gts_columns
+from catalyst_spark.schema import gts_columns, ingest_now_us
 
 _FULL = ("array<struct<metric:string,timestamp:bigint,value:variant,"
          "tags:map<string,string>>>")
@@ -69,9 +69,7 @@ _MATCH_END = """
 """
 
 
-def parse_opentsdb(
-    df: DataFrame, body_col: str = "body", now_us: int | None = None
-) -> DataFrame:
+def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
     """Parse OpenTSDB JSON bodies (one HTTP body per input row) into GTS.
 
     Scale: ONE from_json + posexplode, both codegen'd; a body with k
@@ -87,9 +85,6 @@ def parse_opentsdb(
     median-of-5, local[32]): 429k -> 1.96M bodies/s end-to-end
     (parse+permissive+encode), 4.6x.
     """
-    if now_us is None:
-        now_us = int(time.time() * 1_000_000)
-
     body = F.col(body_col)
     pos_arr = F.instr(body, "[")
     pos_obj = F.instr(body, "{")
@@ -193,7 +188,7 @@ def parse_opentsdb(
 
     return exploded.select(
         *gts_columns(
-            ts=_heuristic_us(ts_in, now_us),
+            ts=_heuristic_us(ts_in, ingest_now_us()),
             name=F.col("_metric"),
             labels=F.coalesce(F.col("_tags"), F.create_map().cast("map<string,string>")),
             value_d=F.when(value_type == "double", F.col("_cd")),

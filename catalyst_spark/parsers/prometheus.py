@@ -16,20 +16,21 @@ Reference semantics (ref catalyser/prometheus.go:22-117):
   with remote_write's map-to-0 policy T9).
 - sample timestamp is ms; a missing timestamp gets ingest-now at
   SECONDS resolution (model.TimeFromUnix(time.Now().Unix()), :67-71);
-  µs = ms * 1000 (:101).
+  µs = ms * 1000 (:101). "Now" is schema.ingest_now_us(), the
+  micro-batch clock: per batch, not per request, and a replayed epoch
+  keeps it.
 - values are Go ParseFloat: scientific notation, +Inf/-Inf/Nan, etc.
 """
 
 from __future__ import annotations
 
 import math
-import time
 from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, gts_columns
+from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, gts_columns, ingest_now_us
 
 _LINE_RE = r"^([a-zA-Z_:][a-zA-Z0-9_:]*)(?:\{(.*)\})?\s+(\S+)(?:\s+(-?\d+))?\s*$"
 _LABEL_RE = r'([a-zA-Z_][a-zA-Z0-9_]*)\s*=\s*"((?:\\.|[^"\\])*)"'
@@ -80,6 +81,11 @@ def path_to_labels(path: str) -> dict[str, str]:
     return dict(zip(segs[::2], segs[1::2]))
 
 
+def _now_ms() -> Column:
+    """Ingest-now at seconds resolution, in ms (:67-71)."""
+    return F.call_function("div", ingest_now_us(), F.lit(1_000_000)) * 1000
+
+
 def _unescape(col: Column) -> Column:
     """Text-format label-value escapes: \\\\ , \\" , \\n."""
     col = F.replace(col, F.lit(r"\n"), F.lit("\n"))
@@ -91,7 +97,6 @@ def parse_prom_text(
     df: DataFrame,
     line_col: str = "line",
     extra_labels: dict[str, str] | None = None,
-    now_us: int | None = None,
 ) -> DataFrame:
     """Parse exposition-format lines (one per row) into GTS.
 
@@ -100,8 +105,6 @@ def parse_prom_text(
     flattens histogram/summary families back to exactly the per-line
     samples (name_bucket/_sum/_count appear as plain lines).
     """
-    if now_us is None:
-        now_us = int(time.time() * 1_000_000)
     extra_labels = extra_labels or {}
 
     line = F.trim(F.col(line_col))
@@ -134,9 +137,7 @@ def parse_prom_text(
         .otherwise(value_str.try_cast("double"))
     )
 
-    ts_ms = F.when(ts_str != "", ts_str.try_cast("long")).otherwise(
-        F.lit((now_us // 1_000_000) * 1000)  # now at seconds resolution, in ms
-    )
+    ts_ms = F.when(ts_str != "", ts_str.try_cast("long")).otherwise(_now_ms())
 
     parsed = data.select(
         name.alias("_name"),
@@ -243,17 +244,14 @@ def parse_prom_proto(
     df: DataFrame,
     body_col: str = "body",
     extra_labels: dict[str, str] | None = None,
-    now_us: int | None = None,
 ) -> DataFrame:
     """Parse delimited-MetricFamily protobuf bodies (one per row) into
     GTS, with the same post-extraction semantics as the text path:
     ±Inf samples dropped (T8), URL extra labels override inner (T3),
-    injected now at seconds resolution, ts µs = ms * 1000."""
+    ingest-now at seconds resolution (an input column of the Python
+    decoder), ts µs = ms * 1000."""
     from catalyst_spark.parsers.wire import decode_metric_families
 
-    if now_us is None:
-        now_us = int(time.time() * 1_000_000)
-    now_ms = (now_us // 1_000_000) * 1000
     extra_labels = extra_labels or {}
     cols = [f.name for f in GTS_WITH_ERROR_SCHEMA.fields]
 
@@ -262,7 +260,7 @@ def parse_prom_proto(
 
         for pdf in batches:
             out = []
-            for body in pdf[body_col]:
+            for body, now_ms in zip(pdf[body_col], pdf["_now_ms"]):
                 try:
                     fams = decode_metric_families(bytes(body))
                 except Exception:
@@ -270,7 +268,7 @@ def parse_prom_proto(
                                | {"parse_error": "Invalid format"})
                     continue
                 for fam in fams:
-                    for name, labels, value, ts_ms in extract_samples(fam, now_ms):
+                    for name, labels, value, ts_ms in extract_samples(fam, int(now_ms)):
                         if math.isinf(value):
                             continue  # policy T8 (:83-85)
                         out.append({
@@ -286,4 +284,5 @@ def parse_prom_proto(
                         })
             yield pd.DataFrame(out, columns=cols)
 
-    return df.mapInPandas(run, GTS_WITH_ERROR_SCHEMA)
+    return df.select(body_col, _now_ms().alias("_now_ms")).mapInPandas(
+        run, GTS_WITH_ERROR_SCHEMA)

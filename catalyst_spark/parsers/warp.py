@@ -5,16 +5,15 @@ re-joined with CRLF and flushed to the backend every 27 lines plus a
 final partial batch. No parsing, no typing.
 
 In the DataFrame model the passthrough is the identity transform; the
-27-line chunking is a sink concern (see sinks.warp_sink.chunk_payloads,
-which both this path and the Sensision-encoded paths share).
+27-line chunking is a sink concern (sinks.warp_sink.chunk_payloads and
+its PASSTHROUGH_FLUSH_LINES, shared by this path and the
+Sensision-encoded paths).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-PASSTHROUGH_FLUSH_LINES = 27  # hard-coded flush threshold (warp.go:28)
 
 
 def warp_passthrough(df: DataFrame, line_col: str = "line") -> DataFrame:

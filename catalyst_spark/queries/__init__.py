@@ -5,7 +5,8 @@ column names match the DuckDB oracle SQL in ``oracles.py`` exactly (the
 driver sorts columns by name before value-hashing).
 
 DRIVER-WINDOW ROTATION — THE ONE CURRENT NOTE (r14; supersedes the
-per-round narratives that used to live between the historical lists):
+per-round narratives that used to live between the historical lists;
+each round's own derivation sits above its list):
 
 The driver emits CORRECTNESS rows for the FIRST 50 keys of
 ``ALL_QUERIES`` in insertion order. The rotation is governed by three
@@ -21,7 +22,7 @@ Staleness sets are DERIVED FROM THE CORRECTNESS_r*.json ARTIFACTS
 (latest round with a green row per key; within a cohort, that round's
 window order), never from memory — see the verify skill.
 
-The historical ``_R5_FRONT`` .. ``_R13_FRONT`` lists below are frozen
+The historical ``_R5_FRONT`` .. ``_R14_FRONT`` lists below are frozen
 data: each was that round's window, and the chain of ``_prioritize``
 calls deterministically fixes the tail order past slot 50. Do not edit
 them; append a new ``_R{N}_FRONT`` per round. ``_prioritize`` skips
@@ -371,6 +372,47 @@ _R14_FRONT = [
 ]
 
 ALL_QUERIES = _prioritize(ALL_QUERIES, _R14_FRONT)
+
+# Round-16 driver window. The r15 run repeated the r14 window, so the
+# rotation stalled; staleness derived from CORRECTNESS_r01..r15.json
+# (latest green row per key) over the 175-key registry is
+# {never: 1, r11: 28, r12: 49, r13: 47, r15: 50}:
+#   (a) shard_apply_compaction, the one key never driver-checked
+#       (invariant 1);
+#   (b) all 28 r11-stale ops, CORRECTNESS_r11 window order — the r15
+#       spill list, their bound long expired;
+#   (c) the 21 oldest r12-stale ops, CORRECTNESS_r12 window order
+#       (embedding_quantile_clip .. json_props_stats).
+# 1 + 28 + 21 = 50 slots. Spilling to the next window, oldest first:
+# the remaining 28 r12-stale ops in CORRECTNESS_r12 window order
+# (minhash_jaccard_estimate .. curation_funnel, which includes the
+# changed-code re-front q20_customer_deciles), then the r13-stale ops.
+_R16_FRONT = [
+    # (a) never driver-checked (invariant 1)
+    "shard_apply_compaction",
+    # (b) r11-stale, CORRECTNESS_r11 window order
+    "sessionize", "text_stats", "token_counts", "user_growth_curve",
+    "window_decontaminate", "window_selfdup_spans", "phash_dup_pairs",
+    "near_dup_pagerank_converged", "dedup_edit_distance",
+    "ann_ivfpq_rerank_topk", "phash_dup_clusters", "window_selfdup_cut",
+    "lsh_bucket_size_hist", "ann_sq8_ivf_topk", "bpe_merge_stats",
+    "token_coverage_curve", "incremental_shard_dedup", "rank_fusion_topk",
+    "ivf_rek_cell_stats", "dup_quality_audit", "unigram_surprisal",
+    "ann_brute_topk", "asof_nearest_join", "asof_prior_click",
+    "bloom_decontaminate", "burn_rate_windows", "chunk_dedup",
+    "contamination_overlap",
+    # (c) the 21 oldest r12-stale, CORRECTNESS_r12 window order
+    "embedding_quantile_clip", "cluster_balanced_sample",
+    "dim_truncation_recall", "source_token_tvd", "ann_mrl_rerank_topk",
+    "audio_fp_dup_pairs", "video_frame_dup_pairs", "seasonal_hourly_profile",
+    "ann_nprobe_sweep", "distinct_sketch", "cube_event_counts",
+    "dedup_cluster_size_hist", "dedup_embedding_cosine",
+    "dedup_embedding_lsh", "dedup_minhash_pairs", "dedup_ngram_jaccard",
+    "dedup_simhash_pairs", "distinctive_terms", "domain_cap_sample",
+    "heavy_hitters", "json_props_stats",
+]
+
+ALL_QUERIES = _prioritize(ALL_QUERIES, _R16_FRONT)
 
 __all__ = [
     "RELATIONAL_QUERIES",

@@ -995,9 +995,6 @@ def dedup_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIMHASH_BITS = 60  # width of the portable _h60 token hash
 
 
-# cluster edges = dedup_prefix_filter pairs (shingle Jaccard >= 0.5);
-# kept as a named constant because the oracle SQL quotes the threshold
-_CLUSTER_JACCARD = _PREFIX_JACCARD
 _CLUSTER_MAX_ITERS = 20
 
 

@@ -20,17 +20,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-GTS_FIELDS = (
-    "ts",
-    "name",
-    "labels",
-    "value_d",
-    "value_l",
-    "value_b",
-    "value_s",
-    "value_type",
-)
-
 GTS_SCHEMA = T.StructType(
     [
         # µs since epoch; NULL ≙ Go NaN "unset" (ref core/warp.go:429-431)
@@ -56,8 +45,15 @@ GTS_WITH_ERROR_SCHEMA = T.StructType(
 )
 
 
-def empty_labels() -> Column:
-    return F.create_map().cast("map<string,string>")
+def ingest_now_us() -> Column:
+    """The ingest clock, in µs: the one "now" for datapoints that carry
+    no timestamp (the reference stamps them per request,
+    catalyser/influxdb.go:25-28,62). Spark fixes current_timestamp()
+    once per query: a batch action reads one value, and a streaming
+    micro-batch reads its batch timestamp, which the offset log records
+    before the batch runs, so a replayed epoch reads it back unchanged.
+    "Now" is therefore per batch, not per request."""
+    return F.unix_micros(F.current_timestamp())
 
 
 def gts_columns(

@@ -11,7 +11,7 @@ Reference behavior reproduced (ref core/warp.go:116-277, cmd/root.go:46-52):
   (ref core/warp.go:180,202-217,260)
 - response bodies classified through the C4 taxonomy; token-typed
   errors auto-ban (C3)
-- no connection pooling: every POST (one per flush_lines chunk) opens
+- no connection pooling: every POST (one per 27-line chunk) opens
   a new urllib connection (the reference pools 2000 idle conns
   driver-side)
 
@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from catalyst_spark.control.auth import BanRegistry
 from catalyst_spark.control.errors import classify_error
 
-PASSTHROUGH_FLUSH_LINES = 27
+PASSTHROUGH_FLUSH_LINES = 27  # hard-coded flush threshold (catalyser/warp.go:28)
 
 # transport: (url, headers, body_bytes) -> (status_code, response_body)
 Transport = Callable[[str, dict[str, str], bytes], tuple[int, str]]
@@ -46,14 +46,14 @@ def _urllib_transport(url: str, headers: dict[str, str], body: bytes) -> tuple[i
         return e.code, e.read().decode(errors="replace")
 
 
-def chunk_payloads(lines: Iterable[str], flush: int = PASSTHROUGH_FLUSH_LINES) -> Iterator[bytes]:
+def chunk_payloads(lines: Iterable[str]) -> Iterator[bytes]:
     """27-line flush batching (T12). Lines may or may not carry their
     CRLF terminator; the payload always ends each line with CRLF, byte-
     identical to catalyser/warp.go:27-35."""
     buf: list[str] = []
     for line in lines:
         buf.append(line if line.endswith("\r\n") else line + "\r\n")
-        if len(buf) >= flush:
+        if len(buf) >= PASSTHROUGH_FLUSH_LINES:
             yield "".join(buf).encode()
             buf = []
     if buf:
@@ -77,7 +77,6 @@ class WarpHTTPSink:
         now_header: str = "",
         transport: Transport | None = None,
         ban_registry: BanRegistry | None = None,
-        flush_lines: int = PASSTHROUGH_FLUSH_LINES,
     ) -> None:
         self.endpoint = endpoint.rstrip("/")
         self.token = token
@@ -85,7 +84,6 @@ class WarpHTTPSink:
         self.now_header = now_header
         self.transport = transport or _urllib_transport
         self.ban_registry = ban_registry
-        self.flush_lines = flush_lines
 
     def _headers(self) -> dict[str, str]:
         h = {
@@ -115,7 +113,7 @@ class WarpHTTPSink:
 
     def send_lines(self, lines: Iterable[str]) -> int:
         n = 0
-        for payload in chunk_payloads(lines, self.flush_lines):
+        for payload in chunk_payloads(lines):
             self._post(payload)
             n += payload.count(b"\r\n")
         return n
@@ -148,18 +146,15 @@ class PerTokenWarpSink:
         endpoint: str,
         transport: Transport | None = None,
         ban_registry: BanRegistry | None = None,
-        flush_lines: int = PASSTHROUGH_FLUSH_LINES,
     ) -> None:
         self.endpoint = endpoint
         self.transport = transport
         self.ban_registry = ban_registry
-        self.flush_lines = flush_lines
 
     def foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
         endpoint = self.endpoint
         transport = self.transport
         ban_registry = self.ban_registry
-        flush = self.flush_lines
 
         def send_partition(rows) -> None:
             from itertools import groupby
@@ -167,7 +162,7 @@ class PerTokenWarpSink:
             for token, grp in groupby(rows, key=lambda r: r["token"]):
                 WarpHTTPSink(
                     endpoint, token, transport=transport,
-                    ban_registry=ban_registry, flush_lines=flush,
+                    ban_registry=ban_registry,
                 ).send_lines(r["sensision"] for r in grp)
 
         (

@@ -13,6 +13,16 @@ Delivery: the store writer is exactly-once (Spark's file sink commits
 each epoch through its metadata log, keyed by the checkpoint). The Warp
 forwarder is at-least-once: foreachBatch + checkpoint replays a failed
 epoch whole, so partitions that had already posted post again.
+
+Ingest "now": a datapoint without a timestamp is stamped from
+schema.ingest_now_us(), which each micro-batch reads as its batch
+timestamp. The offset log records that timestamp before the batch
+runs, so "now" moves forward with every batch and a replayed epoch
+reads it back: the replay re-sends byte-identical lines. "Now" is per
+batch, not per request as in the reference. Each query has its own
+clock, so start_warp_forwarder and start_store_writer, run as two
+queries over one source, may stamp one timestamp-less point up to one
+trigger apart (likewise a bulk POST and write_store, one pass apart).
 """
 
 from __future__ import annotations
@@ -75,7 +85,6 @@ def graphite_tcp_ingest(
     host: str,
     port: int,
     parse_hierarchy: bool = True,
-    now_us: int | None = None,
 ) -> DataFrame:
     """S3 end-to-end head: socket lines -> token framing (P7, every
     line carries 'TOKEN@.'; unframed lines dropped per graphite.go:
@@ -84,15 +93,13 @@ def graphite_tcp_ingest(
     of the reference)."""
     framed = strip_token_prefix(stream_socket_lines(spark, host, port))
     return parse_graphite(
-        framed, parse_hierarchy=parse_hierarchy, now_us=now_us,
-        keep_cols=("token",),
+        framed, parse_hierarchy=parse_hierarchy, keep_cols=("token",),
     )
 
 
 def graphite_tcp_ingest_framed(
     conn_lines: DataFrame,
     parse_hierarchy: bool = True,
-    now_us: int | None = None,
 ) -> DataFrame:
     """S3 head with exact per-connection framing parity (quirk A.6):
     a (conn_id, line_seq, line) stream — a TCP front that tags each
@@ -105,8 +112,7 @@ def graphite_tcp_ingest_framed(
 
     framed = stream_frame_connections(conn_lines)
     return parse_graphite(
-        framed, parse_hierarchy=parse_hierarchy, now_us=now_us,
-        keep_cols=("token",),
+        framed, parse_hierarchy=parse_hierarchy, keep_cols=("token",),
     )
 
 

@@ -25,11 +25,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale factor:
-# nation is 25 rows and region 5 rows at every TPC-H SF; broadcasting them
-# removes the shuffle on the fact side of Q7/Q8 entirely.
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
 # Content tables whose downstream projections do the heavy per-row work
 # (tokenize + per-shingle md5 for documents, vectorized numpy batches
 # for embeddings). At bench SFs each is ONE parquet file -> ONE scan

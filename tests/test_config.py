@@ -5,19 +5,14 @@ from catalyst_spark.config import Config, load_config
 
 def test_defaults_match_reference():
     c = Config()
-    assert c.warp_connection_idle_max == 2000       # cmd/root.go:49
-    assert c.warp_connection_timeout_s == 300       # cmd/root.go:48
-    assert c.bannishment_duration_ms == 3000        # cmd/root.go:54
-    assert c.graphite_listen == ":2003"             # cmd/root.go:55
-    assert c.graphite_parse is True                 # cmd/root.go:56
-    assert c.flush_lines == 27                      # catalyser/warp.go:28
+    assert c.warp_endpoint == "http://127.0.0.1:8080"         # cmd/root.go:46
+    assert c.warp_endpoint_delete == "http://127.0.0.1:8080"  # cmd/root.go:139-146
 
 
 def test_file_then_env_precedence(tmp_path):
     p = tmp_path / "catalyst.yml"
-    p.write_text("warp.endpoint: http://file:9090\nflush.lines: 10\n")
-    c = load_config(str(p), env={"CATALYST_FLUSH_LINES": "5",
-                                 "CATALYST_GRAPHITE_PARSE": "false"})
-    assert c.warp_endpoint == "http://file:9090"    # from file
-    assert c.flush_lines == 5                       # env wins over file
-    assert c.graphite_parse is False                # env only
+    p.write_text("warp.endpoint: http://file:9090\n"
+                 "warp.endpoint.delete: http://file:9091\n")
+    c = load_config(str(p), env={"CATALYST_WARP_ENDPOINT_DELETE": " http://env:9092 "})
+    assert c.warp_endpoint == "http://file:9090"          # from file
+    assert c.warp_endpoint_delete == "http://env:9092"    # env wins over file

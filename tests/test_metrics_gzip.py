@@ -7,14 +7,12 @@ import gzip
 from catalyst_spark.control.metrics import ingest_audit, observed
 from catalyst_spark.parsers import parse_graphite
 
-NOW_US = 1_700_000_000_000_000
-
 
 def test_ingest_audit_counters(spark):
     df = spark.createDataFrame(
         [("a 1 1546420308",), ("b 2 1546420308",), ("bad",)], "line string"
     )
-    gts = parse_graphite(df, now_us=NOW_US)
+    gts = parse_graphite(df)
     audit = ingest_audit(gts, "graphite").collect()[0]
     assert audit["protocol"] == "graphite"
     assert audit["rows"] == 3
@@ -23,7 +21,7 @@ def test_ingest_audit_counters(spark):
 
 def test_observe_metrics(spark):
     df = spark.createDataFrame([("a 1 1546420308",), ("bad",)], "line string")
-    gts, obs = observed(parse_graphite(df, now_us=NOW_US))
+    gts, obs = observed(parse_graphite(df))
     gts.collect()  # action materializes the observation
     assert obs.get["rows"] == 2
     assert obs.get["parse_errors"] == 1
@@ -36,6 +34,6 @@ def test_gzip_body_ingest(spark, tmp_path):
     p = tmp_path / "req.txt.gz"
     p.write_bytes(gzip.compress(b"zipped.metric 7 1546420308\n"))
     lines = spark.read.text(str(p)).withColumnRenamed("value", "line")
-    rows = parse_graphite(lines, now_us=NOW_US).collect()
+    rows = parse_graphite(lines).collect()
     assert rows[0]["name"] == "zipped.metric"
     assert rows[0]["value_l"] == 7

@@ -7,6 +7,7 @@ import math
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from catalyst_spark.parsers import (
     negotiate_format,
@@ -27,8 +28,6 @@ from catalyst_spark.parsers.wire import (
     snappy_decompress,
 )
 
-NOW_US = 1_700_000_000_000_000  # deterministic "ingest now" for tests
-
 
 def lines_df(spark, lines):
     return spark.createDataFrame([(l,) for l in lines], "line string")
@@ -38,13 +37,18 @@ def rows_of(df):
     return [r.asDict() for r in df.collect()]
 
 
+def with_now(df):
+    """The parsed frame plus the query's ingest clock as `now_us`, read
+    in the same query as the parser's "now"."""
+    return df.withColumn("now_us", F.unix_micros(F.current_timestamp()))
+
+
 # ---------------------------------------------------------------------------
 # Graphite (§3.5)
 # ---------------------------------------------------------------------------
 
 class TestGraphite:
     def parse(self, spark, lines, **kw):
-        kw.setdefault("now_us", NOW_US)
         return rows_of(parse_graphite(lines_df(spark, lines), **kw))
 
     def test_double_ms_ts(self, spark):
@@ -64,14 +68,14 @@ class TestGraphite:
         assert r["name"] == "servers.db01.cpu"
 
     def test_bool_string_sci_quirk(self, spark):
-        rows = self.parse(
-            spark, ["flag_metric true", "note_metric hello", "sci_metric 15e3"]
-        )
+        rows = rows_of(with_now(parse_graphite(lines_df(
+            spark, ["flag_metric true", "note_metric hello", "sci_metric 15e3"]))))
         assert rows[0]["value_b"] is True and rows[0]["value_type"] == "boolean"
         assert rows[1]["value_s"] == "hello" and rows[1]["value_type"] == "string"
         # quirk: no dot -> float parse skipped, int parse fails -> STRING
         assert rows[2]["value_s"] == "15e3" and rows[2]["value_type"] == "string"
-        assert all(r["ts"] == NOW_US for r in rows)  # now-ms -> heuristic -> µs
+        # now-ms -> heuristic -> µs
+        assert all(r["ts"] == r["now_us"] // 1000 * 1000 for r in rows)
 
     def test_dotted_float_fallthrough_is_string(self, spark):
         # '1.2.3' has a dot but ParseFloat fails -> falls through to string
@@ -110,7 +114,7 @@ class TestGraphite:
 class TestOpenTSDB:
     def parse(self, spark, bodies):
         df = spark.createDataFrame([(b,) for b in bodies], "body string")
-        return rows_of(parse_opentsdb(df, now_us=NOW_US))
+        return rows_of(with_now(parse_opentsdb(df)))
 
     def test_solo_with_leading_garbage(self, spark):
         [r] = self.parse(spark, [
@@ -131,7 +135,7 @@ class TestOpenTSDB:
         ])
         assert rows[0]["ts"] == 1346846400123 * 1000  # ms
         assert rows[0]["value_d"] == 18.5
-        assert rows[1]["ts"] == NOW_US  # 0 -> ingest now
+        assert rows[1]["ts"] == rows[1]["now_us"]  # 0 -> ingest now
         assert rows[1]["value_s"] == "busy" and rows[1]["value_type"] == "string"
         assert rows[2]["value_b"] is True and rows[2]["value_type"] == "boolean"
 
@@ -199,7 +203,7 @@ class TestOpenTSDB:
             ' {"metric": "m2", "timestamp": 1, "value": [1, "x", null],'
             '  "tags": {}}]',
         )], "body string")
-        gts = parse_opentsdb(df, now_us=NOW_US)
+        gts = parse_opentsdb(df)
         rows = {r["name"]: r for r in gts.collect()}
         for r in rows.values():
             assert r["parse_error"] is None
@@ -231,8 +235,8 @@ class TestPromText:
             "temp_celsius 23.5",
             "",
         ]
-        rows = rows_of(parse_prom_text(
-            lines_df(spark, lines), extra_labels=extra, now_us=NOW_US))
+        rows = rows_of(with_now(parse_prom_text(
+            lines_df(spark, lines), extra_labels=extra)))
         assert len(rows) == 3  # comment+blank skipped, +Inf dropped
         assert rows[0]["name"] == "http_requests_total"
         assert rows[0]["ts"] == 1395066363000 * 1000
@@ -241,18 +245,17 @@ class TestPromText:
             "method": "post", "code": "200", "job": "node", "instance": "host01",
         }
         # missing ts -> now at seconds resolution
-        assert rows[2]["ts"] == (NOW_US // 1_000_000) * 1_000_000
+        assert rows[2]["ts"] == rows[2]["now_us"] // 1_000_000 * 1_000_000
 
     def test_extra_overrides_inner(self, spark):
         rows = rows_of(parse_prom_text(
             lines_df(spark, ['up{job="inner"} 1 1000']),
-            extra_labels={"job": "outer"}, now_us=NOW_US))
+            extra_labels={"job": "outer"}))
         assert rows[0]["labels"] == {"job": "outer"}
 
     def test_nan_kept_inf_dropped(self, spark):
         rows = rows_of(parse_prom_text(
-            lines_df(spark, ["a NaN 1000", "b -Inf 1000", "c 1e3 1000"]),
-            now_us=NOW_US))
+            lines_df(spark, ["a NaN 1000", "b -Inf 1000", "c 1e3 1000"])))
         assert len(rows) == 2
         assert math.isnan(rows[0]["value_d"])
         assert rows[1]["value_d"] == 1000.0
@@ -265,7 +268,7 @@ class TestPromText:
 
     def test_label_escapes(self, spark):
         rows = rows_of(parse_prom_text(
-            lines_df(spark, ['m{k="a\\"b\\\\c\\nd"} 1 1000']), now_us=NOW_US))
+            lines_df(spark, ['m{k="a\\"b\\\\c\\nd"} 1 1000'])))
         assert rows[0]["labels"] == {"k": 'a"b\\c\nd'}
 
 
@@ -275,15 +278,19 @@ class TestPromText:
 
 class TestInflux:
     def parse(self, spark, lines, **kw):
-        kw.setdefault("now_ns", NOW_US * 1000)
         return rows_of(parse_influx(lines_df(spark, lines), **kw))
 
     def test_quoted_string_field(self, spark):
-        [r] = self.parse(spark, ['string,hostname=localhost a=" b "'])
+        # a slow-path (quoted string) and a fast-path line, both without
+        # a timestamp: the two branches read the query's one clock
+        r, fast = rows_of(with_now(parse_influx(lines_df(
+            spark, ['string,hostname=localhost a=" b "', "cpu v=1"]))
+            .orderBy("name", ascending=False)))
         assert r["name"] == "string.a"
         assert r["value_s"] == " b " and r["value_type"] == "string"
         assert r["labels"] == {"hostname": "localhost"}
-        assert r["ts"] == NOW_US
+        assert fast["name"] == "cpu.v" and fast["value_d"] == 1.0
+        assert r["ts"] == r["now_us"] and fast["ts"] == fast["now_us"]
 
     def test_two_string_fields_with_ts(self, spark):
         rows = self.parse(
@@ -423,13 +430,13 @@ class TestInflux:
                     _s(r["value_l"]), _s(r["value_b"]), _s(r["value_s"]),
                     _s(r["value_type"]), _s(r["parse_error"]))
 
-        got = sorted(
-            key(r, r["labels"] or {}) for r in self.parse(spark, corpus)
-        )
+        rows = rows_of(with_now(parse_influx(lines_df(spark, corpus))))
+        got = sorted(key(r, r["labels"] or {}) for r in rows)
+        now_ns = rows[0]["now_us"] * 1000  # the query's one clock
         expected = sorted(
             key(r, r["labels"])
             for line in corpus
-            for r in parse_influx_line(line, 1, NOW_US * 1000)
+            for r in parse_influx_line(line, 1, now_ns)
         )
         assert got == expected
 
@@ -512,9 +519,9 @@ class TestPromProto:
         key = lambda r: (r["name"], tuple(sorted((r["labels"] or {}).items())),
                          r["value_d"], r["ts"])
         via_proto = sorted(key(r) for r in rows_of(
-            parse_prom_proto(self.body_df(spark, body), now_us=NOW_US)))
+            parse_prom_proto(self.body_df(spark, body))))
         via_text = sorted(key(r) for r in rows_of(
-            parse_prom_text(lines_df(spark, text), now_us=NOW_US)))
+            parse_prom_text(lines_df(spark, text))))
         assert via_proto == via_text
 
     def test_inf_bucket_synthesized_and_inf_values_dropped(self, spark):
@@ -531,7 +538,7 @@ class TestPromProto:
             "metrics": [{"labels": {}, "value": float("inf"),
                          "timestamp_ms": 1000}],
         })
-        rows = rows_of(parse_prom_proto(self.body_df(spark, body), now_us=NOW_US))
+        rows = rows_of(parse_prom_proto(self.body_df(spark, body)))
         by = {(r["name"], tuple(sorted(r["labels"].items()))): r for r in rows}
         assert by[("h_bucket", (("le", "+Inf"),))]["value_d"] == 7.0
         assert not any(r["name"] == "g" for r in rows)
@@ -541,12 +548,11 @@ class TestPromProto:
             "name": "m", "type": "untyped",
             "metrics": [{"labels": {"dc": "inner"}, "value": 2.0}],  # no ts
         })
-        [r] = rows_of(parse_prom_proto(
-            self.body_df(spark, body), extra_labels={"dc": "outer"},
-            now_us=NOW_US))
+        [r] = rows_of(with_now(parse_prom_proto(
+            self.body_df(spark, body), extra_labels={"dc": "outer"})))
         assert r["labels"] == {"dc": "outer"}  # URL labels win (T3)
         # injected now at seconds resolution, ms -> µs
-        assert r["ts"] == (NOW_US // 1_000_000) * 1_000_000
+        assert r["ts"] == r["now_us"] // 1_000_000 * 1_000_000
 
     def test_corrupt_body(self, spark):
         rows = rows_of(parse_prom_proto(self.body_df(spark, b"\xff\x01garbage")))
@@ -667,7 +673,7 @@ class TestConnectionFraming:
         df = spark.createDataFrame(
             rows, "conn_id string, line_seq long, line string")
         gts = parse_graphite(frame_connection_lines(df),
-                             parse_hierarchy=False, now_us=0,
+                             parse_hierarchy=False,
                              keep_cols=("token",)).collect()
         by_name = {r["name"]: r for r in gts}
         assert set(by_name) == {"app.cpu", "app.mem", "weird@.name", "app.gpu", "m"}
@@ -719,7 +725,7 @@ class TestBenchIngestCorpora:
             F.lit(" value="), F.col("value").cast("string"), F.lit(",n=1i"),
             F.lit(" "), (F.unix_micros("ts") * 1000).cast("string"),
         ).alias("line"))
-        assert n_err(parse_influx(i, now_ns=0)) == 0
+        assert n_err(parse_influx(i)) == 0
 
         o = events.select(F.concat(
             F.lit('{"metric":"evt.'), F.col("event_type"),
@@ -727,14 +733,14 @@ class TestBenchIngestCorpora:
             F.lit(',"value":'), F.col("value").cast("string"),
             F.lit(',"tags":{"user":"'), F.col("user_id").cast("string"),
             F.lit('"}}')).alias("body"))
-        assert n_err(parse_opentsdb(o, now_us=0)) == 0
+        assert n_err(parse_opentsdb(o)) == 0
 
         p = events.select(F.concat(
             F.lit("evt_"), F.col("event_type"),
             F.lit('{user="'), F.col("user_id").cast("string"),
             F.lit('"} '), F.col("value").cast("string"),
             F.lit(" "), F.unix_millis("ts").cast("string")).alias("line"))
-        assert n_err(parse_prom_text(p, now_us=0)) == 0
+        assert n_err(parse_prom_text(p)) == 0
 
         rows = events.select(
             "event_type", "user_id", "value",

@@ -121,15 +121,17 @@ def test_influx_tokenizer_roundtrip(measurement, tags, fields, ts):
 
 def test_ts_magnitude_boundaries(spark):
     """0 / 2^32-1 / 2^32 through the graphite heuristic (T6)."""
+    from pyspark.sql import functions as F
+
     from catalyst_spark.parsers import parse_graphite
 
-    now = 1_700_000_000_000_000
     df = spark.createDataFrame(
         [("m 1 0",), ("m 1 4294967294",), ("m 1 4294967295",), ("m 1 4294967296",)],
         "line string",
     )
-    rows = parse_graphite(df, now_us=now).collect()
-    assert rows[0]["ts"] == now                       # 0 => ingest-now
+    rows = parse_graphite(df).withColumn(
+        "now_us", F.unix_micros(F.current_timestamp())).collect()
+    assert rows[0]["ts"] == rows[0]["now_us"]         # 0 => ingest-now
     assert rows[1]["ts"] == 4294967294 * 1_000_000    # < 2^32-1 => seconds
     assert rows[2]["ts"] == 4294967295 * 1000         # boundary => ms
     assert rows[3]["ts"] == 4294967296 * 1000         # above => ms
@@ -358,7 +360,7 @@ def _run_xformat(spark, series, dotted: bool):
 
     out = {
         "graphite": _canon(parse_graphite(g)),
-        "opentsdb": _canon(parse_opentsdb(o, now_us=0)),
+        "opentsdb": _canon(parse_opentsdb(o)),
         "remote_write": _canon(parse_remote_write(rw)),
     }
     if dotted:
@@ -366,13 +368,13 @@ def _run_xformat(spark, series, dotted: bool):
             [(f"{m},user={u} {f}={v!r} {ts * 10**9}",)
              for _n, m, f, u, v, ts in rows],
             "line string")
-        out["influx"] = _canon(parse_influx(i, now_ns=0))
+        out["influx"] = _canon(parse_influx(i))
     else:
         p = spark.createDataFrame(
             [(f'{n}{{user="{u}"}} {v!r} {ts * 1000}',)
              for n, _m, _f, u, v, ts in rows],
             "line string")
-        out["prometheus"] = _canon(parse_prom_text(p, now_us=0))
+        out["prometheus"] = _canon(parse_prom_text(p))
     want = out.pop("graphite")
     for fmt, got in out.items():
         assert got == want, (fmt, got[:3], want[:3])

@@ -35,30 +35,26 @@ def test_every_query_is_oracle_checked():
 
 def test_driver_window_composition():
     """The driver's CORRECTNESS window is the FIRST 50 registry keys in
-    insertion order; the r14 rotation plan (queries/__init__.py,
-    VERDICT r13 items 1–3) promises exactly the _R14_FRONT prefix
-    there — the 2 never-driver-checked r13 additions first, then all
-    27 r10-stale ops whose staleness bound expires this round, then
-    the 21 oldest r11-stale — with the remaining r11-stale spill
-    deliberately PAST the window (named in the r15 rotation note) so
-    max driver staleness stays bounded. Pin both, so a registry edit
-    cannot silently reshuffle the window before the driver runs."""
-    from catalyst_spark.queries import _R14_FRONT
+    insertion order; the r16 rotation plan (queries/__init__.py)
+    promises exactly the _R16_FRONT prefix there — the one
+    never-driver-checked key first, then all 28 r11-stale ops, then the
+    21 oldest r12-stale — with the remaining r12-stale ops deliberately
+    PAST the window. Pin both, so a registry edit cannot silently
+    reshuffle the window before the driver runs."""
+    from catalyst_spark.queries import _R16_FRONT
 
     names = list(ALL_QUERIES)
-    assert len(_R14_FRONT) == 50
-    assert names[:50] == _R14_FRONT
-    # the never-checked r13 additions lead (invariant 1)
-    assert names[:2] == ["dedup_winnow_pairs", "kmv_set_ops"]
-    # every r10-stale op made the window (the bound expires at r14)
-    for must in ("pq_distortion", "interval_coverage",
-                 "semdedup_keep_one", "ann_ivf_topk",
-                 "q1_filter_project_sort", "q8_multi_join",
-                 "percentile_sketch", "near_dup_pagerank"):
-        assert names.index(must) < 50, must
-    # the r15 spill: the 28 youngest r11-stale ops sit past the window
-    for late in ("sessionize", "text_stats", "token_counts",
+    assert len(_R16_FRONT) == 50
+    assert names[:50] == _R16_FRONT
+    # the never-checked key leads (invariant 1)
+    assert names[0] == "shard_apply_compaction"
+    # every r11-stale op made the window
+    for must in ("sessionize", "text_stats", "token_counts",
                  "unigram_surprisal", "contamination_overlap"):
+        assert names.index(must) < 50, must
+    # the spill: the 28 youngest r12-stale ops sit past the window
+    for late in ("minhash_jaccard_estimate", "q20_customer_deciles",
+                 "curation_funnel"):
         assert names.index(late) >= 50, late
     # the r13 bisection keys were deleted in r14 (the decimal verdict
     # landed), along with the historical merged-away keys

@@ -5,8 +5,6 @@ from __future__ import annotations
 from catalyst_spark.parsers import parse_graphite
 from catalyst_spark.store import fetch, latest_per_series, read_store, write_store
 
-NOW_US = 1_700_000_000_000_000
-
 
 def _ingest(spark, tmp_path):
     lines = [
@@ -17,7 +15,7 @@ def _ingest(spark, tmp_path):
     ]
     df = spark.createDataFrame([(l,) for l in lines], "line string")
     path = str(tmp_path / "store")
-    write_store(parse_graphite(df, now_us=NOW_US), path, mode="overwrite")
+    write_store(parse_graphite(df), path, mode="overwrite")
     return path
 
 
@@ -36,7 +34,7 @@ def test_layout_and_fetch(spark, tmp_path):
 def test_write_store_drops_error_rows(spark, tmp_path):
     lines = ["cpu.load 0.5 1546420308", "badline", "mem.free 2048 1546420308"]
     df = spark.createDataFrame([(l,) for l in lines], "line string")
-    parsed = parse_graphite(df, now_us=NOW_US)
+    parsed = parse_graphite(df)
     assert parsed.where("parse_error IS NOT NULL").count() == 1
     path = str(tmp_path / "store")
     write_store(parsed, path, mode="overwrite")
@@ -74,7 +72,7 @@ def test_compact_store_reduces_files(spark, tmp_path):
             (f"cpu.load;host=h{i} {chunk}.{i} 1546420308",) for i in range(6)
         ]
         df = spark.createDataFrame(lines, "line string")
-        write_store(_pg(df, now_us=NOW_US), src)
+        write_store(_pg(df), src)
     dest = str(tmp_path / "store_compact")
     compact_store(spark, src, dest)
 

@@ -17,8 +17,6 @@ from catalyst_spark.streaming import ingest_stream, start_store_writer, stream_l
 from catalyst_spark.streaming.ingest import graphite_tcp_ingest, start_warp_forwarder
 from catalyst_spark.sinks import PerTokenWarpSink, WarpHTTPSink
 
-NOW_US = 1_700_000_000_000_000
-
 
 @pytest.fixture
 def graphite_dir(tmp_path):
@@ -33,7 +31,7 @@ def graphite_dir(tmp_path):
 
 
 def test_stream_to_store(spark, graphite_dir, tmp_path):
-    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
+    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite")
     q = start_store_writer(gts, str(tmp_path / "store"), str(tmp_path / "ckpt"))
     q.processAllAvailable()
     q.stop()
@@ -71,7 +69,7 @@ def test_stream_to_warp_forwarder(spark, graphite_dir, tmp_path):
             return 200, ""
 
     sink = WarpHTTPSink("http://w10", "TOK", transport=FileTransport(out_file))
-    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
+    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite")
     q = start_warp_forwarder(gts, sink, str(tmp_path / "ckpt2"))
     q.processAllAvailable()
     q.stop()
@@ -82,7 +80,7 @@ def test_stream_to_warp_forwarder(spark, graphite_dir, tmp_path):
 
 
 def test_dry_run_console(spark, graphite_dir, tmp_path, capsys):
-    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
+    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite")
     q = start_warp_forwarder(gts, None, str(tmp_path / "ckpt3"))
     q.processAllAvailable()
     q.stop()
@@ -105,7 +103,7 @@ def test_access_log_audit_rows(spark, graphite_dir, tmp_path):
     listener = AccessLogListener()
     spark.streams.addListener(listener.as_listener())
     log = AccessLog(spark, str(tmp_path / "audit"), source_id="10.0.0.1")
-    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite", now_us=NOW_US)
+    gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite")
     q = start_warp_forwarder(
         gts, None, str(tmp_path / "ckpt_audit"),
         access_log=log, protocol="graphite",
@@ -192,7 +190,7 @@ def test_graphite_tcp_socket_end_to_end(spark, tmp_path):
                 f.write(headers["X-Warp10-Token"].encode() + b">" + body)
             return 200, ""
 
-    gts = graphite_tcp_ingest(spark, "127.0.0.1", server.port, now_us=NOW_US)
+    gts = graphite_tcp_ingest(spark, "127.0.0.1", server.port)
     sink = PerTokenWarpSink("http://w10", transport=FileTransport(out_file))
     q = start_warp_forwarder(gts, sink, str(tmp_path / "ckpt_tcp"))
     try:
@@ -234,7 +232,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     (src / "b1.txt").write_text("m.one 1.0 1546420308\nm.two 2.0 1546420308\n")
     gts = ingest_stream(stream_lines(spark, str(src)), "graphite",
-                        parse_hierarchy=False, now_us=NOW_US)
+                        parse_hierarchy=False)
     q = start_store_writer(gts, store, ckpt)
     q.processAllAvailable(); q.stop()
     assert spark.read.parquet(store).count() == 2
@@ -242,12 +240,95 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     # new data arrives while the stream is down; restart from checkpoint
     (src / "b2.txt").write_text("m.three 3.0 1546420309\n")
     gts2 = ingest_stream(stream_lines(spark, str(src)), "graphite",
-                         parse_hierarchy=False, now_us=NOW_US)
+                         parse_hierarchy=False)
     q2 = start_store_writer(gts2, store, ckpt)
     q2.processAllAvailable(); q2.stop()
     rows = spark.read.parquet(store).select("name", "value_d").collect()
     assert sorted((r["name"], r["value_d"]) for r in rows) == [
         ("m.one", 1.0), ("m.three", 3.0), ("m.two", 2.0)]
+
+
+# ---------------------------------------------------------------------------
+# the ingest clock: "now" is the micro-batch's timestamp
+# ---------------------------------------------------------------------------
+
+def test_now_moves_between_micro_batches(spark, tmp_path):
+    """Lines without a timestamp take the micro-batch's clock, not the
+    time the stream was built: two files processed as two micro-batches
+    at least 50 ms apart get two different ts values, each inside the
+    test's wall-clock window."""
+    src = tmp_path / "in_now"; src.mkdir()
+    store = str(tmp_path / "store_now")
+    t0_us = int(time.time() * 1000) * 1000  # batch timestamps are ms
+    gts = ingest_stream(stream_lines(spark, str(src)), "graphite",
+                        parse_hierarchy=False)
+    q = start_store_writer(gts, store, str(tmp_path / "ckpt_now"))
+    try:
+        (src / "b1.txt").write_text("now.first 1\n")
+        q.processAllAvailable()
+        time.sleep(0.1)
+        (src / "b2.txt").write_text("now.second 2\n")
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    t1_us = int(time.time() * 1_000_000)
+    ts = {r["name"]: r["ts"] for r in spark.read.parquet(store).collect()}
+    assert set(ts) == {"now.first", "now.second"}
+    assert ts["now.second"] - ts["now.first"] >= 50_000
+    assert all(t0_us <= t <= t1_us for t in ts.values()), (t0_us, ts, t1_us)
+
+
+def test_replayed_epoch_sends_identical_body(spark, tmp_path):
+    """A failed epoch is replayed whole from the checkpoint, and the
+    replay keeps the epoch's "now": the timestamp-less lines POST the
+    same bytes again. The stream is rebuilt for the restart, as a new
+    process would."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    class FailFirstTransport:
+        """Picklable, file-backed Warp 10 stand-in: records every POST
+        body (one numbered file each) and answers the first POST with a
+        500 and a Warp 10 error body, every later one with 200."""
+
+        def __init__(self, path):
+            self.path = str(path)
+
+        def __call__(self, url, headers, body):
+            n = len(os.listdir(self.path))
+            with open(os.path.join(self.path, f"{n:04d}.body"), "xb") as f:
+                f.write(body)
+            if n == 0:
+                return 500, ("<html><body><h2>HTTP ERROR 500</h2><pre>"
+                             "io.warp10.continuum.store.StoreException"
+                             "</pre></body></html>")
+            return 200, ""
+
+    src = tmp_path / "in_replay"; src.mkdir()
+    (src / "b1.txt").write_text("replay.a 1\nreplay.b 2.5\n")
+    posts = tmp_path / "posts"; posts.mkdir()
+    transport = FailFirstTransport(posts)
+    ckpt = str(tmp_path / "ckpt_replay")
+
+    def start():
+        gts = ingest_stream(stream_lines(spark, str(src)), "graphite")
+        sink = WarpHTTPSink("http://w10", "TOK", transport=transport)
+        return start_warp_forwarder(gts, sink, ckpt)
+
+    q = start()
+    with pytest.raises(StreamingQueryException, match="StoreException"):
+        q.processAllAvailable()
+    q.stop()
+    time.sleep(0.1)  # a rebuilt stream would read a later wall clock
+    q2 = start()
+    try:
+        q2.processAllAvailable()
+    finally:
+        q2.stop()
+    first, replay = [p.read_bytes() for p in sorted(posts.iterdir())]
+    assert b"replay.a{0=replay,1=a} 1\r\n" in first
+    assert replay == first
 
 
 class TaggingTCPFront:
@@ -390,7 +471,7 @@ def test_graphite_tcp_framed_socket_end_to_end(spark, tmp_path):
         "cast(split_part(line, '\t', 2) as long) as line_seq",
         "split_part(line, '\t', 3) as line",
     )
-    gts = graphite_tcp_ingest_framed(tagged, now_us=NOW_US)
+    gts = graphite_tcp_ingest_framed(tagged)
     store = tmp_path / "framed_store"
     q = start_store_writer(gts, str(store), str(tmp_path / "ckpt_framed"))
     try:
