@@ -19,4 +19,8 @@ those capabilities Spark-first:
 - ``catalyst_spark.control``   — token extraction/ban semantics (ref core/auth.go)
 """
 
+from catalyst_spark import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install()
