@@ -16,7 +16,8 @@ those capabilities Spark-first:
 - ``catalyst_spark.sinks``     — Warp HTTP forwarder (foreachBatch), error
   taxonomy (ref core/warp.go:280-421), dry-run sink
 - ``catalyst_spark.streaming`` — Structured Streaming ingestion wiring
-- ``catalyst_spark.control``   — token extraction/ban semantics (ref core/auth.go)
+- ``catalyst_spark.control``   — ban registry, error taxonomy, txn ids,
+  access log (ref services/token/auth.go, core/warp.go)
 """
 
 from catalyst_spark import zipcache

@@ -1,15 +1,9 @@
-"""Control plane: token extraction, ban registry, error taxonomy, txn
-ids, access log (SURVEY §2.5 C1-C7)."""
+"""Control plane: ban registry, error taxonomy, txn ids, access log,
+metering (SURVEY §2.5 C2-C8)."""
 
 from catalyst_spark.control.errors import classify_error, classify_error_col
 from catalyst_spark.control.access_log import AccessLog, AccessLogListener
-from catalyst_spark.control.auth import (
-    BanRegistry,
-    extract_token,
-    filter_banned,
-    txn_id,
-    txn_id_col,
-)
+from catalyst_spark.control.auth import BanRegistry, filter_banned, txn_id
 
 __all__ = [
     "AccessLog",
@@ -17,8 +11,6 @@ __all__ = [
     "classify_error",
     "classify_error_col",
     "BanRegistry",
-    "extract_token",
     "filter_banned",
     "txn_id",
-    "txn_id_col",
 ]

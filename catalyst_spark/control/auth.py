@@ -1,10 +1,6 @@
-"""Token extraction (C1), ban registry (C2/C3), txn ids (C6).
+"""Ban registry (C2/C3), txn ids (C6).
 
 Reference behavior:
-- token priority chain (ref core/auth.go:13-62): X-Warp10-Token ->
-  X-Metrics-Token -> X-CityzenData-Token -> Basic auth (the PASSWORD
-  half; username ignored — quirk A.11) -> Bearer -> ?p= query/form
-  param as last resort.
 - ban registry (ref services/token/auth.go:27-40): a set; banned
   requests are refused 401 after a tarpit sleep (middlewares/auth.go:
   30-53) — the tarpit is an ingest-shim concern; in-engine the ban set
@@ -16,39 +12,10 @@ Reference behavior:
 
 from __future__ import annotations
 
-import base64
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def extract_token(headers: dict[str, str], query: dict[str, str] | None = None) -> str:
-    """Priority chain of core/auth.go:13-62. Raises ValueError like the
-    reference returns an error (the shim answers 401)."""
-    hdr = {k.lower(): v for k, v in headers.items()}
-    for h in ("x-warp10-token", "x-metrics-token", "x-cityzendata-token"):
-        if hdr.get(h):
-            return hdr[h]
-    auth = hdr.get("authorization", "")
-    parts = auth.split(" ", 1)
-    if len(parts) != 2:
-        raise ValueError("missing basic auth bearer")
-    scheme, payload = parts[0].lower(), parts[1]
-    if scheme == "basic":
-        try:
-            decoded = base64.b64decode(payload).decode()
-        except Exception as exc:
-            raise ValueError("bad basic auth bearer") from exc
-        pair = decoded.split(":", 1)
-        if len(pair) != 2:
-            raise ValueError("unauthorized")
-        return pair[1]  # password half; username ignored (quirk A.11)
-    if scheme == "bearer":
-        return payload
-    if query and query.get("p"):
-        return query["p"]
-    raise ValueError("invalid Authorization header")
 
 
 class BanRegistry:
@@ -100,6 +67,3 @@ def txn_id(xff: str, start_ns: int) -> str:
     """sha256(X-Forwarded-For + start-nanos) — ref middlewares/logger.go:56-62."""
     return hashlib.sha256(f"{xff}{start_ns}".encode()).hexdigest()
 
-
-def txn_id_col(xff: Column, start_ns: Column) -> Column:
-    return F.sha2(F.concat(xff, start_ns.cast("string")), 256)

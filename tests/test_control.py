@@ -1,17 +1,13 @@
-"""Control plane: error taxonomy (C4/C5), token extraction (C1), ban
-registry (C2/C3), txn ids (C6)."""
+"""Control plane: error taxonomy (C4/C5), ban registry (C2/C3), txn ids
+(C6)."""
 
 from __future__ import annotations
 
-import base64
 import hashlib
-
-import pytest
 
 from catalyst_spark.control import (
     BanRegistry,
     classify_error,
-    extract_token,
     filter_banned,
     txn_id,
 )
@@ -83,27 +79,6 @@ class TestClassify:
             assert row["s"] == c.http_status, body
 
 
-class TestToken:
-    def test_priority_chain(self):
-        assert extract_token({"X-Warp10-Token": "a", "X-Metrics-Token": "b"}) == "a"
-        assert extract_token({"X-Metrics-Token": "b"}) == "b"
-        assert extract_token({"X-CityzenData-Token": "c"}) == "c"
-
-    def test_basic_uses_password_half(self):
-        cred = base64.b64encode(b"user:secret").decode()
-        assert extract_token({"Authorization": f"Basic {cred}"}) == "secret"
-
-    def test_bearer_and_query_fallback(self):
-        assert extract_token({"Authorization": "Bearer tok"}) == "tok"
-        assert extract_token({"Authorization": "Digest zz"}, {"p": "qq"}) == "qq"
-
-    def test_errors(self):
-        with pytest.raises(ValueError):
-            extract_token({})
-        with pytest.raises(ValueError):
-            extract_token({"Authorization": "Basic !!!notb64"})
-
-
 class TestBan:
     def test_registry_and_filter(self, spark):
         reg = BanRegistry()
@@ -124,144 +99,3 @@ class TestBan:
 def test_txn_id():
     assert txn_id("1.2.3.4", 123) == hashlib.sha256(b"1.2.3.4123").hexdigest()
 
-
-class TestRoutes:
-    """S1/S4/C2/C10 shim decisions (cmd/root.go:116-146,
-    core/handler.go:130-133, catalyser/influxdb.go:52-57,
-    middlewares/auth.go:30-53)."""
-
-    def test_route_table(self):
-        from catalyst_spark.control.routes import route
-
-        assert route("/influxdb/write?precision=s".split("?")[0]) == "influxdb"
-        assert route("/influxdb/ping") == "influxdb_ping"
-        assert route("/influxdb") == "influxdb"
-        assert route("/prometheus/remote_write") == "remote_write"
-        assert route("/prometheus/job/node") == "prometheus"
-        assert route("/opentsdb/api/put") == "opentsdb"
-        assert route("/graphite/api/v1/sink") == "graphite"
-        assert route("/warp/api/v0/update") == "warp"
-        assert route("/warp/api/v0/delete") == "reverse_delete"
-        assert route("/warp/api/v0/exec") == "reverse"
-        assert route("/warp") == "warp"
-        assert route("/nope") is None
-
-    def test_method_allow_list(self):
-        from catalyst_spark.control.routes import check_method
-
-        assert check_method("/influxdb/write", "POST") is None
-        assert check_method("/influxdb/write", "GET") == 405
-        assert check_method("/prometheus/x/y", "PUT") is None
-        assert check_method("/prometheus/x/y", "DELETE") == 405
-        assert check_method("/opentsdb", "post") is None  # case-insensitive
-        # K2 passthrough accepts any verb (reverse.go forwards verbatim)
-        assert check_method("/warp/api/v0/exec", "GET") is None
-        assert check_method("/warp/api/v0/delete", "DELETE") is None
-
-    def test_ping(self):
-        from catalyst_spark.control.routes import ping_response
-
-        status, headers = ping_response("abc123")
-        assert status == 204
-        assert headers["X-Influxdb-Version"] == "1.4.x"
-        assert headers["Request-Id"] == "abc123"
-
-    def test_tarpit(self):
-        from catalyst_spark.control.routes import tarpit_check
-
-        reg = BanRegistry({"bad"})
-        slept = []
-        assert tarpit_check(reg, None, sleeper=slept.append) == 401
-        assert slept == []  # no token -> immediate 401, no tarpit
-        assert tarpit_check(reg, "bad", 3000, sleeper=slept.append) == 401
-        assert slept == [3.0]  # banned -> 3 s tarpit then 401
-        assert tarpit_check(reg, "good", sleeper=slept.append) is None
-        assert len(slept) == 1
-
-
-class TestReverseProxy:
-    """K2 passthrough parity (middlewares/reverse.go:18-66)."""
-
-    @staticmethod
-    def _transport_recording(calls, status=200,
-                             resp_headers=None, body=b"ok"):
-        def t(method, url, headers, req_body):
-            calls.append((method, url, headers, req_body))
-            return status, dict(resp_headers or {}), body
-        return t
-
-    def test_wildcard_join_and_query(self):
-        from catalyst_spark.control.reverse import reverse
-
-        calls = []
-        r = reverse("http://w10/api/v0", "fetch", method="GET",
-                    query="selector=~cpu{}&now=123",
-                    headers={"X-Warp10-Token": "tok"},
-                    transport=self._transport_recording(calls))
-        (method, url, headers, body), = calls
-        assert url == "http://w10/api/v0/fetch?selector=~cpu{}&now=123"
-        assert method == "GET" and body is None
-        assert headers == {"X-Warp10-Token": "tok"}  # forwarded verbatim
-        assert r.status == 200 and r.body == b"ok"
-
-    def test_fixed_path_overrides_wildcard(self):
-        from catalyst_spark.control.reverse import reverse
-
-        calls = []
-        reverse("http://w10d/api/v0", "ignored", fixed_path="/delete",
-                method="POST", query="deleteall=true",
-                transport=self._transport_recording(calls))
-        assert calls[0][1] == "http://w10d/api/v0/delete?deleteall=true"
-
-    def test_only_xwarp_headers_copied_back(self):
-        from catalyst_spark.control.reverse import reverse
-
-        r = reverse("http://w10/api/v0", "fetch",
-                    transport=self._transport_recording(
-                        [], resp_headers={
-                            "X-Warp10-Elapsed": "12",
-                            "X-Warp10-Fetched": "40",
-                            "Server": "warp",
-                            "Content-Type": "text/plain",
-                        }))
-        assert r.headers == {"X-Warp10-Elapsed": "12",
-                             "X-Warp10-Fetched": "40"}
-        assert r.content_type == "text/plain"
-
-    def test_transport_error_is_502_no_content(self):
-        from catalyst_spark.control.reverse import reverse
-
-        def boom(method, url, headers, body):
-            raise OSError("connection refused")
-
-        r = reverse("http://w10/api/v0", "fetch", transport=boom)
-        assert r.status == 502 and r.body == b""
-
-    def test_backend_error_status_streams_through(self):
-        from catalyst_spark.control.reverse import reverse
-
-        r = reverse("http://w10/api/v0", "exec",
-                    transport=self._transport_recording(
-                        [], status=403, body=b"forbidden"))
-        assert r.status == 403 and r.body == b"forbidden"
-
-    def test_route_level_dispatch(self):
-        from catalyst_spark.config import Config
-        from catalyst_spark.control.reverse import reverse_for_route
-        from catalyst_spark.control.routes import route
-
-        cfg = Config(warp_endpoint="http://a", warp_endpoint_delete="http://b")
-        calls = []
-        t = self._transport_recording(calls)
-
-        p = "/warp/api/v0/fetch"
-        assert route(p) == "reverse"
-        reverse_for_route("reverse", p, cfg, query="q=1", transport=t)
-        assert calls[-1][1] == "http://a/api/v0/fetch?q=1"
-
-        p = "/warp/api/v0/delete"
-        assert route(p) == "reverse_delete"
-        reverse_for_route("reverse_delete", p, cfg, method="POST",
-                          query="deleteall=true", transport=t)
-        assert calls[-1][1] == "http://b/api/v0/delete?deleteall=true"
-        assert calls[-1][0] == "POST"
