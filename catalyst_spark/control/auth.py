@@ -3,8 +3,8 @@
 Reference behavior:
 - ban registry (ref services/token/auth.go:27-40): a set; banned
   requests are refused 401 after a tarpit sleep (middlewares/auth.go:
-  30-53) — the tarpit is an ingest-shim concern; in-engine the ban set
-  applies as a broadcast anti-join over the token column.
+  30-53). The engine has no request front, so there is no tarpit:
+  the ban set applies as a broadcast anti-join over the token column.
 - auto-ban (C3, ref core/handler.go:213-250): token-typed backend
   errors add the token to the set.
 - txn id (C6, ref middlewares/logger.go:56-62): sha256(XFF + start-ns).

@@ -1407,9 +1407,8 @@ def phash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     can derive from `documents`, and value-checked against a DuckDB
     BRUTE-FORCE bit_count(xor) over ALL pairs. Any pair the banded
     join missed (or invented) is a hash mismatch, so the completeness
-    guarantee is value-proven, not just property-tested; the pixel
-    decode stays pytest-verified (no image codec exists in DuckDB, by
-    nature).
+    guarantee is value-proven, not just property-tested. No image is
+    decoded: the hashes are synthetic, standing in for pHashes.
 
     The synthetic table plants realistic near-dup structure: docs in
     groups of 8 share a group base hash (md5-derived, 60-bit so every
@@ -1470,11 +1469,9 @@ def audio_fp_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive from `documents`, and value-checked against a DuckDB
     BRUTE-FORCE bit_count(xor) over ALL pairs: any pair the banded
     join missed (or invented) is a hash mismatch, so the completeness
-    guarantee is value-proven (the phash_dup_pairs argument). The
-    REAL PCM fingerprint (multimodal.audio_fingerprint: stdlib WAV
-    decode -> 64-window integer energy contour -> 63 comparison bits)
-    stays pytest-verified on synthesized WAVs — no audio codec exists
-    in DuckDB, by nature.
+    guarantee is value-proven (the phash_dup_pairs argument). No
+    audio is decoded: the fingerprints are synthetic, standing in for
+    audio fingerprints.
 
     The synthetic table plants its own near-dup structure, distinct
     from the pHash table's: docs in groups of 6 share an md5-derived
@@ -1518,10 +1515,9 @@ def video_frame_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs) + the exact integer Jaccard >= 0.5 verify 2|I| >= |U| —
     run on a deterministic frame-hash-set table both engines derive
     from `documents`, value-checked against a DuckDB BRUTE-FORCE
-    list_intersect over ALL id-ordered pairs. The REAL frame pipeline
-    (multimodal.video_frame_hashes: sample_frames' BMFF sample-table
-    reads -> per-frame md5 -> set) stays pytest-verified on
-    constructed MP4s, DuckDB having no container parser by nature.
+    list_intersect over ALL id-ordered pairs. No video is decoded:
+    the frame hash sets are synthetic, standing in for the hashes of
+    sampled frames.
 
     The synthetic table plants straddling overlap: docs in groups of 4
     draw 4-frame windows from a shared 13-frame pool at offsets

@@ -348,8 +348,8 @@ def q20_customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (r14 rewrite): the original ranked every customer through
     ONE unpartitioned ntile window — a single-task global sort, the
     last true WindowExec funnel in the registry (fine at sf0.1,
-    serialized at 10^9 customers). Now the multimodal.balance_by_size
-    two-phase pattern: bucket by the spend high bits (value-bounded,
+    serialized at 10^9 customers). Now a two-phase global rank:
+    bucket by the spend high bits (value-bounded,
     ~600 buckets at ANY scale since spend_cents div 2^20 is bounded by
     the price schema), rank WITHIN buckets in parallel, add each
     bucket's broadcast cumulative offset — global rank exact because

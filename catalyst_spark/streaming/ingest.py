@@ -133,8 +133,9 @@ def start_warp_forwarder(
     protocol: str = "",
 ):
     """GTS stream -> Sensision -> Warp POSTs (or console when sink is
-    None, K3). Bad rows are skipped permissively, mirroring the TCP path —
-    per-request failfast belongs to the HTTP shim, not the stream.
+    None, K3). Bad rows are skipped permissively, mirroring the TCP path.
+    Failfast is not applied: a micro-batch carries no request boundary
+    to fail, so per-request failfast needs the request on the row.
 
     A PerTokenWarpSink (S3 TCP egress) receives (token, sensision) rows
     and posts one update sequence per token group.
