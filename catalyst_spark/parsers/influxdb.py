@@ -247,15 +247,22 @@ _ERROR_ROW = {
 # with the tokenizer: no '"' or '\' anywhere, every tag has '=',
 # every field value is a plain int/float/bool literal (no strings,
 # no inf/nan — those fall back), optional integer timestamp.
-_BOOL_RE = "(t|T|f|F|true|True|TRUE|false|False|FALSE)"
+_BOOL_RE = "(?:t|T|f|F|true|True|TRUE|false|False|FALSE)"
 _INT_RE = r"[+-]?[0-9]+i"
-_FLT_RE = r"[+-]?([0-9]+(\.[0-9]*)?|\.[0-9]+)([eE][+-]?[0-9]+)?"
-_VAL_RE = f"({_BOOL_RE}|{_INT_RE}|{_FLT_RE})"
+_FLT_RE = r"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+_VAL_RE = f"(?:{_BOOL_RE}|{_INT_RE}|{_FLT_RE})"
 _KEY_RE = r'[^,="\\ ]+'
 _TAG_RE = f',{_KEY_RE}=[^,="\\\\ ]*'
-_FIELD_RE = f"{_KEY_RE}={_VAL_RE}"
+# Each value must end where the field does, so a repetition never needs
+# to backtrack into an earlier one: the tag and field repetitions are
+# possessive (*+). java.util.regex recurses once per iteration of a
+# greedy group that holds an alternation; a wide line (a few hundred
+# fields) overflows the executor thread's stack and ends the JVM. The
+# groups are non-capturing: CPython 3.11's re raises SystemError on a
+# capturing group inside a possessive repetition.
+_FIELD_RE = f"{_KEY_RE}={_VAL_RE}(?=[, ]|$)"
 SIMPLE_LINE_RE = (
-    f"^{_KEY_RE}({_TAG_RE})* {_FIELD_RE}(,{_FIELD_RE})*( [+-]?[0-9]+)?$"
+    f"^{_KEY_RE}(?:{_TAG_RE})*+ {_FIELD_RE}(?:,{_FIELD_RE})*+(?: [+-]?[0-9]+)?$"
 )
 
 _TRUE_LIST = ", ".join(f"'{t}'" for t in _BOOL_TRUE)

@@ -4,10 +4,11 @@ Reference semantics (ref catalyser/warp.go:15-49): input lines are
 re-joined with CRLF and flushed to the backend every 27 lines plus a
 final partial batch. No parsing, no typing.
 
-In the DataFrame model the passthrough is the identity transform; the
-27-line chunking is a sink concern (sinks.warp_sink.chunk_payloads and
-its PASSTHROUGH_FLUSH_LINES, shared by this path and the
-Sensision-encoded paths).
+In the DataFrame model the passthrough is the identity transform and
+the flush is a sink concern: WarpHTTPSink.foreach_batch posts one body
+per Arrow record batch, as for the Sensision-encoded paths. Only the
+Graphite TCP egress (sinks.warp_sink.chunk_payloads) keeps the 27-line
+flush.
 """
 
 from __future__ import annotations

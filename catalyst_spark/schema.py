@@ -35,9 +35,9 @@ GTS_SCHEMA = T.StructType(
 )
 
 # Parsers append a per-row error column: null on success, else the
-# reference's error message (the reference aborts whole requests on
+# reference's error message. The reference aborts whole requests on the
 # first error for Influx / Graphite-HTTP and skips bad lines on
-# Graphite-TCP — callers pick the policy; see failfast()/permissive()).
+# Graphite-TCP; the engine skips them everywhere (permissive()).
 PARSE_ERROR_COL = "parse_error"
 
 GTS_WITH_ERROR_SCHEMA = T.StructType(
@@ -82,16 +82,6 @@ def gts_columns(
             PARSE_ERROR_COL
         ),
     ]
-
-
-def failfast(df: DataFrame) -> DataFrame:
-    """Reference semantics for Influx / Graphite-HTTP: first parse error
-    aborts the request (ref catalyser/influxdb.go:36, graphite.go:55).
-    Raises if any row failed; returns the clean rows otherwise."""
-    bad = df.where(F.col(PARSE_ERROR_COL).isNotNull()).select(PARSE_ERROR_COL).take(1)
-    if bad:
-        raise ValueError(f"parse error: {bad[0][PARSE_ERROR_COL]}")
-    return df.drop(PARSE_ERROR_COL)
 
 
 def permissive(df: DataFrame) -> DataFrame:

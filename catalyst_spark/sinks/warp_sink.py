@@ -4,16 +4,25 @@ Reference behavior reproduced (ref core/warp.go:116-277, cmd/root.go:46-52):
 - POST <endpoint>/api/v0/update, headers X-Warp10-Token,
   Content-Type: text/plain, optional X-Warp10-Now passthrough (quirk
   A.10), Txn id
-- body = Sensision lines; the passthrough path flushes every 27 lines
-  (ref catalyser/warp.go:28); the streaming-pipe behavior maps to
-  chunked POSTs per partition
+- body = Sensision lines, each ended by CRLF. The reference streams one
+  POST per request from one process; WarpHTTPSink.foreach_batch posts
+  from the driver too: it collects the micro-batch as Arrow and sends
+  one POST per record batch (at most
+  spark.sql.execution.arrow.maxRecordsPerBatch lines, 10,000 by
+  default), so egress starts no Python worker task. The driver holds
+  the batch's encoded lines while it posts (about 70 B per line)
 - retry-once on connection failure with a full-body replay buffer
   (ref core/warp.go:180,202-217,260)
 - response bodies classified through the C4 taxonomy; token-typed
-  errors auto-ban (C3)
-- no connection pooling: every POST (one per 27-line chunk) opens
-  a new urllib connection (the reference pools 2000 idle conns
-  driver-side)
+  errors auto-ban (C3). Both happen on the driver, so WarpSendError
+  reaches the foreachBatch caller and the ban lands in the caller's
+  BanRegistry
+- no connection pooling: every POST opens a new urllib connection (the
+  reference pools 2000 idle conns driver-side)
+
+The Graphite TCP egress (PerTokenWarpSink, send_lines) keeps the
+passthrough's 27-line flush (ref catalyser/warp.go:28) and posts from
+the executors.
 
 The transport is injectable so tests (and dry runs) observe exact
 payloads without a network. The default transport uses urllib (no
@@ -46,13 +55,17 @@ def _urllib_transport(url: str, headers: dict[str, str], body: bytes) -> tuple[i
         return e.code, e.read().decode(errors="replace")
 
 
+def _crlf(line: str) -> str:
+    return line if line.endswith("\r\n") else line + "\r\n"
+
+
 def chunk_payloads(lines: Iterable[str]) -> Iterator[bytes]:
     """27-line flush batching (T12). Lines may or may not carry their
     CRLF terminator; the payload always ends each line with CRLF, byte-
     identical to catalyser/warp.go:27-35."""
     buf: list[str] = []
     for line in lines:
-        buf.append(line if line.endswith("\r\n") else line + "\r\n")
+        buf.append(_crlf(line))
         if len(buf) >= PASSTHROUGH_FLUSH_LINES:
             yield "".join(buf).encode()
             buf = []
@@ -119,15 +132,15 @@ class WarpHTTPSink:
         return n
 
     def foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
-        """writeStream.foreachBatch hook. Collect per-partition line
-        iterators driver-side is wrong at scale; instead each partition
-        posts its own chunks, each on a new connection."""
-        sink = self
-
-        def send_partition(rows) -> None:
-            sink.send_lines(r["sensision"] for r in rows)
-
-        df.select("sensision").foreachPartition(send_partition)
+        """writeStream.foreachBatch hook. The driver collects the batch's
+        lines as Arrow and POSTs each non-empty record batch as one body.
+        The driver holds the whole encoded batch while it posts (about
+        70 B per line), and no line is posted before the collect ends,
+        which delays the first ack of a large batch. A refused POST
+        raises WarpSendError here, on the driver, after any auto-ban."""
+        for batch in df.select("sensision").toArrow().to_batches():
+            if batch.num_rows:
+                self._post("".join(map(_crlf, batch.column(0).to_pylist())).encode())
 
 
 class PerTokenWarpSink:

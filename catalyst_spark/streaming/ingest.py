@@ -5,14 +5,21 @@ The reference's HTTP/TCP listeners map to Structured Streaming sources
 The parsers are stateless column transforms, so batch and streaming
 share them verbatim (SURVEY §2.2); this module only wires:
 
-  readStream(text) -> parse_<protocol> -> permissive/failfast
+  readStream(text) -> parse_<protocol> -> permissive
      -> encode_sensision -> foreachBatch WarpHTTPSink   (egress, K1)
      -> partitioned parquet store                        (query surface)
+
+Egress: WarpHTTPSink.foreach_batch collects each micro-batch's lines
+to the driver as Arrow and POSTs one body per record batch (at most
+spark.sql.execution.arrow.maxRecordsPerBatch lines), so the forwarder
+starts no Python worker task of its own. A refused POST raises
+WarpSendError in the forwarder's batch function, with the taxonomy
+status that the access log records.
 
 Delivery: the store writer is exactly-once (Spark's file sink commits
 each epoch through its metadata log, keyed by the checkpoint). The Warp
 forwarder is at-least-once: foreachBatch + checkpoint replays a failed
-epoch whole, so partitions that had already posted post again.
+epoch whole, so record batches that had already posted post again.
 
 Ingest "now": a datapoint without a timestamp is stamped from
 schema.ingest_now_us(), which each micro-batch reads as its batch

@@ -440,6 +440,60 @@ class TestInflux:
         )
         assert got == expected
 
+    # every Influx line of this class, the fast-path negatives and the
+    # edge cases of the possessive router (a bool that starts with a
+    # shorter bool, a value that runs on, an empty tag value)
+    ROUTER_LINES = SIMPLE_CORPUS + [
+        's a="x y"', r"we\,ather v=1", "m v=", "m v=abc", "m v=inf", "",
+        "# comment",
+        "cpu_load_short,host=server01,region=us-west value=0.64 1434055562000000000",
+        'system,client=curanobis,host=staging.curanobis.com '
+        'uptime_format="59 days, 18:23" 1515597480000000000',
+        "weather,location=us-midwest temperature=82,bug_concentration=98 "
+        "1465839830100400200",
+        'weather,location=us-midwest temperature=82,bug_concentration=98,'
+        'test="the answer is equal to 42 with a ," 1465839830100400200',
+        r"we\,ather\ x,loc\ a=us\=mid v=1 1000", "cpu value=1 1434055562",
+        "no_fields_here",
+        "m f=1,g=true", "m f=1,g=t", "m f=true,g=1", "m f=truex", "m f=tr",
+        "m f=1i2", "m f=1.5e", "m,a= f=1", "m,a=b,c f=1", "m f=1,", "m f=1 ",
+        "m  f=1", "m f=1 12 13", "m f=FALSE,g=False,h=F 7", "m f=1e3i",
+    ]
+
+    def test_possessive_router_routes_like_the_backtracking_one(self, spark):
+        """SIMPLE_LINE_RE's possessive repetitions accept exactly the
+        lines the plain greedy regex accepted, in Python and in the JVM."""
+        from catalyst_spark.parsers.influxdb import (
+            _KEY_RE, _TAG_RE, _VAL_RE, SIMPLE_LINE_RE,
+        )
+        import re
+
+        field = f"{_KEY_RE}={_VAL_RE}"
+        greedy = f"^{_KEY_RE}({_TAG_RE})* {field}(,{field})*( [+-]?[0-9]+)?$"
+        corpus = self.ROUTER_LINES + self._random_simple_lines()
+        for line in corpus:
+            assert bool(re.match(SIMPLE_LINE_RE, line)) == bool(
+                re.match(greedy, line)), line
+        got = lines_df(spark, corpus).select(
+            "line", F.col("line").rlike(SIMPLE_LINE_RE).alias("new"),
+            F.col("line").rlike(greedy).alias("old")).collect()
+        assert [r["line"] for r in got if r["new"] != r["old"]] == []
+        assert sum(r["new"] for r in got) > len(self.SIMPLE_CORPUS)
+
+    def test_wide_line_parses(self, spark):
+        """A 20,000-field line takes the JVM fast path without
+        overflowing the executor's regex stack."""
+        from catalyst_spark.parsers.influxdb import SIMPLE_LINE_RE
+        import re
+
+        n = 20_000
+        line = "wide,host=a " + ",".join(f"f{i}={i}i" for i in range(n)) + " 1000"
+        assert re.match(SIMPLE_LINE_RE, line)
+        df = parse_influx(lines_df(spark, [line]))
+        got = df.agg(F.count("*").alias("n"), F.sum("value_l").alias("s"),
+                     F.count("parse_error").alias("e")).first()
+        assert (got["n"], got["s"], got["e"]) == (n, n * (n - 1) // 2, 0)
+
 
 # ---------------------------------------------------------------------------
 # Prometheus protobuf exposition (P3 protobuf variant)

@@ -1,4 +1,5 @@
-"""Warp sink (K1/K3/T12): chunking, headers, retry, auto-ban."""
+"""Warp sink (K1/K3/T12): chunking, headers, retry, auto-ban, and the
+shape of driver-side egress."""
 
 from __future__ import annotations
 
@@ -78,3 +79,50 @@ def test_mads_not_banned():
         sink.send_lines(["x"])
     assert ei.value.classified.error_type == "mads_exceeded"
     assert not reg.is_banned("TOK")
+
+
+def sensision_df(spark, lines):
+    return spark.createDataFrame([(l,) for l in lines], "sensision string")
+
+
+def test_foreach_batch_error_and_ban_reach_the_driver(spark):
+    reg = BanRegistry()
+    t = FakeTransport([(500, "io.warp10.script.WarpScriptException: Token Expired")])
+    sink = WarpHTTPSink("http://w10", "TOK", transport=t, ban_registry=reg)
+    with pytest.raises(WarpSendError) as ei:
+        sink.foreach_batch(sensision_df(spark, ["1// m{} 1\r\n"]), 0)
+    assert ei.value.classified.error_type == "expired_token"
+    assert reg.is_banned("TOK")
+
+
+def test_foreach_batch_empty_posts_nothing(spark):
+    t = FakeTransport([])
+    WarpHTTPSink("http://w10", "TOK", transport=t).foreach_batch(
+        sensision_df(spark, []), 0)
+    assert t.calls == []
+
+
+def test_foreach_batch_body_matches_chunk_payloads(spark):
+    lines = [f"{i}// m{{}} {i}" + ("\r\n" if i % 2 else "") for i in range(40)]
+    t = FakeTransport([(200, "")] * 40)
+    WarpHTTPSink("http://w10", "TOK", transport=t).foreach_batch(
+        sensision_df(spark, lines), 0)
+    assert b"".join(body for _, _, body in t.calls) == b"".join(chunk_payloads(lines))
+
+
+def test_foreach_batch_one_post_per_arrow_batch(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        lines = [f"{i}// m{{}} {i}\r\n" for i in range(25)]
+        t = FakeTransport([(200, "")] * 25)
+        WarpHTTPSink("http://w10", "TOK", transport=t).foreach_batch(
+            sensision_df(spark, lines).coalesce(1), 0)
+    finally:
+        spark.conf.set(key, old)
+    posted = [body.split(b"\r\n")[:-1] for _, _, body in t.calls]
+    assert len(posted) >= 3
+    assert all(1 <= len(p) <= 10 for p in posted)
+    assert sorted(ln for p in posted for ln in p) == sorted(
+        ln.rstrip("\r\n").encode() for ln in lines)

@@ -54,26 +54,13 @@ class CollectTransport:
 
 
 def test_stream_to_warp_forwarder(spark, graphite_dir, tmp_path):
-    # transport must be picklable for foreachPartition; collect via a
-    # local accumulator-style list won't survive pickling, so run the
-    # sink against a tmp file the fake transport appends to.
-    out_file = tmp_path / "posts.txt"
-
-    class FileTransport:
-        def __init__(self, path):
-            self.path = str(path)
-
-        def __call__(self, url, headers, body):
-            with open(self.path, "ab") as f:
-                f.write(body)
-            return 200, ""
-
-    sink = WarpHTTPSink("http://w10", "TOK", transport=FileTransport(out_file))
+    transport = CollectTransport()
+    sink = WarpHTTPSink("http://w10", "TOK", transport=transport)
     gts = ingest_stream(stream_lines(spark, graphite_dir), "graphite")
     q = start_warp_forwarder(gts, sink, str(tmp_path / "ckpt2"))
     q.processAllAvailable()
     q.stop()
-    sent = out_file.read_bytes().decode()
+    sent = b"".join(transport.payloads).decode()
     assert "servers.db01.cpu{0=servers,1=db01,2=cpu,dc=gra} 42\r\n" in sent
     assert "14.200000\r\n" in sent
     assert "badline" not in sent
@@ -288,7 +275,7 @@ def test_replayed_epoch_sends_identical_body(spark, tmp_path):
     from pyspark.errors import StreamingQueryException
 
     class FailFirstTransport:
-        """Picklable, file-backed Warp 10 stand-in: records every POST
+        """File-backed Warp 10 stand-in: records every POST
         body (one numbered file each) and answers the first POST with a
         500 and a Warp 10 error body, every later one with 200."""
 
@@ -513,9 +500,9 @@ def test_http_ingest_end_to_end(spark):
     """K1 driven over REAL HTTP (the HTTP mirror of the TCP socket
     test): a live localhost http.server plays the Warp 10 backend; an
     InfluxDB write goes parse_influx -> encode_sensision ->
-    WarpHTTPSink's per-partition POSTs (default urllib transport,
-    27-line CRLF chunks), and the backend must receive every line with
-    the write token in X-Warp10-Token."""
+    WarpHTTPSink's driver-side POSTs (default urllib transport, one
+    CRLF-ended body per Arrow record batch), and the backend must
+    receive every line with the write token in X-Warp10-Token."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -564,7 +551,7 @@ def test_http_ingest_end_to_end(spark):
                       for r in encoded.collect())
         assert len(want) == len(body_lines)
 
-        # --- real POST through the sink's per-partition path ---
+        # --- real POST through the sink's driver-side path ---
         sink = WarpHTTPSink(f"http://127.0.0.1:{port}", "tok-e2e")
         sink.foreach_batch(encoded, 0)
         assert sorted(store) == want          # backend got every line
