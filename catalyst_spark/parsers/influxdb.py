@@ -6,6 +6,10 @@ field=v[,field=v...] [timestamp]) with its escaping rules:
   '\\='; field string values are double-quoted with '\\"' and '\\\\'.
 - field value typing: "..." -> string; <int>i -> int64; t/T/true/True/
   TRUE (etc.) -> bool; else float64 (Go ParseFloat semantics).
+- number range: an integer outside int64 and a float that is not finite
+  (NaN, inf, or one that overflows, like 1e500) make the line an error
+  row, as Go's ParseInt/ParseFloat return ErrRange for them and the
+  line protocol has no NaN or Inf literal.
 - per-request precision (?precision=n|u|ms|s|m|h, default n) scales the
   trailing integer timestamp to ns; a missing timestamp takes ingest-now
   truncated to the precision (ref catalyser/influxdb.go:25-28,62). "Now"
@@ -31,6 +35,7 @@ GTS schema, so downstream is identical either way.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -146,13 +151,19 @@ def _scan_fields(line: str, pos: int) -> tuple[list[tuple[str, str]], int]:
     return fields, pos
 
 
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
 def _go_float(s: str) -> float:
     if "_" in s:  # Go ParseFloat rejects underscores in this position
         raise _ParseError("invalid number")
     try:
-        return float(s)
+        v = float(s)
     except ValueError as exc:
         raise _ParseError(str(exc)) from exc
+    if not math.isfinite(v):  # no NaN/Inf literal; overflow is ErrRange
+        raise _ParseError("float out of range")
+    return v
 
 
 def _typed_value(kind: str, raw: str):
@@ -164,9 +175,12 @@ def _typed_value(kind: str, raw: str):
         if "_" in body:
             raise _ParseError("invalid integer")
         try:
-            return None, int(body, 10), None, None, "long"
+            v = int(body, 10)
         except ValueError as exc:
             raise _ParseError(str(exc)) from exc
+        if not _INT64_MIN <= v <= _INT64_MAX:  # Go ParseInt's ErrRange
+            raise _ParseError("integer out of range")
+        return None, v, None, None, "long"
     if raw in _BOOL_TRUE:
         return None, None, True, None, "boolean"
     if raw in _BOOL_FALSE:
@@ -246,10 +260,14 @@ _ERROR_ROW = {
 # A line qualifies only if the column parser is guaranteed to agree
 # with the tokenizer: no '"' or '\' anywhere, every tag has '=',
 # every field value is a plain int/float/bool literal (no strings,
-# no inf/nan — those fall back), optional integer timestamp.
+# no inf/nan — those fall back), optional integer timestamp. The
+# number literals are bounded so that no cast can fail or overflow:
+# an integer of at most 18 digits fits int64, and a float with at most
+# 200 integer digits and a 1- or 2-digit exponent stays below 1e299.
+# Longer literals go to the tokenizer, which range-checks them.
 _BOOL_RE = "(?:t|T|f|F|true|True|TRUE|false|False|FALSE)"
-_INT_RE = r"[+-]?[0-9]+i"
-_FLT_RE = r"[+-]?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?"
+_INT_RE = r"[+-]?[0-9]{1,18}i"
+_FLT_RE = r"[+-]?(?:[0-9]{1,200}(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]{1,2})?"
 _VAL_RE = f"(?:{_BOOL_RE}|{_INT_RE}|{_FLT_RE})"
 _KEY_RE = r'[^,="\\ ]+'
 _TAG_RE = f',{_KEY_RE}=[^,="\\\\ ]*'
@@ -345,9 +363,13 @@ def parse_influx(
                     # ref influxdb.go:36 — uniform "Failed to parse datapoint"
                     out.append({**_ERROR_ROW,
                                 "parse_error": "Failed to parse datapoint"})
-            yield pd.DataFrame(
+            pdf = pd.DataFrame(
                 out, columns=[f.name for f in GTS_WITH_ERROR_SCHEMA.fields]
             )
+            # exact int64: a column with any missing value_l would
+            # otherwise be float64 and round integers above 2**53
+            pdf["value_l"] = pd.array([r["value_l"] for r in out], dtype="Int64")
+            yield pdf
 
     is_simple = F.coalesce(F.col(line_col).rlike(SIMPLE_LINE_RE), F.lit(False))
     fast = _parse_simple(df.where(is_simple), line_col, mult, now_ns)

@@ -16,6 +16,12 @@ starts no Python worker task of its own. A refused POST raises
 WarpSendError in the forwarder's batch function, with the taxonomy
 status that the access log records.
 
+Listing: a micro-batch lists its files on the driver. The file source
+hands each of the batch's files to Spark as its own path, and the
+session that session.get_spark builds keeps the listing of any number of
+paths off the executors, so a burst of many small request files starts
+no listing task per file.
+
 Delivery: the store writer is exactly-once (Spark's file sink commits
 each epoch through its metadata log, keyed by the checkpoint). The Warp
 forwarder is at-least-once: foreachBatch + checkpoint replays a failed

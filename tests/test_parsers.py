@@ -371,10 +371,10 @@ class TestInflux:
         from catalyst_spark.parsers.influxdb import SIMPLE_LINE_RE
         import re
 
-        for line in self.SIMPLE_CORPUS:
+        for line in self.SIMPLE_CORPUS + self.NUMBER_FAST_LINES:
             assert re.match(SIMPLE_LINE_RE, line), line
         for line in ['s a="x y"', r"we\,ather v=1", "m v=", "m v=abc",
-                     "m v=inf", "", "# comment"]:
+                     "m v=inf", "", "# comment", *self.NUMBER_SLOW_LINES]:
             assert not re.match(SIMPLE_LINE_RE, line), line
 
     @staticmethod
@@ -440,6 +440,62 @@ class TestInflux:
         )
         assert got == expected
 
+    # Go-number edge cases around the router's value bounds: the longest
+    # literals each fast-path cast can take, and the first ones it cannot
+    NUMBER_FAST_LINES = [
+        "m f=999999999999999999i 1", "m f=-999999999999999999i 1",
+        "m f=1e99 1", "m f=-1.5E-99 1", f"m f={'9' * 200}.5 1",
+    ]
+    NUMBER_SLOW_LINES = [
+        "m f=9223372036854775807i 1", "m f=-9223372036854775808i 1",
+        "m f=9223372036854775808i 1", "m f=1e100 1", "m f=1e500 1",
+        "m f=-1e500 1", f"m f={'9' * 201} 1", f"m f={'9' * 400} 1",
+        "m f=NaN 1", "m f=nan 1", "m f=inf 1", "m f=-Inf 1", "m f=Infinity 1",
+    ]
+
+    def test_int64_bounds_on_both_paths(self, spark):
+        """An integer outside int64 is one error row on either path (Go
+        ParseInt's ErrRange); the bounds themselves parse exactly."""
+        lines = ["m f=9223372036854775808i 1",
+                 'm s="x",f=99999999999999999999i 1',
+                 "m f=-9223372036854775809i 1",
+                 "m f=9223372036854775807i 1",
+                 "m f=-9223372036854775808i 1",
+                 "m f=-999999999999999999i 1"]
+        rows = self.parse(spark, lines)
+        assert [r["parse_error"] for r in rows if r["parse_error"]] == [
+            "Failed to parse datapoint"] * 3
+        assert sorted(r["value_l"] for r in rows if r["value_l"] is not None) == [
+            -2**63, -999999999999999999, 2**63 - 1]
+
+    def test_slow_path_keeps_int64_exact(self, spark):
+        """Integers above 2**53 next to a string field (a row without
+        value_l in the same batch) keep every bit."""
+        rows = self.parse(spark, ['m s="x",f=9007199254740993i 1',
+                                  'n s="y",g=-9223372036854775808i 1'])
+        by_name = {r["name"]: r for r in rows}
+        assert by_name["m.f"]["value_l"] == 2**53 + 1
+        assert by_name["n.g"]["value_l"] == -2**63
+        assert by_name["m.s"]["value_l"] is None
+
+    def test_non_finite_floats_are_error_rows(self, spark):
+        """NaN and Inf have no line-protocol literal, and a float that
+        overflows is ErrRange in Go: each is one error row, never a
+        Sensision NaN/Infinity line."""
+        from catalyst_spark.parsers.influxdb import _ParseError, parse_influx_line
+
+        bad = ["m f=NaN 1", "m f=inf 1", "m f=-Inf 1", "m f=Infinity 1",
+               "m f=1e500 1", "m f=-1e500 1", f"m f={'9' * 400} 1",
+               'm s="x",f=1e500 1']
+        for line in bad:
+            with pytest.raises(_ParseError):
+                parse_influx_line(line, 1, 0)
+        rows = self.parse(spark, bad + ["m f=1e99 1"])
+        assert [r["parse_error"] for r in rows if r["parse_error"]] == [
+            "Failed to parse datapoint"] * len(bad)
+        [ok] = [r for r in rows if r["parse_error"] is None]
+        assert ok["value_d"] == 1e99 and ok["value_type"] == "double"
+
     # every Influx line of this class, the fast-path negatives and the
     # edge cases of the possessive router (a bool that starts with a
     # shorter bool, a value that runs on, an empty tag value)
@@ -458,7 +514,7 @@ class TestInflux:
         "m f=1,g=true", "m f=1,g=t", "m f=true,g=1", "m f=truex", "m f=tr",
         "m f=1i2", "m f=1.5e", "m,a= f=1", "m,a=b,c f=1", "m f=1,", "m f=1 ",
         "m  f=1", "m f=1 12 13", "m f=FALSE,g=False,h=F 7", "m f=1e3i",
-    ]
+    ] + NUMBER_FAST_LINES + NUMBER_SLOW_LINES
 
     def test_possessive_router_routes_like_the_backtracking_one(self, spark):
         """SIMPLE_LINE_RE's possessive repetitions accept exactly the
