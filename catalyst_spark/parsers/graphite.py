@@ -15,8 +15,8 @@ Semantics reproduced exactly:
 - timestamp magnitude heuristic via int64toTime (ref opentsdb.go:127-144):
   0 -> ingest-now; < 0xFFFFFFFF -> seconds; else milliseconds. Missing
   timestamp -> now in ms (:322) which the heuristic then maps back.
-  "Now" is schema.ingest_now_us(), the micro-batch clock: per batch,
-  not per request, and a replayed epoch keeps it.
+  "Now" is schema.request_now_us(df): the request's receive time on a
+  stream_lines frame, else the query clock.
 - hierarchy labeling when parse=true (the config default, cmd/root.go:56):
   name 'a.b.c' -> labels {"0":"a","1":"b","2":"c"} (:382-386,398-403).
 - ';'-separated tags override hierarchy labels on key collision (Go map
@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import gts_columns, ingest_now_us
+from catalyst_spark.schema import gts_columns, request_now_us
 
 _MAX_SECONDS = 0xFFFFFFFF  # magnitude heuristic boundary (opentsdb.go:138)
 
@@ -124,7 +124,7 @@ def parse_graphite(
     a 100 TB replay of Graphite traffic is a map-only scan with zero
     shuffles and zero Python.
     """
-    now_us = ingest_now_us()
+    now_us = request_now_us(df)
 
     line = F.col(line_col)
     parts = F.split(line, " ")

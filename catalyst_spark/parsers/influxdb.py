@@ -13,8 +13,12 @@ field=v[,field=v...] [timestamp]) with its escaping rules:
 - per-request precision (?precision=n|u|ms|s|m|h, default n) scales the
   trailing integer timestamp to ns; a missing timestamp takes ingest-now
   truncated to the precision (ref catalyser/influxdb.go:25-28,62). "Now"
-  is schema.ingest_now_us(), the micro-batch clock: per batch, not per
-  request, and a replayed epoch keeps it.
+  is schema.request_now_us(df): the request's receive time on a
+  stream_lines frame, else the query clock.
+- timestamp range: the scaled ns must lie in Go's [MinNanoTime,
+  MaxNanoTime] = ±(2**63 - 2), else the line is an error row, as
+  models.SafeCalcTime returns ErrTimeOutOfRange (a timestamp outside
+  int64 is ParseInt's ErrRange).
 - fan-out: one GTS per field, name = measurement '.' field
   (ref catalyser/influxdb.go:73-80; quirk A.12 — includes the default
   'value' field: 'cpu value=1' -> class 'cpu.value').
@@ -36,6 +40,7 @@ GTS schema, so downstream is identical either way.
 from __future__ import annotations
 
 import math
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -43,7 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, ingest_now_us
+from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, request_now_us
 
 _PRECISION_NS = {
     "n": 1,
@@ -152,6 +157,9 @@ def _scan_fields(line: str, pos: int) -> tuple[list[tuple[str, str]], int]:
 
 
 _INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+# Go models.MaxNanoTime; MinNanoTime is its negation (MinInt64 + 2)
+_MAX_NANO_TIME = _INT64_MAX - 1
+_TS_DIGITS = re.compile(r"[+-]?[0-9]+", re.ASCII)
 
 
 def _go_float(s: str) -> float:
@@ -219,15 +227,18 @@ def parse_influx_line(
 
     rest = line[pos:].strip()
     if rest:
-        try:
-            ts_ns = int(rest, 10) * precision_mult
-        except ValueError as exc:
-            raise _ParseError("bad timestamp") from exc
+        if not _TS_DIGITS.fullmatch(rest):
+            raise _ParseError("bad timestamp")
+        ts_ns = int(rest, 10) * precision_mult
+        # Go SafeCalcTime: the scaled time must lie in
+        # [MinNanoTime, MaxNanoTime], else ErrTimeOutOfRange
+        if not -_MAX_NANO_TIME <= ts_ns <= _MAX_NANO_TIME:
+            raise _ParseError("timestamp out of range")
     else:
         ts_ns = (now_ns // precision_mult) * precision_mult
 
     # Go int64 division truncates toward zero (influxdb.go:75)
-    ts_us = int(ts_ns / 1e3) if ts_ns < 0 else ts_ns // 1000
+    ts_us = -(-ts_ns // 1000) if ts_ns < 0 else ts_ns // 1000
 
     rows = []
     for fname, (kind, raw) in fields:
@@ -264,7 +275,9 @@ _ERROR_ROW = {
 # number literals are bounded so that no cast can fail or overflow:
 # an integer of at most 18 digits fits int64, and a float with at most
 # 200 integer digits and a 1- or 2-digit exponent stays below 1e299.
-# Longer literals go to the tokenizer, which range-checks them.
+# A timestamp's magnitude is bounded by MaxNanoTime over the precision's
+# multiplier, so its scaled ns neither overflow nor leave Go's time
+# range. Longer literals go to the tokenizer, which range-checks them.
 _BOOL_RE = "(?:t|T|f|F|true|True|TRUE|false|False|FALSE)"
 _INT_RE = r"[+-]?[0-9]{1,18}i"
 _FLT_RE = r"[+-]?(?:[0-9]{1,200}(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]{1,2})?"
@@ -279,9 +292,25 @@ _TAG_RE = f',{_KEY_RE}=[^,="\\\\ ]*'
 # groups are non-capturing: CPython 3.11's re raises SystemError on a
 # capturing group inside a possessive repetition.
 _FIELD_RE = f"{_KEY_RE}={_VAL_RE}(?=[, ]|$)"
-SIMPLE_LINE_RE = (
-    f"^{_KEY_RE}(?:{_TAG_RE})*+ {_FIELD_RE}(?:,{_FIELD_RE})*+(?: [+-]?[0-9]+)?$"
-)
+
+
+def _at_most(bound: int) -> str:
+    """Regex for the digit strings whose value is at most `bound`: the
+    ones of its length that sort no higher, then any shorter one."""
+    s = str(bound)
+    full = [f"{s[:i]}[0-{int(c) - 1}][0-9]{{{len(s) - i - 1}}}"
+            for i, c in enumerate(s) if c != "0"]
+    short = [f"[0-9]{{1,{len(s) - 1}}}"] if len(s) > 1 else []
+    return "(?:" + "|".join(full + [s] + short) + ")"
+
+
+def _simple_line_re(mult: int) -> str:
+    ts = f"[+-]?{_at_most(_MAX_NANO_TIME // mult)}"
+    return f"^{_KEY_RE}(?:{_TAG_RE})*+ {_FIELD_RE}(?:,{_FIELD_RE})*+(?: {ts})?$"
+
+
+# the router at the default precision (ns)
+SIMPLE_LINE_RE = _simple_line_re(1)
 
 _TRUE_LIST = ", ".join(f"'{t}'" for t in _BOOL_TRUE)
 _FALSE_LIST = ", ".join(f"'{f}'" for f in _BOOL_FALSE)
@@ -289,9 +318,9 @@ _FALSE_LIST = ", ".join(f"'{f}'" for f in _BOOL_FALSE)
 
 def _parse_simple(df: DataFrame, line_col: str, mult: int, now_ns: Column) -> DataFrame:
     """Column-expression parse of regex-validated simple lines."""
-    default_ns = F.call_function("div", now_ns, F.lit(mult)) * mult
+    default_ns = F.call_function("div", F.col("_now_ns"), F.lit(mult)) * mult
     d = (
-        df.select(F.col(line_col).alias("_ln"))
+        df.select(F.col(line_col).alias("_ln"), now_ns.alias("_now_ns"))
         .withColumn("_parts", F.split("_ln", " "))
         .withColumn("_mt", F.split(F.element_at("_parts", 1), ","))
         .withColumn(
@@ -344,14 +373,15 @@ def parse_influx(
     """Parse InfluxDB line-protocol rows into the canonical GTS schema.
 
     Routes each line through the JVM column fast path when it matches
-    SIMPLE_LINE_RE, else through the Python tokenizer (quoted strings,
-    escapes, and error-row generation). Both branches read the same
-    ingest clock; the tokenizer gets it as an input column.
+    the router (SIMPLE_LINE_RE at the default precision), else through
+    the Python tokenizer (quoted strings, escapes, out-of-range numbers
+    and error-row generation). Both branches take "now" as a column
+    from schema.request_now_us.
     """
     mult = _PRECISION_NS.get(precision)
     if mult is None:
         raise ValueError(f"unknown precision {precision!r}")
-    now_ns = ingest_now_us() * 1000
+    now_ns = request_now_us(df) * 1000
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -366,12 +396,14 @@ def parse_influx(
             pdf = pd.DataFrame(
                 out, columns=[f.name for f in GTS_WITH_ERROR_SCHEMA.fields]
             )
-            # exact int64: a column with any missing value_l would
-            # otherwise be float64 and round integers above 2**53
-            pdf["value_l"] = pd.array([r["value_l"] for r in out], dtype="Int64")
+            # exact int64: a column with any missing value (an error
+            # row's ts, a non-integer field's value_l) would otherwise
+            # be float64 and round integers above 2**53
+            for c in ("ts", "value_l"):
+                pdf[c] = pd.array([r[c] for r in out], dtype="Int64")
             yield pdf
 
-    is_simple = F.coalesce(F.col(line_col).rlike(SIMPLE_LINE_RE), F.lit(False))
+    is_simple = F.coalesce(F.col(line_col).rlike(_simple_line_re(mult)), F.lit(False))
     fast = _parse_simple(df.where(is_simple), line_col, mult, now_ns)
     slow = (df.where(~is_simple).select(line_col, now_ns.alias("_now_ns"))
             .mapInPandas(run, GTS_WITH_ERROR_SCHEMA))

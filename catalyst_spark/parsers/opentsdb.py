@@ -19,8 +19,8 @@ Reference semantics (ref catalyser/opentsdb.go:31-144):
 - timestamp must be an integral JSON number (Go int64 field; a float
   fails the decode -> parse error); 0 or missing -> ingest-now; then the
   sec/ms magnitude heuristic (:127-144). "Now" is
-  schema.ingest_now_us(), the micro-batch clock: per batch, not per
-  request, and a replayed epoch keeps it.
+  schema.request_now_us(df): the request's receive time on a
+  stream_lines frame, else the query clock.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from catalyst_spark.parsers.graphite import _heuristic_us
-from catalyst_spark.schema import gts_columns, ingest_now_us
+from catalyst_spark.schema import gts_columns, request_now_us
 
 _FULL = ("array<struct<metric:string,timestamp:bigint,value:variant,"
          "tags:map<string,string>>>")
@@ -92,6 +92,7 @@ def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
     pre = df.select(
         start.alias("_start"),
         F.substring(body, start, 2147483647).alias("_clean"),
+        request_now_us(df).alias("_now_us"),
     )
     clean = F.col("_clean")
     solo = clean.startswith("{")
@@ -101,7 +102,7 @@ def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
     # one parse of the (wrapped) body — for arrays and clean solo
     # bodies this is THE parse; computed as its own projection so the
     # dirty-solo CASE below reuses it instead of re-deriving it
-    pre = pre.select("_start", "_clean", F.from_json(wrapped, _FULL)
+    pre = pre.select("_start", "_clean", "_now_us", F.from_json(wrapped, _FULL)
                      .alias("_p0"))
     # Go's json.Decoder reads ONE complete value and ignores trailing
     # bytes (opentsdb.go:63-104: a solo object followed by garbage still
@@ -126,6 +127,7 @@ def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
                  F.lit("]")), _FULL)
     parsed = pre.select(
         "_start",
+        "_now_us",
         F.when(solo & ~fast & (solo_end > 0), reparsed)
         .otherwise(F.col("_p0")).alias("base"),
     )
@@ -133,9 +135,11 @@ def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
     # no '[' or '{' at all -> the reference's EOF parse error (:40-45)
     exploded = parsed.select(
         "_start",
+        "_now_us",
         F.posexplode_outer("base").alias("_i", "p"),
     ).select(
         "_start",
+        "_now_us",
         F.col("p.metric").alias("_metric"),
         F.col("p.timestamp").alias("_ts_in"),
         F.col("p.tags").alias("_tags"),
@@ -188,7 +192,7 @@ def parse_opentsdb(df: DataFrame, body_col: str = "body") -> DataFrame:
 
     return exploded.select(
         *gts_columns(
-            ts=_heuristic_us(ts_in, ingest_now_us()),
+            ts=_heuristic_us(ts_in, F.col("_now_us")),
             name=F.col("_metric"),
             labels=F.coalesce(F.col("_tags"), F.create_map().cast("map<string,string>")),
             value_d=F.when(value_type == "double", F.col("_cd")),

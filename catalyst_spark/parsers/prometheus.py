@@ -16,9 +16,9 @@ Reference semantics (ref catalyser/prometheus.go:22-117):
   with remote_write's map-to-0 policy T9).
 - sample timestamp is ms; a missing timestamp gets ingest-now at
   SECONDS resolution (model.TimeFromUnix(time.Now().Unix()), :67-71);
-  µs = ms * 1000 (:101). "Now" is schema.ingest_now_us(), the
-  micro-batch clock: per batch, not per request, and a replayed epoch
-  keeps it.
+  µs = ms * 1000 (:101). "Now" is schema.request_now_us(df): the
+  request's receive time on a stream_lines frame, else the query
+  clock.
 - values are Go ParseFloat: scientific notation, +Inf/-Inf/Nan, etc.
 """
 
@@ -30,7 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, gts_columns, ingest_now_us
+from catalyst_spark.schema import GTS_WITH_ERROR_SCHEMA, gts_columns, request_now_us
 
 _LINE_RE = r"^([a-zA-Z_:][a-zA-Z0-9_:]*)(?:\{(.*)\})?\s+(\S+)(?:\s+(-?\d+))?\s*$"
 _LABEL_RE = r'([a-zA-Z_][a-zA-Z0-9_]*)\s*=\s*"((?:\\.|[^"\\])*)"'
@@ -81,9 +81,9 @@ def path_to_labels(path: str) -> dict[str, str]:
     return dict(zip(segs[::2], segs[1::2]))
 
 
-def _now_ms() -> Column:
+def _now_ms(now_us: Column) -> Column:
     """Ingest-now at seconds resolution, in ms (:67-71)."""
-    return F.call_function("div", ingest_now_us(), F.lit(1_000_000)) * 1000
+    return F.call_function("div", now_us, F.lit(1_000_000)) * 1000
 
 
 def _unescape(col: Column) -> Column:
@@ -108,7 +108,8 @@ def parse_prom_text(
     extra_labels = extra_labels or {}
 
     line = F.trim(F.col(line_col))
-    data = df.where((line != "") & ~line.startswith("#")).select(line.alias("_l"))
+    data = df.where((line != "") & ~line.startswith("#")).select(
+        line.alias("_l"), request_now_us(df).alias("_now_us"))
 
     name = F.regexp_extract("_l", _LINE_RE, 1)
     label_blob = F.regexp_extract("_l", _LINE_RE, 2)
@@ -137,7 +138,7 @@ def parse_prom_text(
         .otherwise(value_str.try_cast("double"))
     )
 
-    ts_ms = F.when(ts_str != "", ts_str.try_cast("long")).otherwise(_now_ms())
+    ts_ms = F.when(ts_str != "", ts_str.try_cast("long")).otherwise(_now_ms(F.col("_now_us")))
 
     parsed = data.select(
         name.alias("_name"),
@@ -284,5 +285,5 @@ def parse_prom_proto(
                         })
             yield pd.DataFrame(out, columns=cols)
 
-    return df.select(body_col, _now_ms().alias("_now_ms")).mapInPandas(
+    return df.select(body_col, _now_ms(request_now_us(df)).alias("_now_ms")).mapInPandas(
         run, GTS_WITH_ERROR_SCHEMA)

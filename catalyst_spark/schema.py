@@ -45,14 +45,30 @@ GTS_WITH_ERROR_SCHEMA = T.StructType(
 )
 
 
-def ingest_now_us() -> Column:
-    """The ingest clock, in µs: the one "now" for datapoints that carry
-    no timestamp (the reference stamps them per request,
-    catalyser/influxdb.go:25-28,62). Spark fixes current_timestamp()
-    once per query: a batch action reads one value, and a streaming
-    micro-batch reads its batch timestamp, which the offset log records
-    before the batch runs, so a replayed epoch reads it back unchanged.
-    "Now" is therefore per batch, not per request."""
+# A request's receive time, in µs: streaming.stream_lines attaches it
+# to every line of a request file, from the file's modification time.
+RECEIVED_COL = "received_us"
+
+
+def request_now_us(df: DataFrame) -> Column:
+    """The "now", in µs, for datapoints of `df` that carry no timestamp.
+
+    The reference stamps them with the time their request arrived
+    (catalyser/influxdb.go:25-28,62). A frame from
+    streaming.stream_lines carries that time per line as `received_us`
+    (its request file's modification time), so two requests in one
+    micro-batch get their own "now", a replayed epoch reads the same
+    value back, and a micro-batch's plan holds no per-batch literal:
+    a warm batch reuses the code generated for the batch before it.
+
+    A frame without that column (a literal frame, the socket source,
+    a batch spark.read.text) falls back to the query clock,
+    current_timestamp(): one value per batch action, and in a stream
+    the micro-batch's timestamp, which the offset log records before
+    the batch runs. Spark folds that clock into a literal, so such a
+    stream generates its code again in every micro-batch."""
+    if RECEIVED_COL in df.columns:
+        return F.col(RECEIVED_COL)
     return F.unix_micros(F.current_timestamp())
 
 

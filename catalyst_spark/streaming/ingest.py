@@ -28,14 +28,18 @@ forwarder is at-least-once: foreachBatch + checkpoint replays a failed
 epoch whole, so record batches that had already posted post again.
 
 Ingest "now": a datapoint without a timestamp is stamped from
-schema.ingest_now_us(), which each micro-batch reads as its batch
-timestamp. The offset log records that timestamp before the batch
-runs, so "now" moves forward with every batch and a replayed epoch
-reads it back: the replay re-sends byte-identical lines. "Now" is per
-batch, not per request as in the reference. Each query has its own
-clock, so start_warp_forwarder and start_store_writer, run as two
-queries over one source, may stamp one timestamp-less point up to one
-trigger apart (likewise a bulk POST and write_store, one pass apart).
+schema.request_now_us(), per request as in the reference: stream_lines
+attaches each request file's modification time to its lines as
+`received_us`. Two requests in one micro-batch get their own "now"; a
+file's modification time does not change, so a replayed epoch
+re-sends byte-identical lines, and start_warp_forwarder and
+start_store_writer, run as two queries over one source, stamp a point
+alike. The plan holds no per-batch literal, so a warm micro-batch
+reuses the code generated for the one before it. A frame without
+`received_us` (the socket source) takes the query clock, the
+micro-batch's timestamp: two queries over it may stamp one
+timestamp-less point up to one trigger apart (likewise a bulk POST
+and write_store over a batch read, one pass apart).
 """
 
 from __future__ import annotations
@@ -55,7 +59,7 @@ from catalyst_spark.parsers import (
     strip_token_prefix,
     warp_passthrough,
 )
-from catalyst_spark.schema import permissive
+from catalyst_spark.schema import RECEIVED_COL, permissive
 from catalyst_spark.sinks.warp_sink import (
     PerTokenWarpSink,
     WarpHTTPSink,
@@ -74,8 +78,13 @@ PARSERS: dict[str, Callable[..., DataFrame]] = {
 
 def stream_lines(spark: SparkSession, path: str) -> DataFrame:
     """File-source stand-in for the protocol listeners: each text file
-    dropped into `path` is a 'request body' worth of lines."""
-    return spark.readStream.text(path).withColumnRenamed("value", "line")
+    dropped into `path` is a 'request body' worth of lines. Each line
+    carries its request's receive time as `received_us`, the file's
+    modification time in µs, which the parsers take as "now"."""
+    return spark.readStream.text(path).select(
+        F.col("value").alias("line"),
+        F.unix_micros(F.col("_metadata.file_modification_time")).alias(RECEIVED_COL),
+    )
 
 
 def stream_socket_lines(spark: SparkSession, host: str, port: int) -> DataFrame:

@@ -496,6 +496,47 @@ class TestInflux:
         [ok] = [r for r in rows if r["parse_error"] is None]
         assert ok["value_d"] == 1e99 and ok["value_type"] == "double"
 
+    # Go SafeCalcTime bounds the scaled timestamp to [MinNanoTime,
+    # MaxNanoTime] = ±(2**63 - 2) ns; per precision, the largest
+    # magnitude that fits and the first one that does not
+    TS_BOUNDS = {"n": 9223372036854775806, "u": 9223372036854775,
+                 "s": 9223372036, "h": 2562047}
+
+    def test_timestamp_range_on_both_paths(self, spark):
+        """A timestamp outside int64, or one whose scaled ns leave Go's
+        time range, is one error row on either path; the bounds parse
+        exactly, and a 19-digit ns timestamp keeps the fast path."""
+        from catalyst_spark.parsers.influxdb import (
+            _PRECISION_NS, SIMPLE_LINE_RE, _simple_line_re,
+        )
+        import re
+
+        assert re.match(SIMPLE_LINE_RE, "m f=1 1700000000000000000")
+        for precision, bound in self.TS_BOUNDS.items():
+            mult = _PRECISION_NS[precision]
+            router = _simple_line_re(mult)
+            ok = [f"m f=1 {bound}", f"m f=1 -{bound}"]
+            bad = [f"m f=1 {bound + 1}", f"m f=1 -{bound + 1}",
+                   "m f=1 99999999999999999999", "m f=1 9223372036854775808"]
+            assert all(re.match(router, l) for l in ok), precision
+            assert not any(re.match(router, l) for l in bad), precision
+            slow = [l.replace("f=1", 'f=1,s="x"') for l in ok + bad]
+            rows = self.parse(spark, ok + bad + slow, precision=precision)
+            errors = [r for r in rows if r["parse_error"]]
+            assert len(errors) == 2 * len(bad), precision
+            assert all(r["parse_error"] == "Failed to parse datapoint" for r in errors)
+            ts_us = bound * mult // 1000
+            assert sorted(r["ts"] for r in rows if r["name"] == "m.f") == [
+                -ts_us, -ts_us, ts_us, ts_us], precision
+
+    def test_timestamp_must_be_plain_digits(self, spark):
+        """Go's ParseInt takes no digit separators: '1_000' is a bad
+        timestamp, not 1000."""
+        rows = self.parse(spark, ["m f=1 1_000", 'm s="x" 1_000', "m f=1 1000"])
+        assert [r["parse_error"] for r in rows if r["parse_error"]] == [
+            "Failed to parse datapoint"] * 2
+        assert [r["ts"] for r in rows if r["parse_error"] is None] == [1]
+
     # every Influx line of this class, the fast-path negatives and the
     # edge cases of the possessive router (a bool that starts with a
     # shorter bool, a value that runs on, an empty tag value)

@@ -1,10 +1,13 @@
-"""Python-worker start-up cost: unchanged zip archives are not re-read on
+"""Python-worker per-task cost: unchanged zip archives are not re-read on
 ``importlib.invalidate_caches()``, which PySpark calls at the start of
-every Python task."""
+every Python task, and a reused worker's import heap is frozen out of
+the ``gc.collect()`` PySpark runs after every task."""
 
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -13,7 +16,7 @@ import pytest
 
 import catalyst_spark  # noqa: F401
 
-pytestmark = pytest.mark.skipif(
+eager_zipimporter = pytest.mark.skipif(
     hasattr(zipimport.zipimporter, "_get_files"),
     reason="lazy zipimporter: zipcache.install() is a no-op",
 )
@@ -28,6 +31,7 @@ def _write_zip(path, value):
     tmp.replace(path)
 
 
+@eager_zipimporter
 def test_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
     archive = tmp_path / "zcpkg.zip"
     _write_zip(archive, "old")
@@ -69,6 +73,7 @@ def test_invalidation_rereads_only_changed_archives(tmp_path, monkeypatch):
         del sys.path_importer_cache[key]
 
 
+@eager_zipimporter
 def test_python_task_start_rereads_no_zip(spark):
     def probe(batches):
         import importlib
@@ -102,3 +107,42 @@ def test_python_task_start_rereads_no_zip(spark):
     assert len(rows) == 4
     assert all(r.zips > 0 for r in rows)
     assert [r.reads for r in rows] == [0, 0, 0, 0]
+
+
+def test_reused_python_worker_freezes_its_import_heap(spark):
+    """A worker that imports the package has frozen the objects its
+    imports left tracked, so the collection after each task scans only
+    what the tasks themselves made."""
+    def probe(batches):
+        import gc
+
+        import pandas as pd
+
+        import catalyst_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()],
+                            "tracked": [len(gc.get_objects())]})
+
+    schema = "frozen long, tracked long"
+    rows = spark.range(4, numPartitions=4).mapInPandas(probe, schema).collect()
+    assert len(rows) == 4
+    assert all(r.frozen > r.tracked for r in rows), rows
+
+
+def test_freeze_needs_spark_reuse_worker():
+    """Only a process that PySpark marks as a reused worker freezes its
+    heap on import; the application process, which has no such
+    variable, does not."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "import gc, catalyst_spark; print(gc.get_freeze_count())"
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+
+    def frozen(env):
+        out = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                             capture_output=True, text=True, check=True)
+        return int(out.stdout)
+
+    assert frozen(env) == 0
+    assert frozen({**env, "SPARK_REUSE_WORKER": "1"}) > 10_000

@@ -236,17 +236,17 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# the ingest clock: "now" is the micro-batch's timestamp
+# the ingest clock: "now" is the request's receive time, its file's mtime
 # ---------------------------------------------------------------------------
 
 def test_now_moves_between_micro_batches(spark, tmp_path):
-    """Lines without a timestamp take the micro-batch's clock, not the
-    time the stream was built: two files processed as two micro-batches
-    at least 50 ms apart get two different ts values, each inside the
-    test's wall-clock window."""
+    """Lines without a timestamp take their request's receive time, not
+    the time the stream was built: two files written at least 100 ms
+    apart and processed as two micro-batches get two different ts
+    values, each inside the test's wall-clock window."""
     src = tmp_path / "in_now"; src.mkdir()
     store = str(tmp_path / "store_now")
-    t0_us = int(time.time() * 1000) * 1000  # batch timestamps are ms
+    t0_us = int(time.time() * 1000) * 1000  # file times are ms
     gts = ingest_stream(stream_lines(spark, str(src)), "graphite",
                         parse_hierarchy=False)
     q = start_store_writer(gts, store, str(tmp_path / "ckpt_now"))
@@ -267,9 +267,9 @@ def test_now_moves_between_micro_batches(spark, tmp_path):
 
 def test_replayed_epoch_sends_identical_body(spark, tmp_path):
     """A failed epoch is replayed whole from the checkpoint, and the
-    replay keeps the epoch's "now": the timestamp-less lines POST the
-    same bytes again. The stream is rebuilt for the restart, as a new
-    process would."""
+    replay keeps each request's "now", its file's modification time: the
+    timestamp-less lines POST the same bytes again. The stream is
+    rebuilt for the restart, as a new process would."""
     import os
 
     from pyspark.errors import StreamingQueryException
@@ -318,6 +318,88 @@ def test_replayed_epoch_sends_identical_body(spark, tmp_path):
     assert replay == first
 
 
+class ListTransport:
+    """In-memory Warp 10 stand-in: keeps every POST body, answers 200."""
+
+    def __init__(self):
+        self.bodies = []
+
+    def __call__(self, url, headers, body):
+        self.bodies.append(body)
+        return 200, ""
+
+
+def test_warm_micro_batch_compiles_nothing(spark, tmp_path):
+    """Four one-file micro-batches of timestamp-less Influx lines: after
+    the first, a micro-batch generates the same code as the one before
+    it, so Spark's codegen cache hits and nothing is compiled again."""
+    src = tmp_path / "in_codegen"; src.mkdir()
+    transport = ListTransport()
+    sink = WarpHTTPSink("http://w10", "TOK", transport=transport)
+    gts = ingest_stream(stream_lines(spark, str(src)), "influxdb")
+    q = start_warp_forwarder(gts, sink, str(tmp_path / "ckpt_codegen"))
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+    counts = []
+    try:
+        for i in range(4):
+            (src / f"b{i}.txt").write_text(f"codegen.m{i} f={i}i\n")
+            q.processAllAvailable()
+            counts.append(compiles.getCount())
+    finally:
+        q.stop()
+    assert len(transport.bodies) == 4
+    assert counts[1:] == [counts[0]] * 3, counts
+
+
+def test_requests_in_one_micro_batch_keep_their_own_now(spark, tmp_path):
+    """Two timestamp-less requests taken by one micro-batch are each
+    stamped with their own file's modification time (the reference's
+    per-request "now"), on the Influx and the Graphite parser."""
+    import os
+
+    t = int(time.time()) - 100
+    for protocol, line, field in (("influxdb", "{} v=1", ".v"), ("graphite", "{} 1", "")):
+        src = tmp_path / f"in_two_{protocol}"; src.mkdir()
+        for name, mtime in (("req.a", t), ("req.b", t + 7)):
+            path = src / f"{name}.txt"
+            path.write_text(line.format(name) + "\n")
+            os.utime(path, (mtime, mtime))
+        epochs, rows = [], []
+
+        def collect(df, epoch):
+            epochs.append(epoch)
+            rows.extend(df.collect())
+
+        gts = ingest_stream(stream_lines(spark, str(src)), protocol)
+        q = (gts.writeStream.foreachBatch(collect)
+             .option("checkpointLocation", str(tmp_path / f"ckpt_two_{protocol}"))
+             .start())
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert len(epochs) == 1, protocol
+        assert {r["name"]: r["ts"] for r in rows} == {
+            f"req.a{field}": t * 1_000_000, f"req.b{field}": (t + 7) * 1_000_000}, protocol
+
+
+@pytest.mark.parametrize("protocol", [
+    "graphite", "influxdb", "opentsdb", "prometheus", "remote_write", "warp"])
+def test_stream_lines_column_does_not_leak(spark, tmp_path, protocol):
+    """A parser over stream_lines has the columns it has over a plain
+    frame: the receive-time column never reaches the output (the
+    forwarder hands warp's lone `sensision` column to the sink as is)."""
+    from catalyst_spark.schema import RECEIVED_COL
+
+    kwargs = {"body_col": "line"} if protocol in ("opentsdb", "remote_write") else {}
+    plain = spark.createDataFrame([("x",)], "line string")
+    lines = stream_lines(spark, str(tmp_path))
+    assert lines.columns == ["line", RECEIVED_COL]
+    streamed = ingest_stream(lines, protocol, **kwargs)
+    assert streamed.columns == ingest_stream(plain, protocol, **kwargs).columns
+
+
 # ---------------------------------------------------------------------------
 # file listing: a micro-batch of many files is listed on the driver
 # ---------------------------------------------------------------------------
@@ -353,15 +435,18 @@ def test_many_file_batch_starts_no_listing_job(spark, tmp_path):
 
 
 def test_out_of_range_influx_numbers_keep_the_query_running(spark, tmp_path):
-    """An Influx integer outside int64 or a float that overflows, on
-    either parser path, becomes one error row: the micro-batch that
-    holds it commits and delivers every other line."""
+    """An Influx integer outside int64, a float that overflows or a
+    timestamp outside Go's time range, on either parser path, becomes
+    one error row: the micro-batch that holds it commits and delivers
+    every other line."""
     src = tmp_path / "in_range"; src.mkdir()
     (src / "b1.txt").write_text(
         "ok.fast v=1i 1000\n"
         "bad.fast f=9223372036854775808i 1000\n"
         'bad.slow s="x",f=99999999999999999999i 1000\n'
         "bad.float f=1e500 1000\n"
+        "bad.ts.fast f=1 99999999999999999999\n"
+        'bad.ts.slow s="x" 9223372036854775807\n'
         'ok.slow s="y",f=9223372036854775807i 1000\n'
     )
     rows = []
@@ -380,7 +465,7 @@ def test_out_of_range_influx_numbers_keep_the_query_running(spark, tmp_path):
     assert good["ok.fast.v"]["value_l"] == 1
     assert good["ok.slow.f"]["value_l"] == 2**63 - 1
     assert [r["parse_error"] for r in rows if r["parse_error"]] == [
-        "Failed to parse datapoint"] * 3
+        "Failed to parse datapoint"] * 5
 
 
 class TaggingTCPFront:
