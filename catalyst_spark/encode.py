@@ -90,8 +90,6 @@ def sensision_line() -> Column:
     ).alias("sensision")
 
 
-def encode_sensision(gts_df: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
-    """GTS DataFrame -> DataFrame of wire-format lines (plus any
-    pass-through columns, e.g. the per-connection token for grouped
-    egress)."""
-    return gts_df.select(*[F.col(c) for c in keep_cols], sensision_line())
+def encode_sensision(gts_df: DataFrame) -> DataFrame:
+    """GTS DataFrame -> DataFrame of wire-format lines."""
+    return gts_df.select(sensision_line())

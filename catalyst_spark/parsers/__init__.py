@@ -6,11 +6,7 @@ mapping, so the same function applies to ``spark.read.text`` output and
 to a ``readStream`` source (SURVEY §2.2).
 """
 
-from catalyst_spark.parsers.graphite import (
-    frame_connection_lines,
-    parse_graphite,
-    strip_token_prefix,
-)
+from catalyst_spark.parsers.graphite import parse_graphite
 from catalyst_spark.parsers.opentsdb import parse_opentsdb
 from catalyst_spark.parsers.prometheus import (
     negotiate_format,
@@ -24,8 +20,6 @@ from catalyst_spark.parsers.warp import warp_passthrough
 
 __all__ = [
     "parse_graphite",
-    "strip_token_prefix",
-    "frame_connection_lines",
     "parse_opentsdb",
     "negotiate_format",
     "parse_prom_proto",

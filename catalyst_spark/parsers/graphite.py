@@ -1,4 +1,4 @@
-"""Graphite line parser (P5/P6/P7) — pure column expressions, no UDF.
+"""Graphite line parser (P5/P6) — pure column expressions, no UDF.
 
 Line format (ref catalyser/graphite.go:314-407):
 
@@ -24,6 +24,10 @@ Semantics reproduced exactly:
   'a=b=c' -> value 'b' (tagSplit[1]).
 - Deviation (documented, SURVEY Appendix A.5): a tag without '=' panics
   in the reference; we reject the line with a parse error instead.
+
+Not reproduced (P7): the TCP listener's token framing
+(catalyser/graphite.go:240-273). Graphite arrives through the file
+source like every other protocol, and the write token is the sink's.
 """
 
 from __future__ import annotations
@@ -45,80 +49,12 @@ def _heuristic_us(ts: Column, now_us: Column) -> Column:
     )
 
 
-def strip_token_prefix(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Graphite TCP auth framing, per-LINE variant: every line carries a
-    ``TOKEN@.`` prefix; lines without one are dropped. Same contract as
-    the reference for well-formed clients (which repeat the same token on
-    every line); for exact per-CONNECTION parity — token length learned
-    once from the first line, then length-stripped blindly — use
-    frame_connection_lines (batch) / stream_frame_connections (stream).
-    """
-    token = F.regexp_extract(F.col(line_col), r"^(.+?)@\.(.*)$", 1)
-    rest = F.regexp_extract(F.col(line_col), r"^(.+?)@\.(.*)$", 2)
-    return (
-        df.withColumn("token", F.nullif(token, F.lit("")))
-        .withColumn(line_col, F.when(F.col("token").isNotNull(), rest))
-        .where(F.col("token").isNotNull())
-    )
-
-
-def frame_connection_lines(
-    df: DataFrame,
-    conn_col: str = "conn_id",
-    seq_col: str = "line_seq",
-    line_col: str = "line",
-) -> DataFrame:
-    """Graphite TCP auth framing with exact per-CONNECTION parity
-    (P7, ref catalyser/graphite.go:240-273). The reference's state
-    machine, reproduced over (connection, sequence)-keyed lines:
-
-    - each raw line is whitespace-trimmed (Go strings.TrimSpace);
-    - the FIRST line of a connection must contain ``@.`` with a
-      non-empty token before it, else the whole connection is aborted
-      (the Go code ``return``s — later lines are never read);
-    - ``tokenLength = len(token) + 2`` is learned once, and every line
-      (including the first) is then stripped by LENGTH, not by pattern:
-      lines with ``len <= tokenLength`` are silently skipped (quirk
-      A.6), and a line whose leading bytes are not ``TOKEN@.`` still
-      loses exactly tokenLength bytes.
-
-    Batch/replay form: one window per connection (the per-connection
-    state is a single row — first_value — so this stays a streaming-
-    friendly running accumulation, no join). The live-stream twin with
-    cross-batch state is streaming.stateful.stream_frame_connections.
-    """
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(conn_col)
-        .orderBy(seq_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    trimmed = F.regexp_replace(F.col(line_col), r"^\s+|\s+$", "")
-    first_line = F.first("_trim").over(w)
-    tok = F.split_part(F.col("_first"), F.lit("@."), F.lit(1))
-    valid = F.col("_first").contains("@.") & (tok != "")
-    tok_len = F.length(tok) + 2
-    return (
-        df.withColumn("_trim", trimmed)
-        .withColumn("_first", first_line)
-        .where(valid & (F.length("_trim") > tok_len))
-        .withColumn("token", tok)
-        .withColumn(line_col, F.substring(F.col("_trim"), tok_len + 1, 1 << 30))
-        .drop("_trim", "_first")
-    )
-
-
 def parse_graphite(
     df: DataFrame,
     line_col: str = "line",
     parse_hierarchy: bool = True,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Parse Graphite plaintext lines into the canonical GTS schema.
-
-    keep_cols: pass-through columns (e.g. the TCP framing 'token') kept
-    alongside the GTS columns so the sink can group by them.
 
     Scale: everything is whole-stage-codegen'd string/array expressions;
     a 100 TB replay of Graphite traffic is a map-only scan with zero
@@ -193,7 +129,6 @@ def parse_graphite(
     )
 
     return df.select(
-        *[F.col(c) for c in keep_cols],
         *gts_columns(
             ts=ts_us,
             name=name,

@@ -6,9 +6,8 @@ final partial batch. No parsing, no typing.
 
 In the DataFrame model the passthrough is the identity transform and
 the flush is a sink concern: WarpHTTPSink.foreach_batch posts one body
-per Arrow record batch, as for the Sensision-encoded paths. Only the
-Graphite TCP egress (sinks.warp_sink.chunk_payloads) keeps the 27-line
-flush.
+per Arrow record batch, as for the Sensision-encoded paths. The 27-line
+flush is not reproduced.
 """
 
 from __future__ import annotations
@@ -19,5 +18,5 @@ from pyspark.sql import functions as F
 
 def warp_passthrough(df: DataFrame, line_col: str = "line") -> DataFrame:
     """Identity over the opaque lines; normalizes the column name so the
-    sink can chunk any line-shaped DataFrame."""
+    sink can post any line-shaped DataFrame."""
     return df.select(F.col(line_col).cast("string").alias("sensision"))

@@ -61,8 +61,8 @@ def request_now_us(df: DataFrame) -> Column:
     value back, and a micro-batch's plan holds no per-batch literal:
     a warm batch reuses the code generated for the batch before it.
 
-    A frame without that column (a literal frame, the socket source,
-    a batch spark.read.text) falls back to the query clock,
+    A frame without that column (a literal frame, a batch
+    spark.read.text) falls back to the query clock,
     current_timestamp(): one value per batch action, and in a stream
     the micro-batch's timestamp, which the offset log records before
     the batch runs. Spark folds that clock into a literal, so such a

@@ -1,10 +1,5 @@
-"""Sinks: Warp HTTP forwarder (K1), dry-run (K3), chunking (T12)."""
+"""Sinks: Warp HTTP forwarder (K1) and dry-run (K3)."""
 
-from catalyst_spark.sinks.warp_sink import (
-    PerTokenWarpSink,
-    WarpHTTPSink,
-    chunk_payloads,
-    console_dry_run,
-)
+from catalyst_spark.sinks.warp_sink import WarpHTTPSink, console_dry_run
 
-__all__ = ["PerTokenWarpSink", "WarpHTTPSink", "chunk_payloads", "console_dry_run"]
+__all__ = ["WarpHTTPSink", "console_dry_run"]

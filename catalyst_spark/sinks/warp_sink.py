@@ -20,9 +20,12 @@ Reference behavior reproduced (ref core/warp.go:116-277, cmd/root.go:46-52):
 - no connection pooling: every POST opens a new urllib connection (the
   reference pools 2000 idle conns driver-side)
 
-The Graphite TCP egress (PerTokenWarpSink, send_lines) keeps the
-passthrough's 27-line flush (ref catalyser/warp.go:28) and posts from
-the executors.
+WarpHTTPSink.foreach_batch is the engine's one egress path. Not
+reproduced: the passthrough's 27-line flush (ref catalyser/warp.go:28),
+since Warp passthrough lines post one body per record batch like every
+other protocol, and the Graphite TCP listener's per-connection token
+(catalyser/graphite.go:240-273), since Graphite arrives through the
+file source and the write token is one constructor argument.
 
 The transport is injectable so tests (and dry runs) observe exact
 payloads without a network. The default transport uses urllib (no
@@ -33,14 +36,12 @@ from __future__ import annotations
 
 import urllib.error
 import urllib.request
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
 from catalyst_spark.control.auth import BanRegistry
 from catalyst_spark.control.errors import classify_error
-
-PASSTHROUGH_FLUSH_LINES = 27  # hard-coded flush threshold (catalyser/warp.go:28)
 
 # transport: (url, headers, body_bytes) -> (status_code, response_body)
 Transport = Callable[[str, dict[str, str], bytes], tuple[int, str]]
@@ -57,20 +58,6 @@ def _urllib_transport(url: str, headers: dict[str, str], body: bytes) -> tuple[i
 
 def _crlf(line: str) -> str:
     return line if line.endswith("\r\n") else line + "\r\n"
-
-
-def chunk_payloads(lines: Iterable[str]) -> Iterator[bytes]:
-    """27-line flush batching (T12). Lines may or may not carry their
-    CRLF terminator; the payload always ends each line with CRLF, byte-
-    identical to catalyser/warp.go:27-35."""
-    buf: list[str] = []
-    for line in lines:
-        buf.append(_crlf(line))
-        if len(buf) >= PASSTHROUGH_FLUSH_LINES:
-            yield "".join(buf).encode()
-            buf = []
-    if buf:
-        yield "".join(buf).encode()
 
 
 class WarpSendError(RuntimeError):
@@ -124,13 +111,6 @@ class WarpHTTPSink:
                 self.ban_registry.bannish(self.token)  # auto-ban (C3)
             raise WarpSendError(classified, body)
 
-    def send_lines(self, lines: Iterable[str]) -> int:
-        n = 0
-        for payload in chunk_payloads(lines):
-            self._post(payload)
-            n += payload.count(b"\r\n")
-        return n
-
     def foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
         """writeStream.foreachBatch hook. The driver collects the batch's
         lines as Arrow and POSTs each non-empty record batch as one body.
@@ -143,51 +123,9 @@ class WarpHTTPSink:
                 self._post("".join(map(_crlf, batch.column(0).to_pylist())).encode())
 
 
-class PerTokenWarpSink:
-    """Graphite TCP egress (S3): the reference opens one Warp update
-    stream per TCP connection, keyed by the connection's token
-    (catalyser/graphite.go:255-264). In the stream model the
-    per-connection session becomes a per-token group: the batch is
-    hash-repartitioned on token and sorted within partitions, so each
-    executor streams contiguous token runs and posts one chunked update
-    sequence per token — O(flush) memory, no per-token buffering of the
-    whole batch.
-    """
-
-    def __init__(
-        self,
-        endpoint: str,
-        transport: Transport | None = None,
-        ban_registry: BanRegistry | None = None,
-    ) -> None:
-        self.endpoint = endpoint
-        self.transport = transport
-        self.ban_registry = ban_registry
-
-    def foreach_batch(self, df: DataFrame, epoch_id: int) -> None:
-        endpoint = self.endpoint
-        transport = self.transport
-        ban_registry = self.ban_registry
-
-        def send_partition(rows) -> None:
-            from itertools import groupby
-
-            for token, grp in groupby(rows, key=lambda r: r["token"]):
-                WarpHTTPSink(
-                    endpoint, token, transport=transport,
-                    ban_registry=ban_registry,
-                ).send_lines(r["sensision"] for r in grp)
-
-        (
-            df.select("token", "sensision")
-            .repartition("token")
-            .sortWithinPartitions("token")
-            .foreachPartition(send_partition)
-        )
-
-
 def console_dry_run(df: DataFrame, epoch_id: int = 0) -> None:
     """K3 --dryrun: print decoded payload instead of forwarding
-    (ref core/handler.go:161-167)."""
+    (ref core/handler.go:161-167). Each line ends with one CRLF, the
+    bytes a POST body would carry."""
     for r in df.select("sensision").collect():
-        print(r["sensision"], end="")
+        print(_crlf(r["sensision"]), end="")

@@ -2,19 +2,15 @@
 
 from catalyst_spark.streaming.ingest import (
     PARSERS,
-    graphite_tcp_ingest,
     ingest_stream,
     start_store_writer,
     start_warp_forwarder,
     stream_lines,
-    stream_socket_lines,
 )
 
 __all__ = [
     "PARSERS",
-    "graphite_tcp_ingest",
     "ingest_stream",
-    "stream_socket_lines",
     "stream_lines",
     "start_warp_forwarder",
     "start_store_writer",

@@ -1,9 +1,11 @@
 """Streaming ingestion wiring: sources -> parsers -> sinks.
 
 The reference's HTTP/TCP listeners map to Structured Streaming sources
-(file source here; socket/Kafka in production — same DataFrame code).
-The parsers are stateless column transforms, so batch and streaming
-share them verbatim (SURVEY §2.2); this module only wires:
+(file source here; Kafka in production — same DataFrame code). Every
+protocol, Graphite included, arrives through stream_lines; there is no
+TCP listener. The parsers are stateless column transforms, so batch
+and streaming share them verbatim (SURVEY §2.2); this module only
+wires:
 
   readStream(text) -> parse_<protocol> -> permissive
      -> encode_sensision -> foreachBatch WarpHTTPSink   (egress, K1)
@@ -36,10 +38,8 @@ re-sends byte-identical lines, and start_warp_forwarder and
 start_store_writer, run as two queries over one source, stamp a point
 alike. The plan holds no per-batch literal, so a warm micro-batch
 reuses the code generated for the one before it. A frame without
-`received_us` (the socket source) takes the query clock, the
-micro-batch's timestamp: two queries over it may stamp one
-timestamp-less point up to one trigger apart (likewise a bulk POST
-and write_store over a batch read, one pass apart).
+`received_us` (a batch read) takes the query clock, so a bulk POST and
+write_store over it may stamp one timestamp-less point one pass apart.
 """
 
 from __future__ import annotations
@@ -56,15 +56,10 @@ from catalyst_spark.parsers import (
     parse_opentsdb,
     parse_prom_text,
     parse_remote_write,
-    strip_token_prefix,
     warp_passthrough,
 )
 from catalyst_spark.schema import RECEIVED_COL, permissive
-from catalyst_spark.sinks.warp_sink import (
-    PerTokenWarpSink,
-    WarpHTTPSink,
-    console_dry_run,
-)
+from catalyst_spark.sinks.warp_sink import WarpHTTPSink, console_dry_run
 
 PARSERS: dict[str, Callable[..., DataFrame]] = {
     "graphite": parse_graphite,
@@ -87,57 +82,6 @@ def stream_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def stream_socket_lines(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """Live TCP line stream (S3): Spark's socket source reads newline-
-    framed text from host:port — the streaming stand-in for the
-    reference's persistent Graphite listener (catalyser/graphite.go:
-    149-177; in production a Kafka topic fed by the TCP front takes
-    this seat, same downstream code)."""
-    return (
-        spark.readStream.format("socket")
-        .option("host", host)
-        .option("port", port)
-        .load()
-        .withColumnRenamed("value", "line")
-    )
-
-
-def graphite_tcp_ingest(
-    spark: SparkSession,
-    host: str,
-    port: int,
-    parse_hierarchy: bool = True,
-) -> DataFrame:
-    """S3 end-to-end head: socket lines -> token framing (P7, every
-    line carries 'TOKEN@.'; unframed lines dropped per graphite.go:
-    242-251) -> Graphite parse, with the token kept as a column so the
-    sink can group egress per token (the per-connection Warp session
-    of the reference)."""
-    framed = strip_token_prefix(stream_socket_lines(spark, host, port))
-    return parse_graphite(
-        framed, parse_hierarchy=parse_hierarchy, keep_cols=("token",),
-    )
-
-
-def graphite_tcp_ingest_framed(
-    conn_lines: DataFrame,
-    parse_hierarchy: bool = True,
-) -> DataFrame:
-    """S3 head with exact per-connection framing parity (quirk A.6):
-    a (conn_id, line_seq, line) stream — a TCP front that tags each
-    line with its connection and sequence, e.g. a Kafka topic keyed by
-    connection — is length-framed with cross-batch state exactly like
-    catalyser/graphite.go:240-273, then Graphite-parsed. The plain
-    socket source (no connection identity) keeps the per-line
-    strip_token_prefix head in graphite_tcp_ingest."""
-    from catalyst_spark.streaming.stateful import stream_frame_connections
-
-    framed = stream_frame_connections(conn_lines)
-    return parse_graphite(
-        framed, parse_hierarchy=parse_hierarchy, keep_cols=("token",),
-    )
-
-
 def ingest_stream(lines: DataFrame, protocol: str, **parser_kwargs: Any) -> DataFrame:
     """lines/bodies stream -> canonical GTS stream (+ parse_error)."""
     try:
@@ -149,18 +93,16 @@ def ingest_stream(lines: DataFrame, protocol: str, **parser_kwargs: Any) -> Data
 
 def start_warp_forwarder(
     gts_stream: DataFrame,
-    sink: WarpHTTPSink | PerTokenWarpSink | None,
+    sink: WarpHTTPSink | None,
     checkpoint_dir: str,
     access_log=None,
     protocol: str = "",
 ):
     """GTS stream -> Sensision -> Warp POSTs (or console when sink is
-    None, K3). Bad rows are skipped permissively, mirroring the TCP path.
-    Failfast is not applied: a micro-batch carries no request boundary
-    to fail, so per-request failfast needs the request on the row.
-
-    A PerTokenWarpSink (S3 TCP egress) receives (token, sensision) rows
-    and posts one update sequence per token group.
+    None, K3). Bad rows are skipped permissively, as the store writer
+    skips them. Failfast is not applied: a micro-batch carries no request
+    boundary to fail, so per-request failfast needs the request on the
+    row.
 
     With an AccessLog (C7), each batch appends one audit row — txn,
     datapoints, parse errors, status, latency — mirroring the
@@ -172,23 +114,17 @@ def start_warp_forwarder(
     from catalyst_spark.control.metrics import observed
     from catalyst_spark.sinks.warp_sink import WarpSendError
 
-    per_token = isinstance(sink, PerTokenWarpSink)
-
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         obs = None
         if access_log is not None:
             batch_df, obs = observed(batch_df, f"access_{epoch_id}")
         clean = permissive(batch_df)
-        if per_token:
-            encoded = encode_sensision(clean, keep_cols=("token",))
-        else:
-            clean = clean.drop("token") if "token" in clean.columns else clean
-            encoded = clean if clean.columns == ["sensision"] else encode_sensision(clean)
+        encoded = clean if clean.columns == ["sensision"] else encode_sensision(clean)
         t0 = _time.perf_counter()
         status = 200
         try:
             if sink is None:
-                console_dry_run(encoded.drop("token") if per_token else encoded, epoch_id)
+                console_dry_run(encoded, epoch_id)
             else:
                 sink.foreach_batch(encoded, epoch_id)
         except WarpSendError as exc:

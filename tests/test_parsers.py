@@ -18,7 +18,6 @@ from catalyst_spark.parsers import (
     parse_prom_text,
     parse_remote_write,
     path_to_labels,
-    strip_token_prefix,
 )
 from catalyst_spark.parsers.wire import (
     decode_metric_families,
@@ -96,15 +95,6 @@ class TestGraphite:
         # Go strings.Split(v, "=")[1] -> 'a=b=c' keeps 'b'
         [r] = self.parse(spark, ["m;t=b=c 1 1546420308"], parse_hierarchy=False)
         assert r["labels"] == {"t": "b"}
-
-    def test_token_prefix(self, spark):
-        df = strip_token_prefix(
-            lines_df(spark, ["TOKEN@.tcp_metric 14.2 1546420308000", "no_token_line 1"])
-        )
-        rows = df.collect()
-        assert len(rows) == 1  # token-less lines counted & dropped (quirk A.6)
-        assert rows[0]["token"] == "TOKEN"
-        assert rows[0]["line"] == "tcp_metric 14.2 1546420308000"
 
 
 # ---------------------------------------------------------------------------
@@ -747,91 +737,6 @@ class TestRemoteWrite:
         df = spark.createDataFrame([Row(body=bytearray(b"\xff\xff\xff"))], "body binary")
         rows = rows_of(parse_remote_write(df))
         assert rows[0]["parse_error"] is not None
-
-
-class TestConnectionFraming:
-    """P7 exact parity: token length learned from the FIRST line of a
-    connection, every later line stripped by LENGTH (graphite.go:240-273).
-    The oracle below is a line-for-line Python rendering of the Go loop."""
-
-    @staticmethod
-    def _go_frame(lines):
-        out, has_token, token, tl = [], False, None, 0
-        for ln in lines:
-            ln = ln.strip()
-            if not has_token:
-                if "@." not in ln:
-                    return out  # connection aborted (Go: return)
-                tok = ln.split("@.", 1)[0]
-                if tok == "":
-                    return out
-                token, tl, has_token = tok, len(tok) + 2, True
-            if len(ln) <= tl:
-                continue  # quirk A.6: short line silently skipped
-            out.append((token, ln[tl:]))
-        return out
-
-    # conn A: quirky but reference-accepted traffic; conn B: aborted on
-    # its first line even though later lines carry a token; conn C: a
-    # different (shorter) token length
-    TRANSCRIPT = {
-        "A": [
-            "TOKEN@.app.cpu 1.5 1546420308",
-            "  TOKEN@.app.mem 2 1546420309  ",     # TrimSpace'd first
-            "X@.",                                  # len 3 <= 7: skipped
-            "TOKEN@.weird@.name 3 1546420310",      # payload contains @.
-            "ABCDE@.app.gpu 4 1546420311",          # wrong leading bytes:
-        ],                                          #   still length-stripped
-        "B": [
-            "no-token-here 5 1546420312",
-            "OTHER@.x 6 1546420313",                # never read: conn dead
-        ],
-        "C": [
-            "T2@.m 7 1546420314",
-        ],
-    }
-
-    def _expected(self):
-        return {
-            conn: self._go_frame(lines)
-            for conn, lines in self.TRANSCRIPT.items()
-        }
-
-    def test_batch_framing_matches_reference_loop(self, spark):
-        from catalyst_spark.parsers import frame_connection_lines
-
-        rows = [(c, i, ln) for c, lines in self.TRANSCRIPT.items()
-                for i, ln in enumerate(lines)]
-        df = spark.createDataFrame(
-            rows, "conn_id string, line_seq long, line string")
-        got = {}
-        for r in frame_connection_lines(df).collect():
-            got.setdefault(r["conn_id"], []).append(
-                (r["line_seq"], r["token"], r["line"]))
-        got = {c: [(t, l) for _s, t, l in sorted(v)] for c, v in got.items()}
-        want = {c: v for c, v in self._expected().items() if v}
-        assert got == want
-        # the divergence cases the per-line regex variant gets wrong:
-        assert ("TOKEN", "app.gpu 4 1546420311") in got["A"]  # by length
-        assert all(tok == "TOKEN" for tok, _ in got["A"])
-        assert "B" not in got
-
-    def test_framed_parse_end_to_end(self, spark):
-        from catalyst_spark.parsers import frame_connection_lines, parse_graphite
-
-        rows = [(c, i, ln) for c, lines in self.TRANSCRIPT.items()
-                for i, ln in enumerate(lines)]
-        df = spark.createDataFrame(
-            rows, "conn_id string, line_seq long, line string")
-        gts = parse_graphite(frame_connection_lines(df),
-                             parse_hierarchy=False,
-                             keep_cols=("token",)).collect()
-        by_name = {r["name"]: r for r in gts}
-        assert set(by_name) == {"app.cpu", "app.mem", "weird@.name", "app.gpu", "m"}
-        assert by_name["app.cpu"]["value_d"] == 1.5
-        assert by_name["app.gpu"]["value_l"] == 4
-        assert by_name["m"]["token"] == "T2"
-        assert by_name["app.mem"]["ts"] == 1546420309 * 1_000_000
 
 
 class TestBenchIngestCorpora:

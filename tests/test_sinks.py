@@ -1,4 +1,4 @@
-"""Warp sink (K1/K3/T12): chunking, headers, retry, auto-ban, and the
+"""Warp sink (K1/K3): headers, CRLF framing, retry, auto-ban, and the
 shape of driver-side egress."""
 
 from __future__ import annotations
@@ -6,22 +6,8 @@ from __future__ import annotations
 import pytest
 
 from catalyst_spark.control.auth import BanRegistry
-from catalyst_spark.sinks import WarpHTTPSink, chunk_payloads
+from catalyst_spark.sinks import WarpHTTPSink
 from catalyst_spark.sinks.warp_sink import WarpSendError
-
-
-def test_chunk_27():
-    lines = [f"l{i}" for i in range(60)]
-    chunks = list(chunk_payloads(lines))
-    assert len(chunks) == 3  # 27 + 27 + 6
-    assert chunks[0].count(b"\r\n") == 27
-    assert chunks[2].count(b"\r\n") == 6
-    assert chunks[0].startswith(b"l0\r\nl1\r\n")
-
-
-def test_chunk_preserves_existing_crlf():
-    chunks = list(chunk_payloads(["a\r\n", "b"]))
-    assert chunks == [b"a\r\nb\r\n"]
 
 
 class FakeTransport:
@@ -37,13 +23,16 @@ class FakeTransport:
         return resp
 
 
-def test_post_headers_and_payload():
+def sensision_df(spark, lines):
+    return spark.createDataFrame([(l,) for l in lines], "sensision string")
+
+
+def test_post_headers_and_payload(spark):
     t = FakeTransport([(200, "")])
     sink = WarpHTTPSink("http://w10:8080", "TOK", txn="abc", now_header="123",
                         transport=t)
-    n = sink.send_lines(["1// m{} 1", "2// m{} 2"])
-    assert n == 2
-    url, headers, body = t.calls[0]
+    sink.foreach_batch(sensision_df(spark, ["1// m{} 1", "2// m{} 2"]).coalesce(1), 0)
+    [(url, headers, body)] = t.calls
     assert url == "http://w10:8080/api/v0/update"
     assert headers["X-Warp10-Token"] == "TOK"
     assert headers["Content-Type"] == "text/plain"
@@ -52,37 +41,33 @@ def test_post_headers_and_payload():
     assert body == b"1// m{} 1\r\n2// m{} 2\r\n"
 
 
-def test_retry_once_on_connection_error():
+def test_retry_once_on_connection_error(spark):
     t = FakeTransport([ConnectionError("dial fail"), (200, "")])
     sink = WarpHTTPSink("http://w10", "TOK", transport=t)
-    sink.send_lines(["x"])
+    sink.foreach_batch(sensision_df(spark, ["x"]), 0)
     assert len(t.calls) == 2
     assert t.calls[0][2] == t.calls[1][2]  # full-body replay
 
 
-def test_error_classification_and_autoban():
+def test_error_classification_and_autoban(spark):
     reg = BanRegistry()
     t = FakeTransport([(500, "io.warp10.script.WarpScriptException: Token Expired")])
     sink = WarpHTTPSink("http://w10", "TOK", transport=t, ban_registry=reg)
     with pytest.raises(WarpSendError) as ei:
-        sink.send_lines(["x"])
+        sink.foreach_batch(sensision_df(spark, ["x"]), 0)
     assert ei.value.classified.error_type == "expired_token"
     assert ei.value.classified.http_status == 401
     assert reg.is_banned("TOK")
 
 
-def test_mads_not_banned():
+def test_mads_not_banned(spark):
     reg = BanRegistry()
     t = FakeTransport([(429, "would exceed the Monthly Active Data Streams limit (9). (Geo Time Series")])
     sink = WarpHTTPSink("http://w10", "TOK", transport=t, ban_registry=reg)
     with pytest.raises(WarpSendError) as ei:
-        sink.send_lines(["x"])
+        sink.foreach_batch(sensision_df(spark, ["x"]), 0)
     assert ei.value.classified.error_type == "mads_exceeded"
     assert not reg.is_banned("TOK")
-
-
-def sensision_df(spark, lines):
-    return spark.createDataFrame([(l,) for l in lines], "sensision string")
 
 
 def test_foreach_batch_error_and_ban_reach_the_driver(spark):
@@ -102,12 +87,22 @@ def test_foreach_batch_empty_posts_nothing(spark):
     assert t.calls == []
 
 
-def test_foreach_batch_body_matches_chunk_payloads(spark):
-    lines = [f"{i}// m{{}} {i}" + ("\r\n" if i % 2 else "") for i in range(40)]
-    t = FakeTransport([(200, "")] * 40)
+def posted_body(spark, lines):
+    t = FakeTransport([(200, "")] * len(lines))
     WarpHTTPSink("http://w10", "TOK", transport=t).foreach_batch(
         sensision_df(spark, lines), 0)
-    assert b"".join(body for _, _, body in t.calls) == b"".join(chunk_payloads(lines))
+    return b"".join(body for _, _, body in t.calls)
+
+
+def test_chunk_preserves_existing_crlf(spark):
+    assert posted_body(spark, ["a\r\n", "b"]) == b"a\r\nb\r\n"
+
+
+def test_foreach_batch_body_matches_chunk_payloads(spark):
+    """Every line ends with exactly one CRLF, whether or not it carried one."""
+    lines = [f"{i}// m{{}} {i}" + ("\r\n" if i % 2 else "") for i in range(40)]
+    assert posted_body(spark, lines) == b"".join(
+        b"%d// m{} %d\r\n" % (i, i) for i in range(40))
 
 
 def test_foreach_batch_one_post_per_arrow_batch(spark):

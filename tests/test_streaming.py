@@ -1,21 +1,19 @@
-"""Streaming ingestion end-to-end: file/socket sources -> parser -> sinks.
+"""Streaming ingestion end-to-end: file source -> parser -> sinks.
 
 Follows the guide pattern: a batch of files drives a streaming query
-to completion synchronously via processAllAvailable(); the TCP test
-runs a real local socket server feeding the socket source.
+to completion synchronously via processAllAvailable(); the HTTP test
+runs a real local server in place of Warp 10.
 """
 
 from __future__ import annotations
 
-import socket
-import threading
 import time
 
 import pytest
 
 from catalyst_spark.streaming import ingest_stream, start_store_writer, stream_lines
-from catalyst_spark.streaming.ingest import graphite_tcp_ingest, start_warp_forwarder
-from catalyst_spark.sinks import PerTokenWarpSink, WarpHTTPSink
+from catalyst_spark.streaming.ingest import start_warp_forwarder
+from catalyst_spark.sinks import WarpHTTPSink
 
 
 @pytest.fixture
@@ -75,6 +73,19 @@ def test_dry_run_console(spark, graphite_dir, tmp_path, capsys):
     assert "https_metric" in out
 
 
+def test_dry_run_ends_each_passthrough_line_with_crlf(spark, tmp_path, capsys):
+    """The dry run prints the bytes a POST body would carry: Warp
+    passthrough lines, which have no terminator of their own, each end
+    with one CRLF instead of running together."""
+    src = tmp_path / "in_dry_warp"; src.mkdir()
+    (src / "req1.txt").write_text("1// a{} 1\n2// b{} 2\n")
+    gts = ingest_stream(stream_lines(spark, str(src)), "warp")
+    q = start_warp_forwarder(gts, None, str(tmp_path / "ckpt_dry_warp"))
+    q.processAllAvailable()
+    q.stop()
+    assert "1// a{} 1\r\n2// b{} 2\r\n" in capsys.readouterr().out
+
+
 def test_unknown_protocol(spark, graphite_dir):
     with pytest.raises(ValueError):
         ingest_stream(stream_lines(spark, graphite_dir), "nope")
@@ -118,89 +129,6 @@ def test_access_log_audit_rows(spark, graphite_dir, tmp_path):
     ):
         time.sleep(0.2)
     assert any(p["input_rows"] > 0 for p in listener.rows)
-
-
-# ---------------------------------------------------------------------------
-# S3: real TCP socket -> token framing -> parse -> per-token egress
-# ---------------------------------------------------------------------------
-
-class LineServer:
-    """Minimal Graphite TCP stand-in: serves a fixed line payload to
-    every client that connects, then keeps the socket open (the Spark
-    socket source treats close as end-of-stream)."""
-
-    def __init__(self, lines):
-        self.payload = ("".join(l + "\n" for l in lines)).encode()
-        self.srv = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self.srv.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self.srv.bind(("127.0.0.1", 0))
-        self.srv.listen(1)
-        self.port = self.srv.getsockname()[1]
-        self._stop = threading.Event()
-        self._conns = []
-        self.thread = threading.Thread(target=self._serve, daemon=True)
-        self.thread.start()
-
-    def _serve(self):
-        self.srv.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self.srv.accept()
-            except socket.timeout:
-                continue
-            conn.sendall(self.payload)
-            self._conns.append(conn)  # keep open until stop()
-
-    def stop(self):
-        self._stop.set()
-        self.thread.join()
-        for c in self._conns:
-            c.close()
-        self.srv.close()
-
-
-def test_graphite_tcp_socket_end_to_end(spark, tmp_path):
-    server = LineServer([
-        "TOKA@.servers.db01.cpu;dc=gra 42 1546420308",
-        "TOKA@.servers.db02.cpu 7 1546420308",
-        "TOKB@.other.metric 1.5 1546420308",
-        "unframed_line_without_token 9 1546420308",
-    ])
-    out_file = tmp_path / "tcp_posts.txt"
-
-    class FileTransport:
-        def __init__(self, path):
-            self.path = str(path)
-
-        def __call__(self, url, headers, body):
-            with open(self.path, "ab") as f:
-                f.write(headers["X-Warp10-Token"].encode() + b">" + body)
-            return 200, ""
-
-    gts = graphite_tcp_ingest(spark, "127.0.0.1", server.port)
-    sink = PerTokenWarpSink("http://w10", transport=FileTransport(out_file))
-    q = start_warp_forwarder(gts, sink, str(tmp_path / "ckpt_tcp"))
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if out_file.exists() and b"TOKB>" in out_file.read_bytes():
-                break
-            time.sleep(0.3)
-    finally:
-        q.stop()
-        server.stop()
-
-    sent = out_file.read_bytes().decode()
-    # per-token egress: each POST carries its own token header
-    assert "TOKA>" in sent and "TOKB>" in sent
-    assert "servers.db01.cpu{0=servers,1=db01,2=cpu,dc=gra} 42\r\n" in sent
-    assert "other.metric{0=other,1=metric} 1.500000\r\n" in sent
-    # the unframed line is dropped by P7, not forwarded
-    assert "unframed_line_without_token" not in sent
-    # TOKB's line went out under TOKB's header, not TOKA's
-    toka_chunk = [c for c in sent.split("TOK") if c.startswith("A>")]
-    assert all("other.metric" not in c for c in toka_chunk)
 
 
 # ---------------------------------------------------------------------------
@@ -468,191 +396,13 @@ def test_out_of_range_influx_numbers_keep_the_query_running(spark, tmp_path):
         "Failed to parse datapoint"] * 5
 
 
-class TaggingTCPFront:
-    """A REAL multi-connection TCP ingress (VERDICT r6 item 8): any
-    number of clients connect to the ingress socket and send newline-
-    framed payloads; the front tags every received line with its
-    connection id and per-connection sequence — exactly what a
-    Kafka-keyed TCP front does — then re-serves the tagged stream on an
-    egress socket for Spark's socket source. Both hops are genuine TCP,
-    so this drives stream_frame_connections' per-connection state from
-    real sockets instead of rate-limited file/memory sources."""
-
-    def __init__(self, n_expected_lines):
-        self.ingress = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self.ingress.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self.ingress.bind(("127.0.0.1", 0))
-        self.ingress.listen(8)
-        self.ingress_port = self.ingress.getsockname()[1]
-        self.egress = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self.egress.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self.egress.bind(("127.0.0.1", 0))
-        self.egress.listen(1)
-        self.egress_port = self.egress.getsockname()[1]
-        self.tagged: list[str] = []
-        self.lock = threading.Lock()
-        self.all_received = threading.Event()
-        self.n_expected = n_expected_lines
-        self._stop = threading.Event()
-        self._conns = []
-        self._next_conn = [0]
-        threading.Thread(target=self._accept_loop, daemon=True).start()
-        threading.Thread(target=self._egress_loop, daemon=True).start()
-
-    def _accept_loop(self):
-        self.ingress.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self.ingress.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break  # stop() closed the listener mid-accept
-            with self.lock:
-                cid = self._next_conn[0]
-                self._next_conn[0] += 1
-            threading.Thread(
-                target=self._read_conn, args=(conn, cid), daemon=True
-            ).start()
-
-    def _read_conn(self, conn, cid):
-        buf, seq = b"", 0
-        with conn:
-            while True:
-                chunk = conn.recv(4096)
-                if not chunk:
-                    break
-                buf += chunk
-                while b"\n" in buf:
-                    raw, buf = buf.split(b"\n", 1)
-                    with self.lock:
-                        self.tagged.append(
-                            f"{cid}\t{seq}\t{raw.decode()}")
-                        seq += 1
-                        if len(self.tagged) >= self.n_expected:
-                            self.all_received.set()
-
-    def _egress_loop(self):
-        # serve the tagged buffer once every ingress line has arrived —
-        # a deterministic replay of the live multi-connection ingest
-        self.egress.settimeout(0.2)
-        while not self._stop.is_set():
-            try:
-                conn, _ = self.egress.accept()
-            except socket.timeout:
-                continue
-            except OSError:
-                break  # stop() closed the listener mid-accept
-            self.all_received.wait(timeout=30)
-            with self.lock:
-                payload = "".join(t + "\n" for t in self.tagged).encode()
-            conn.sendall(payload)
-            self._conns.append(conn)  # keep open: close = end-of-stream
-
-    def stop(self):
-        self._stop.set()
-        for c in self._conns:
-            c.close()
-        self.ingress.close()
-        self.egress.close()
-
-
-def test_graphite_tcp_framed_socket_end_to_end(spark, tmp_path):
-    """Real-socket drive of the exact per-connection framing path
-    (VERDICT r6 item 8): three genuine TCP client connections ->
-    TaggingTCPFront -> Spark socket source -> stream_frame_connections
-    (cross-batch token state per connection) -> Graphite parse ->
-    date-partitioned parquet store, with row-level asserts for every
-    reference framing quirk (graphite.go:240-273): token learned from
-    the first line, BLIND length-strip on later lines, short lines
-    skipped, a bad first line aborting its whole connection."""
-    from catalyst_spark.streaming.ingest import (
-        graphite_tcp_ingest_framed,
-        start_store_writer,
-        stream_socket_lines,
-    )
-
-    conn_payloads = [
-        # conn A: token TOKA (tokenLength 6); one normal line, one line
-        # whose first 6 bytes are NOT "TOKA@." (blind strip still takes
-        # 6 bytes), one short line (len <= 6, silently skipped)
-        ["TOKA@.servers.db01.cpu;dc=gra 42 1546420308",
-         "XXXXX@blind.strip.check 9 1546420308",
-         "abc"],
-        # conn B: its own token, isolated state
-        ["TOKB@.other.metric 1.5 1546420308"],
-        # conn C: bad first line (no "@.") aborts the connection; the
-        # valid-looking second line must never surface
-        ["no_token_here 5 1546420308",
-         "TOKC@.never.seen 1 1546420308"],
-    ]
-    n_lines = sum(len(p) for p in conn_payloads)
-    front = TaggingTCPFront(n_lines)
-
-    def send(lines):
-        with socket.create_connection(("127.0.0.1", front.ingress_port)) as s:
-            for ln in lines:
-                s.sendall((ln + "\n").encode())
-
-    clients = [threading.Thread(target=send, args=(p,))
-               for p in conn_payloads]
-    for t in clients:
-        t.start()
-    for t in clients:
-        t.join()
-
-    tagged = stream_socket_lines(
-        spark, "127.0.0.1", front.egress_port
-    ).selectExpr(
-        "split_part(line, '\t', 1) as conn_id",
-        "cast(split_part(line, '\t', 2) as long) as line_seq",
-        "split_part(line, '\t', 3) as line",
-    )
-    gts = graphite_tcp_ingest_framed(tagged)
-    store = tmp_path / "framed_store"
-    q = start_store_writer(gts, str(store), str(tmp_path / "ckpt_framed"))
-    try:
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            q.processAllAvailable()
-            if store.exists() and any(
-                p.suffix == ".parquet"
-                for p in store.rglob("*.parquet")
-            ):
-                got = spark.read.parquet(str(store))
-                if got.count() >= 3:
-                    break
-            time.sleep(0.3)
-    finally:
-        q.stop()
-        front.stop()
-
-    rows = {r["name"]: r for r in spark.read.parquet(str(store)).collect()}
-    # conn A: token learned once, hierarchy labels, long value
-    assert rows["servers.db01.cpu"]["token"] == "TOKA"
-    assert rows["servers.db01.cpu"]["value_l"] == 42
-    assert rows["servers.db01.cpu"]["labels"]["dc"] == "gra"
-    # conn A line 2: the strip is by LENGTH, not by pattern — the six
-    # bytes "XXXXX@" are gone even though they are not "TOKA@."
-    assert rows["blind.strip.check"]["token"] == "TOKA"
-    assert rows["blind.strip.check"]["value_l"] == 9
-    # conn B: isolated per-connection state, its own token
-    assert rows["other.metric"]["token"] == "TOKB"
-    assert rows["other.metric"]["value_d"] == 1.5
-    # conn A's short line and ALL of aborted conn C produced nothing
-    assert set(rows) == {"servers.db01.cpu", "blind.strip.check",
-                         "other.metric"}
-    # the store is date-partitioned (partition pruning at scale)
-    assert any(p.name.startswith("dt=") for p in store.iterdir())
-
-
 def test_http_ingest_end_to_end(spark):
-    """K1 driven over REAL HTTP (the HTTP mirror of the TCP socket
-    test): a live localhost http.server plays the Warp 10 backend; an
-    InfluxDB write goes parse_influx -> encode_sensision ->
-    WarpHTTPSink's driver-side POSTs (default urllib transport, one
-    CRLF-ended body per Arrow record batch), and the backend must
-    receive every line with the write token in X-Warp10-Token."""
+    """K1 driven over REAL HTTP: a live localhost http.server plays
+    the Warp 10 backend; an InfluxDB write goes parse_influx ->
+    encode_sensision -> WarpHTTPSink's driver-side POSTs (default urllib
+    transport, one CRLF-ended body per Arrow record batch), and the
+    backend must receive every line with the write token in
+    X-Warp10-Token."""
     import threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
